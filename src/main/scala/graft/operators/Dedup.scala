@@ -127,9 +127,9 @@ object Dedup {
       .filter(col("jac") >= 0.8)
 
   /** Fingerprint of a table file under `dir`: size + mtime of every data
-    * file. A rewritten corpus (the writeDocs overwrite pattern in tests,
-    * or any append) changes the fingerprint, so caches keyed on it can
-    * never serve stale results. */
+    * file, digested by [[listingDigest]]. A rewritten corpus (the
+    * writeDocs overwrite pattern in tests, or any append) changes the
+    * fingerprint, so caches keyed on it can never serve stale results. */
   private[operators] def fingerprint(dir: String, table: String): String = {
     // resolved through the Hadoop FileSystem, not java.nio: an
     // hdfs://-hosted or s3a://-hosted corpus must fingerprint its real
@@ -151,9 +151,19 @@ object Dedup {
       val files =
         if (st.isDirectory) walk(p)
         else Seq(s"${p.getName}:${st.getLen}:${st.getModificationTime}")
-      files.sorted.mkString("|").hashCode.toHexString
+      listingDigest(files)
     }
   }
+
+  /** SHA-256 hex digest of a file listing (`name:len:mtime` entries),
+    * order-independent. A 32-bit `String.hashCode` would let two
+    * listings collide (file names `Aa` and `BB` hash alike) and serve a
+    * fingerprint-keyed cache the other corpus's results. */
+  private[operators] def listingDigest(entries: Seq[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(entries.sorted.mkString("|")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
 
   /** LRU cache of persisted DataFrames keyed on (session, dir, corpus
     * fingerprint): a regenerated corpus invalidates the entry, and

@@ -157,6 +157,12 @@ object Pipeline {
     // lineage, so the three downstream actions (sketch build, anti-join
     // append, read-back) re-analyze a scan, not the full window+text
     // expression tree (~165 ms of Catalyst per action, ProfJobs gaps).
+    // Assumes local mode: the checkpointed blocks live in the executors'
+    // block managers, are freed only when the ContextCleaner collects
+    // the Dataset (no unpersist, also on exceptions), and the truncated
+    // lineage cannot recompute a lost block — an executor loss fails the
+    // entry instead of retrying it. A cluster deployment would need a
+    // reliable checkpoint (checkpoint dir) here.
     val batchCur = curate(docs.filter(isBatch))
       .withColumn("fp", md5(col("text").cast("binary")))
       .localCheckpoint(true)

@@ -60,7 +60,15 @@ object Similarity {
     * partition-count-invariant, so results are untouched (oracle-
     * verified per entry). Index BUILDS stay on the caller's session —
     * they are table-sized and want AQE. Cached per parent session so
-    * Tables.load's per-session schema cache keeps working. */
+    * Tables.load's per-session schema cache keeps working.
+    *
+    * The four RAW entry points — [[probeIvfRaw]], [[probeIvfInt8Raw]],
+    * [[probeIvfPqRaw]], [[probeIvfBinRaw]], which back the
+    * `CALL graft.system.ann_probe*` procedures — run here too: they
+    * re-wrap the caller's query frame and `filterIds` onto this session
+    * ([[onProbeSession]]), so a probe issued from an AQE-on caller plans
+    * exactly like s7/s9/s17/s22. The returned frame belongs to this
+    * session; its actions run with AQE off. */
   // WEAK keys (ADVICE r17): a long-lived process creating and stopping
   // many sessions must not accumulate SessionState/clone pairs forever —
   // when the parent session becomes unreachable its clone entry is
@@ -69,7 +77,7 @@ object Similarity {
   private val probeSessions =
     new java.util.WeakHashMap[SparkSession, SparkSession]()
 
-  private def probeSession(s: SparkSession): SparkSession =
+  private[operators] def probeSession(s: SparkSession): SparkSession =
     probeSessions.synchronized {
       var s2 = probeSessions.get(s)
       if (s2 == null) {
@@ -504,26 +512,39 @@ object Similarity {
         col("nrm"), col("tok"))
   }
 
+  /** The shared body of the four `*Raw` entry points: re-wrap the
+    * caller's raw query rows and `filterIds` onto [[probeSession]],
+    * normalize the queries there, and hand both to `probe`. */
+  private def onProbeSession(s: SparkSession, rawQueries: DataFrame,
+      filterIds: Option[DataFrame])(
+      probe: (SparkSession, DataFrame, Option[DataFrame]) => DataFrame)
+      : DataFrame = {
+    val s2 = probeSession(s)
+    probe(s2,
+      normalizeQueryFrame(org.apache.spark.sql.graft.Bridge.onSession(s2, rawQueries)),
+      filterIds.map(org.apache.spark.sql.graft.Bridge.onSession(s2, _)))
+  }
+
   /** [[probeIvf]] over RAW `(vec_id, embedding)` query rows — the shape
     * a stored query table has. Shared with the SQL CALL surface
-    * (`CALL graft.system.ann_probe`). */
+    * (`CALL graft.system.ann_probe`). Runs on [[probeSession]]. */
   def probeIvfRaw(s: SparkSession, root: String, rawQueries: DataFrame,
       filterIds: Option[DataFrame] = None, nprobe: Int = 1): DataFrame =
-    probeIvf(s, root, normalizeQueryFrame(rawQueries), filterIds, nprobe)
+    onProbeSession(s, rawQueries, filterIds)(probeIvf(_, root, _, _, nprobe))
 
   /** [[probeIvfInt8]] over RAW `(vec_id, embedding)` query rows — the
     * int8 sibling of [[probeIvfRaw]], shared with the SQL CALL surface
-    * (`CALL graft.system.ann_probe_int8`). */
+    * (`CALL graft.system.ann_probe_int8`). Runs on [[probeSession]]. */
   def probeIvfInt8Raw(s: SparkSession, root: String, rawQueries: DataFrame,
       filterIds: Option[DataFrame] = None, nprobe: Int = 1): DataFrame =
-    probeIvfInt8(s, root, normalizeQueryFrame(rawQueries), filterIds, nprobe)
+    onProbeSession(s, rawQueries, filterIds)(probeIvfInt8(_, root, _, _, nprobe))
 
   /** [[probeIvfPq]] over RAW `(vec_id, embedding)` query rows — the PQ
     * sibling of [[probeIvfRaw]], shared with the SQL CALL surface
-    * (`CALL graft.system.ann_probe_pq`). */
+    * (`CALL graft.system.ann_probe_pq`). Runs on [[probeSession]]. */
   def probeIvfPqRaw(s: SparkSession, root: String, rawQueries: DataFrame,
       filterIds: Option[DataFrame] = None, nprobe: Int = 1): DataFrame =
-    probeIvfPq(s, root, normalizeQueryFrame(rawQueries), filterIds, nprobe)
+    onProbeSession(s, rawQueries, filterIds)(probeIvfPq(_, root, _, _, nprobe))
 
   /** Nearest-committed-centroid assignment of a bounded QUERY batch:
     * (q_id, qv, qn, alabel) — the shared first step of the s7 and s9
@@ -2304,11 +2325,25 @@ object Similarity {
 
   /** Score one bounded query batch — (q_id, qv: array<double>, qn) —
     * against the persisted IVF-PQ index (fully index-served: committed
-    * centroids, committed codebook). Both collects are bounded by
-    * construction: probed labels (one per query) and re-rank candidates
-    * (PqRerank per query). Shared by [[s9AnnIvfPq]] and the continuous
-    * twin ([[graft.streaming.AnnStream.startPq]]), so the two are the
-    * same operator by construction.
+    * centroids, committed codebook). Shared by [[s9AnnIvfPq]], s14, the
+    * continuous twin ([[graft.streaming.AnnStream.startPq]]) and
+    * [[probeIvfPqRaw]], so they are the same operator by construction.
+    *
+    * Once-run steps: every intermediate is bounded by construction, so
+    * each is computed by ONE action and handed on as a local relation
+    * (its rows are on the driver anyway) instead of being re-planned
+    * and re-run inside every later plan that references it:
+    *  1. the queries — ≤ batch size rows;
+    *  2. `assigned`, the nearest-list assignment — ≤ nprobe rows per
+    *     query; the probed labels are read from these rows;
+    *  3. `qtab`, the ADC table — PqM × PqK rows per query;
+    *  4. `cand`, the ADC shortlist — ≤ [[PqRerank]] rows per query; the
+    *     re-rank's candidate ids are read from these rows.
+    * The returned frame is the exact re-rank over the candidates'
+    * posting point lookups. The arithmetic, windows and tie-breaks are
+    * those of the plan without the steps, so results are bit-identical;
+    * without them `assigned` would run three times and the whole ADC
+    * plan (codes scan, posexplode, join, aggregate, window) twice.
     *
     * `filterIds` (one `id` column) scopes the search to a metadata
     * id-universe, as in [[probeIvf]]: the semi join lands on the CODES
@@ -2323,9 +2358,10 @@ object Similarity {
     val postT = graft.storage.GraftTable.open(s, s"$root/postings")
     val codesT = graft.storage.GraftTable.open(s, s"$root/codes")
     val cent = graft.storage.GraftTable.open(s, s"$root/centroids").read()
-    val assigned = assignQueryBatch(q, cent, nprobe)
-    // bounded collect: ≤ nprobe probed lists per query
-    val probes = assigned.select("alabel").distinct().collect().map(_.get(0))
+    val (queries, _) = runOnce(s, q.select(col("q_id"), col("qv"), col("qn")))
+    val (assigned, assignedRows) =
+      runOnce(s, assignQueryBatch(queries, cent, nprobe))
+    val probes = assignedRows.map(_.getAs[Any]("alabel")).distinct
     def empty = s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       annResultSchema(q, cent, postT))
@@ -2340,10 +2376,10 @@ object Similarity {
     val codes = filterIds.fold(codeScan)(f =>
       codeScan.join(f.select(col("id")), col("vec_id") === col("id"), "left_semi"))
     // the COMMITTED codebook: probes are fully index-served, no retrain
-    val qtab = pqQueryTable(q,
-      graft.storage.GraftTable.open(s, s"$root/codebook").read())
+    val (qtab, _) = runOnce(s, pqQueryTable(queries,
+      graft.storage.GraftTable.open(s, s"$root/codebook").read()))
     val wCand = Window.partitionBy("q_id").orderBy(col("pqd"), col("vec_id"))
-    val cand = codes
+    val (cand, candRows) = runOnce(s, codes
       .join(broadcast(assigned.select(col("q_id").as("a_qid"), col("alabel"))),
         col("label") === col("alabel"))
       .select(col("a_qid"), col("vec_id"),
@@ -2354,25 +2390,34 @@ object Similarity {
       .groupBy("q_id", "vec_id").agg(sum("pdq").as("pqd"))
       .withColumn("crn", row_number().over(wCand))
       .filter(col("crn") <= PqRerank)
-      .select(col("q_id").as("c_qid"), col("vec_id").as("c_vid"))
-    // bounded collect: PqRerank candidates per query — the exact-vector
-    // fetch is a point lookup, so push the id set into the posting scan
-    // (row-group stats skip) instead of streaming the probed lists again
-    val candIds = cand.select("c_vid").distinct().collect().map(_.get(0))
+      .select(col("q_id").as("c_qid"), col("vec_id").as("c_vid")))
+    // the exact-vector fetch is a point lookup, so push the id set into
+    // the posting scan (row-group stats skip) instead of streaming the
+    // probed lists again
+    val candIds = candRows.map(_.getAs[Any]("c_vid")).distinct
     if (candIds.isEmpty) return empty
     val post =
       postT.readPruned(Seq(org.apache.spark.sql.sources.In("label", probes)))
         .filter(col("vec_id").isInCollection(candIds))
     val wRank = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
     post.join(broadcast(cand), col("vec_id") === col("c_vid"))
-      .join(broadcast(q.select(col("q_id"), col("qv"), col("qn"))),
-        col("q_id") === col("c_qid"))
+      .join(broadcast(queries), col("q_id") === col("c_qid"))
       .select(col("q_id"), col("label"), col("vec_id"),
         cosine(col("qv"), col("v"), col("qn"), col("nrm")).as("cos"))
       .withColumn("rank", row_number().over(wRank).cast("long"))
       .filter(col("rank") <= IvfTopK)
       .select(col("q_id"), col("label"), col("vec_id"),
         round(col("cos"), 4).as("cos"), col("rank"))
+  }
+
+  /** One action over a BOUNDED frame: its rows, and the same rows as a
+    * local relation of `s` for the plans that consume them, so no
+    * consumer recomputes them. Only for frames whose size is bounded by
+    * the query batch. */
+  private def runOnce(s: SparkSession,
+      df: DataFrame): (DataFrame, Array[org.apache.spark.sql.Row]) = {
+    val rows = df.collect()
+    (s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), rows)
   }
 
   /** s6: RANGE search — every vector within a cosine radius of each
@@ -3372,10 +3417,11 @@ object Similarity {
 
   /** [[probeIvfBin]] over RAW `(vec_id, embedding)` query rows — the
     * binary sibling of [[probeIvfRaw]], shared with the SQL CALL
-    * surface (`CALL graft.system.ann_probe_bin`). */
+    * surface (`CALL graft.system.ann_probe_bin`). Runs on
+    * [[probeSession]]. */
   def probeIvfBinRaw(s: SparkSession, root: String, rawQueries: DataFrame,
       filterIds: Option[DataFrame] = None, nprobe: Int = 1): DataFrame =
-    probeIvfBin(s, root, normalizeQueryFrame(rawQueries), filterIds, nprobe)
+    onProbeSession(s, rawQueries, filterIds)(probeIvfBin(_, root, _, _, nprobe))
 
   /** s22: ANN served from the persisted BINARY index — committed
     * centroids, committed sign words, XOR+popcount shortlist over the

@@ -228,6 +228,71 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
+  // -- the raw PQ probe (bench op, CALL ann_probe_pq) -------------------
+
+  private def rawQueries(s: org.apache.spark.sql.SparkSession) =
+    s.read.parquet(s"$dir/embeddings.parquet")
+      .filter(col("vec_id") < 5).select(col("vec_id"), col("embedding"))
+
+  private def enIds(s: org.apache.spark.sql.SparkSession) =
+    Tables.load(s, dir, "documents").filter(col("lang") === "en")
+      .select(col("doc_id").cast("long").as("id"))
+
+  test("raw PQ probe from an AQE-on caller returns exactly probeIvfPq's rows on the probe session") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true",
+      "the caller must run with AQE on, or this pins nothing")
+    val root = Similarity.ivfPqIndexDir(spark, dir)
+    val s2 = Similarity.probeSession(spark)
+    for (nprobe <- Seq(1, 2); filtered <- Seq(false, true)) {
+      val out = Similarity.probeIvfPqRaw(spark, root, rawQueries(spark),
+        if (filtered) Some(enIds(spark)) else None, nprobe)
+      assert(out.sparkSession.conf.get("spark.sql.adaptive.enabled") === "false",
+        "the raw probe must plan on the AQE-off probe session")
+      val got = out.orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
+      val want = Similarity.probeIvfPq(s2, root,
+        Similarity.normalizeQueryFrame(rawQueries(s2)),
+        if (filtered) Some(enIds(s2)) else None, nprobe)
+        .orderBy("q_id", "rank").collect().map(_.toSeq).toSeq
+      assert(got.nonEmpty, s"nprobe=$nprobe filtered=$filtered returned nothing")
+      assert(got === want, s"nprobe=$nprobe filtered=$filtered")
+    }
+  }
+
+  test("raw PQ probe runs each bounded intermediate once: job count pinned") {
+    val root = Similarity.ivfPqIndexDir(spark, dir)
+    val sc = spark.sparkContext
+    def jobsOf(body: => Unit): Int = {
+      val group = s"pq-jobs-${java.util.UUID.randomUUID()}"
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            n.incrementAndGet()
+      }
+      sc.addSparkListener(l)
+      try {
+        sc.setJobGroup(group, "probeIvfPqRaw job-count pin")
+        try body finally sc.clearJobGroup()
+        org.apache.spark.graft.ListenerBus.drain(sc)
+      } finally sc.removeSparkListener(l)
+      n.get()
+    }
+    for (nprobe <- Seq(1, 2); filtered <- Seq(false, true)) {
+      def probe() = Similarity.probeIvfPqRaw(spark, root, rawQueries(spark),
+        if (filtered) Some(enIds(spark)) else None, nprobe).collect()
+      probe() // first call opens the index tables
+      val jobs = jobsOf { probe(); () }
+      // one job per once-run step and per broadcast, plus the parquet
+      // read's schema job; the filtered probe adds the filter side's
+      // broadcast. A probe that re-runs an intermediate inside a later
+      // plan runs about twice as many jobs and fails this pin.
+      val pin = if (filtered) 13 else 12
+      assert(jobs <= pin,
+        s"nprobe=$nprobe filtered=$filtered ran $jobs jobs (pin $pin)")
+    }
+  }
+
   test("incremental IVF-PQ append: codes + vectors land in the assigned list, no rewrite, probe finds them") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -252,6 +252,10 @@ class PipelineOpsSpec extends SparkSpec {
     // root this call created).
     val created = (p3StoreDirs().toSet -- before).toSeq
     assert(created.nonEmpty, "the entry must create its store under the scratch root")
+    // the rebalance hint sizes files only under AQE; without it the
+    // hint is a plain shuffle at spark.sql.shuffle.partitions
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true",
+      "spark.sql.adaptive.enabled must be true: it is the precondition of the rebalance file-count pin below")
     created.foreach { loc =>
       val st = graft.storage.GraftTable.open(spark, loc)
       assert(st.committedFiles.size <= 4,
