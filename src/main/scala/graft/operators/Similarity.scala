@@ -47,7 +47,7 @@ object Similarity {
   /** Session clone for the PERSISTED-index probe pipelines
     * (optimization round 17, guide §5 driver / §2.2 partitioning):
     * a probe's data volume is bounded BY CONSTRUCTION — ≤ nprobe lists'
-    * files scanned, ≤ PqRerank candidates per query — so AQE's per-stage
+    * files scanned, ≤ Rerank candidates per query — so AQE's per-stage
     * materialization (each shuffle becomes its own job + driver round
     * trip; s9 ran 25 jobs for 3 actions) buys nothing and its
     * coalescing has nothing to coalesce. With AQE off the probe is one
@@ -375,10 +375,7 @@ object Similarity {
   def s7AnnPersisted(s: SparkSession, dir: String): DataFrame = {
     val root = ivfIndexDir(s, dir) // build on the caller's session
     val s2 = probeSession(s)
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    probeIvf(s2, root, q).orderBy("q_id", "rank")
+    probeIvf(s2, root, indexQueries(s2, root)).orderBy("q_id", "rank")
   }
 
   /** s20's probe width — 3 of the index's ~10 lists: wide enough that
@@ -398,10 +395,8 @@ object Similarity {
   def s20MultiprobeIvf(s: SparkSession, dir: String): DataFrame = {
     val root = ivfIndexDir(s, dir)
     val s2 = probeSession(s)
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    probeIvf(s2, root, q, nprobe = MultiProbe).orderBy("q_id", "rank")
+    probeIvf(s2, root, indexQueries(s2, root), nprobe = MultiProbe)
+      .orderBy("q_id", "rank")
   }
 
   /** Score one bounded query batch — (q_id, qv: array<double>, qn) —
@@ -545,6 +540,24 @@ object Similarity {
   def probeIvfPqRaw(s: SparkSession, root: String, rawQueries: DataFrame,
       filterIds: Option[DataFrame] = None, nprobe: Int = 1): DataFrame =
     onProbeSession(s, rawQueries, filterIds)(probeIvfPq(_, root, _, _, nprobe))
+
+  /** The `CALL ann_probe[_<rung>]` surface: refuse an index root
+    * (named `index` in the message) that lacks the quantized `rung`'s
+    * tables; "fp64" needs none beyond postings. */
+  private[graft] def requireProbeRung(root: String, rung: String,
+      index: String): Unit =
+    if (rung != "fp64") rungNamed(rung).probeRefusals.foreach { case (ts, msg) =>
+      require(ts.forall(t => graft.storage.GraftTable.exists(s"$root/$t")),
+        s"index $index $msg")
+    }
+
+  /** The raw probe of `rung` — [[probeIvfRaw]] for "fp64", else the
+    * named quantized rung's — behind `CALL ann_probe[_<rung>]`. */
+  private[graft] def probeRungRaw(s: SparkSession, root: String, rung: String,
+      rawQueries: DataFrame, nprobe: Int): DataFrame =
+    if (rung == "fp64") probeIvfRaw(s, root, rawQueries, nprobe = nprobe)
+    else onProbeSession(s, rawQueries, None)(
+      probeRung(_, root, rungNamed(rung), _, _, nprobe))
 
   /** Nearest-committed-centroid assignment of a bounded QUERY batch:
     * (q_id, qv, qn, alabel) — the shared first step of the s7 and s9
@@ -860,15 +873,164 @@ object Similarity {
       .orderBy("q_id", "rank")
   }
 
-  // -- s9: the composed IVF+PQ index ------------------------------------
+  // -- the quantized rungs of a persisted index (s9, s17, s22) ----------
 
-  /** ADC candidates re-ranked exactly: deep enough that recall losses
-    * from the 8-byte quantization are visible in the spec, shallow
-    * enough that the exact-vector fetch stays a bounded point lookup. */
-  private val PqRerank = 20
+  /** Shortlist depth of every quantized rung's exact re-rank (and of
+    * s18's in-memory one): deep enough that quantization recall losses
+    * are visible in the specs, shallow enough that the exact-vector
+    * fetch stays a bounded point lookup. */
+  private val Rerank = 20
 
-  private val IvfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  /** A rung's optional committed parameter table and how it is trained
+    * from the root's postings `(label, vec_id, v, nrm)`. */
+  private final case class RungParam(table: String,
+      train: DataFrame => DataFrame)
+
+  /** One quantized rung of a persisted IVF index: a compressed sibling
+    * of `postings`, clustered per list like it, that a probe scans
+    * zone-map-pruned to the probed lists for a shortlist, then re-ranks
+    * exactly from postings.
+    *  - `table`/`codeCol`: the code table and its code column;
+    *  - `param`: the committed parameter table, if any — probes and
+    *    appends encode against it and never retrain;
+    *  - `encode`: assigned `(label, vec_id, v, nrm)` rows + parameter
+    *    rows → `(label, vec_id, <codeCol>)`;
+    *  - `queryTable`: the bounded query-side table for `(q_id, qv, qn)`
+    *    queries + parameter rows;
+    *  - `scored`: `(a_qid, vec_id, <codeCol>)` candidates + the query
+    *    table → `(q_id, vec_id, score)`, shortlisted by `score`
+    *    (descending if `descending`) then `vec_id`;
+    *  - the rest is wording: the audit's code noun and entry tag, the
+    *    rung's noun, the append refusal, and the
+    *    `CALL ann_probe_<name>` refusals (tables that must exist →
+    *    message). */
+  private final case class Rung(name: String, table: String,
+      codeCol: String, param: Option[RungParam],
+      encode: (DataFrame, Option[DataFrame]) => DataFrame,
+      queryTable: (DataFrame, Option[DataFrame]) => DataFrame,
+      scored: (DataFrame, DataFrame) => DataFrame,
+      descending: Boolean,
+      auditNoun: String, auditTag: String, noun: String,
+      appendRefusal: String, probeRefusals: Seq[(Seq[String], String)])
+
+  /** s9's rung: PqM one-byte codes per vector (~1/32 of the postings'
+    * bytes), ADC-scored against the committed codebook. */
+  private val PqRung = Rung("pq", "codes", "codes",
+    Some(RungParam("codebook",
+      post => pqCodebookFrom(post.select(col("vec_id"), col("v"))))),
+    encode = (a, cb) => a.select(col("label"), col("vec_id"))
+      .join(encodeCodes(a.select(col("vec_id"), col("v")), cb.get), "vec_id")
+      .select(col("label"), col("vec_id"), col("codes")),
+    queryTable = (q, cb) => pqQueryTable(q, cb.get),
+    scored = (c, qtab) => c
+      .select(col("a_qid"), col("vec_id"),
+        posexplode(col("codes")).as(Seq("m", "code")))
+      .join(broadcast(qtab),
+        col("a_qid") === col("q_id") && col("m") === col("qm") &&
+          col("code") === col("qcid") && col("vec_id") =!= col("q_id"))
+      .groupBy("q_id", "vec_id").agg(sum("pdq").as("score")),
+    descending = false, auditNoun = "code", auditTag = "s9", noun = "IVF-PQ",
+    appendRefusal = "PQ codebook — use appendToIvfIndex or build via ivfPqIndexDir",
+    probeRefusals = Seq(Seq("codes", "codebook") ->
+      "has no PQ codes/codebook (build via ivfPqIndexDir)"))
+
+  /** s17's rung: int8 code arrays against the committed corpus scale,
+    * shortlisted by their BIGINT dot with the query's codes. */
+  private val Int8Rung = Rung("int8", "codes_i8", "code",
+    Some(RungParam("i8meta", post => int8ScaleFrame(int8Unit(post)))),
+    encode = (a, scale) => int8EncodeAssigned(a, scale.get),
+    // (x/qn)/scale, the same association as the build's u/scale
+    queryTable = (q, scale) => q.crossJoin(broadcast(scale.get))
+      .select(col("q_id"), transform(col("qv"),
+        x => floor(x / col("qn") / col("scale") + lit(0.5)).cast("long")).as("qc")),
+    scored = pairScored(_, _, aggregate(
+      zip_with(col("qc"), col("code"), (a, b) => a * b), lit(0L),
+      (acc, x) => acc + x)),
+    descending = true, auditNoun = "int8 code", auditTag = "s17", noun = "int8",
+    appendRefusal = "committed int8 scale — build via int8IndexDir",
+    probeRefusals = Seq(
+      Seq("codes_i8") -> "has no int8 codes (build via int8IndexDir)",
+      Seq("i8meta") -> ("has int8 codes but no committed scale (i8meta) — " +
+        "clone the pair together or rebuild via int8IndexDir")))
+
+  /** s22's rung: packed sign words, parameterless, shortlisted by
+    * Hamming distance (Σ bit_count(xor) over the word pairs). */
+  private val BinRung = Rung("bin", "codes_bin", "code", None,
+    encode = (a, _) => binEncodeAssigned(a),
+    queryTable = (q, _) => q.select(col("q_id"), signWords("qv").as("qc")),
+    scored = pairScored(_, _, aggregate(
+      zip_with(col("qc"), col("code"),
+        (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")), lit(0L),
+      (acc, x) => acc + x)),
+    descending = false, auditNoun = "sign-code", auditTag = "s22", noun = "binary",
+    appendRefusal = "committed sign codes — build via binIndexDir",
+    probeRefusals = Seq(
+      Seq("codes_bin") -> "has no sign codes (build via binIndexDir)"))
+
+  /** THE rung table: every verb over an index root — probe, append,
+    * erase, audit, repair, relabel, build, stats, the CALL surface —
+    * walks this list, so a rung is defined here and only here. */
+  private val Rungs = Seq(PqRung, Int8Rung, BinRung)
+
+  /** The quantized rung names, in table order (`pq`, `int8`, `bin`). */
+  private[graft] val RungNames: Seq[String] = Rungs.map(_.name)
+
+  private def rungNamed(name: String): Rung =
+    Rungs.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+      s"unknown quantization rung '$name' — expected pq, int8, or bin"))
+
+  /** The rung's committed parameter rows at `root`, if it has any. */
+  private def paramOf(s: SparkSession, root: String, r: Rung): Option[DataFrame] =
+    r.param.map(p => graft.storage.GraftTable.open(s, s"$root/${p.table}").read())
+
+  /** `scored` of a rung whose query table is one row per query: join
+    * each candidate to its query's row and score the pair. */
+  private def pairScored(cand: DataFrame, qtab: DataFrame,
+      score: Column): DataFrame =
+    cand.join(broadcast(qtab),
+        col("a_qid") === col("q_id") && col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"), score.as("score"))
+
+  /** Commit rung `r` on `root` from the root's own committed postings:
+    * the parameter table first (trained from postings; one file — a
+    * codebook or scale is KBs at any corpus scale, and a probe reads
+    * all of it), then the code table encoded against the COMMITTED
+    * parameters, range-partitioned + `sort_by label` so a probe's label
+    * filter zone-map-prunes to the probed lists' code files. A
+    * parameter table without codes is a failed earlier build's residue
+    * and is dropped first. Returns code rows committed. */
+  private def commitRung(s: SparkSession, root: String, r: Rung): Long = {
+    import graft.storage.{GraftTable, GraftTableOptions}
+    val post = GraftTable.open(s, s"$root/postings").read()
+    r.param.foreach { p =>
+      GraftTable.drop(s"$root/${p.table}")
+      val df = p.train(post).coalesce(1)
+      GraftTable.create(s, s"$root/${p.table}", df.schema).append(df)
+    }
+    val nLists = GraftTable.open(s, s"$root/centroids")
+      .rowCountFromMetadata().toInt.max(1)
+    val staged = r.encode(post, paramOf(s, root, r))
+      .repartitionByRange(nLists, col("label"))
+      .select(col("label"), col("vec_id"), col(r.codeCol))
+    GraftTable.create(s, s"$root/${r.table}", staged.schema,
+      GraftTableOptions(sortBy = Seq("label"))).append(staged)
+  }
+
+  private val RungIndexCache = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), String]()
+
+  /** Build once per (session, input, rung): [[ivfIndexDir]]'s shared
+    * root plus rung `r` ([[commitRung]], the body of
+    * [[quantizeIndex]]). Retry-safe: the code table of a failed earlier
+    * build is dropped first. Same memoization contract as
+    * [[ivfIndexDir]]: never rebuild the shared root in place. */
+  private def rungIndexDir(s: SparkSession, dir: String, r: Rung): String =
+    RungIndexCache.computeIfAbsent((s, dir, r.name), { _ =>
+      val root = ivfIndexDir(s, dir)
+      graft.storage.GraftTable.drop(s"$root/${r.table}")
+      commitRung(s, root, r)
+      root
+    })
 
   /** The production 100 TB ANN shape (VERDICT r9 #3): s7's persisted IVF
     * index COMPOSED with s5's product quantization. On top of s7's
@@ -882,43 +1044,10 @@ object Similarity {
     *    vector instead of PqSub·PqM doubles (~1/32 of the bytes).
     * Probe cost at scale: centroid scan (tiny, broadcast) + ADC over
     * ~1/nlist of the CODES bytes + an exact re-rank that fetches only
-    * top-[[PqRerank]] full vectors per query via a pushed-down id filter
+    * top-[[Rerank]] full vectors per query via a pushed-down id filter
     * over the probed lists' posting files. */
   private[graft] def ivfPqIndexDir(s: SparkSession, dir: String): String =
-    IvfPqCache.computeIfAbsent((s, dir), { _ =>
-      val root = ivfIndexDir(s, dir)
-      // retry-safe: a PARTIALLY-failed earlier build (codebook created,
-      // codes stage threw) left tables on disk but nothing in the cache;
-      // GraftTable.create requires non-existence, so drop the partial
-      // artifacts first or every retry wedges on "table already exists".
-      // drop() is a no-op on a missing path; a REAL deletion failure
-      // must propagate (swallowing it would just resurface as a
-      // misleading "already exists" from the create below)
-      Seq("codebook", "codes").foreach(t =>
-        graft.storage.GraftTable.drop(s"$root/$t"))
-      val cbDf = pqCodebook(s, dir)
-      val cbT = graft.storage.GraftTable.create(s, s"$root/codebook", cbDf.schema)
-      // one file: a PQ codebook is M·2^bits rows (~KBs) at ANY corpus
-      // scale — like the centroids table, its right layout is a single
-      // file (guide §6 output sizing). Written at the session's shuffle
-      // width it landed as 32 near-empty files, and EVERY probe's
-      // codebook read paid a 32-task scan to broadcast a few KB
-      // (optimization round 18; the exchange moves ~hundreds of rows).
-      cbT.append(cbDf.repartition(1))
-      val nLists = graft.storage.GraftTable.open(s, s"$root/centroids")
-        .rowCountFromMetadata().toInt.max(1)
-      // (label, vec_id, codes): one row per vector, codes ordered by
-      // subspace. array_sort on struct(m, code) makes the array order
-      // deterministic under any shuffle.
-      val codesDf = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("label"))
-        .join(encodeCodes(pqCorpus(s, dir), cbDf), "vec_id")
-        .select(col("label"), col("vec_id"), col("codes"))
-        .repartitionByRange(nLists, col("label"))
-      val codesT = graft.storage.GraftTable.create(s, s"$root/codes", codesDf.schema,
-        graft.storage.GraftTableOptions(sortBy = Seq("label")))
-      codesT.append(codesDf)
-      root
-    })
+    rungIndexDir(s, dir, PqRung)
 
   /** Encode `(vec_id, v)` rows into per-vector PQ code ARRAYS against a
     * codebook: (vec_id, codes) with codes ordered by subspace
@@ -943,10 +1072,10 @@ object Similarity {
     * contract), so at 100 TB index growth costs ∝ new vectors, not
     * corpus size. Input: (vec_id, embedding). Returns rows appended.
     *
-    * On a root that also carries the int8 `codes_i8` table, that
-    * sibling is appended in the same call ([[appendAssignedToIndex]])
-    * so neither index desyncs because the caller picked this entry
-    * point over [[appendToInt8Index]].
+    * On a root that also carries other rungs, those siblings are
+    * appended in the same call ([[appendAssignedToIndex]]) so no index
+    * desyncs because the caller picked this entry point over
+    * [[appendToInt8Index]] or [[appendToBinIndex]].
     *
     * Failure contract: the commits are independent (there is no
     * cross-table transaction), CODES FIRST — a failure between them
@@ -969,58 +1098,52 @@ object Similarity {
     * between the two commits) fails the job loudly instead — and a
     * loud failure is exactly what [[verifyIvfPqIndex]]/
     * [[repairIvfPqIndex]] exist to mop up. */
-  def appendToIvfPqIndex(s: SparkSession, root: String, vectors: DataFrame): Long = {
-    require(graft.storage.GraftTable.exists(s"$root/codebook"),
-      s"index at $root has no PQ codebook — use appendToIvfIndex or build via ivfPqIndexDir")
-    // NOTE on lifetime: localCheckpoint blocks live OUTSIDE the cache
-    // manager (Dataset.unpersist would be a silent no-op on them) and
-    // are reclaimed by the ContextCleaner once the checkpointed RDD is
-    // garbage-collected — bounded here because the assigned batch is an
-    // increment, not the corpus.
-    val assigned = assignVectors(s, root, vectors).localCheckpoint(true)
-    appendAssignedToIndex(s, root, assigned)
+  def appendToIvfPqIndex(s: SparkSession, root: String, vectors: DataFrame): Long =
+    appendToRung(s, root, vectors, PqRung)
+
+  /** A rung's append entry point: refuse a root without the rung's
+    * committed parameters (or codes, for a parameterless rung), then
+    * [[appendToIvfIndex]], which maintains every sibling present.
+    * NOTE on lifetime: the assigned batch's localCheckpoint blocks live
+    * OUTSIDE the cache manager (Dataset.unpersist would be a silent
+    * no-op on them) and are reclaimed by the ContextCleaner once the
+    * checkpointed RDD is garbage-collected — bounded because the batch
+    * is an increment, not the corpus. */
+  private def appendToRung(s: SparkSession, root: String, vectors: DataFrame,
+      r: Rung): Long = {
+    require(graft.storage.GraftTable.exists(
+      s"$root/${r.param.fold(r.table)(_.table)}"),
+      s"index at $root has no ${r.appendRefusal}")
+    appendToIvfIndex(s, root, vectors)
   }
 
   /** Append an assigned batch to EVERY quantized sibling the root
-    * carries, codes first and postings LAST: a root can hold both the
-    * PQ `codes` and the int8 `codes_i8` (the builders share s7's root),
-    * and an append that maintained only the caller's own sibling would
-    * silently desync the other — the appended vectors would be
+    * carries ([[Rungs]]), codes first and postings LAST: a root can
+    * hold several rungs (the builders share s7's root), and an append
+    * that maintained only the caller's own sibling would silently
+    * desync the others — the appended vectors would be
     * invisible to that index's probe forever, the exact verify/repair
     * desync class, created by the API itself. With postings last, a
     * crash anywhere in the sequence leaves only orphaned code rows
     * (probe-invisible by the re-rank's inner join; reclaimed by the
-    * repairs), never a half-visible vector. Shared by
-    * [[appendToIvfPqIndex]] and [[appendToInt8Index]], so WHICH entry
-    * point the caller uses does not matter on a multi-index root. */
+    * repairs), never a half-visible vector. Shared by every rung's
+    * append, so WHICH entry point the caller uses does not matter on a
+    * multi-index root. */
   private def appendAssignedToIndex(s: SparkSession, root: String,
       assigned: DataFrame): Long = {
     // every rung's append and CALL ann_append funnel through here — ONE
     // site enforces the exclusive-writer contract against an in-flight
     // compact/rebuild/repair/quantize (VERDICT r13 missing #3)
     requireNotUnderMaintenance(root, "append")
-    if (graft.storage.GraftTable.exists(s"$root/codes")) {
-      val cb = graft.storage.GraftTable.open(s, s"$root/codebook").read()
-      val codesDf = assigned.select(col("label"), col("vec_id"))
-        .join(encodeCodes(assigned.select(col("vec_id"), col("v")), cb), "vec_id")
-        .select(col("label"), col("vec_id"), col("codes"))
-      graft.storage.GraftTable.open(s, s"$root/codes").append(codesDf)
-    }
-    if (graft.storage.GraftTable.exists(s"$root/codes_i8")) {
-      val scaleDf = graft.storage.GraftTable.open(s, s"$root/i8meta").read()
-      graft.storage.GraftTable.open(s, s"$root/codes_i8")
-        .append(int8EncodeAssigned(assigned, scaleDf))
-    }
-    if (graft.storage.GraftTable.exists(s"$root/codes_bin")) {
-      graft.storage.GraftTable.open(s, s"$root/codes_bin")
-        .append(binEncodeAssigned(assigned))
-    }
+    Rungs.filter(r => graft.storage.GraftTable.exists(s"$root/${r.table}"))
+      .foreach(r => graft.storage.GraftTable.open(s, s"$root/${r.table}")
+        .append(r.encode(assigned, paramOf(s, root, r))))
     graft.storage.GraftTable.open(s, s"$root/postings").append(assigned)
   }
 
   /** (label, vec_id, code): int8 codes for assigned (label, vec_id, v,
-    * nrm) rows against the committed ONE-row scale frame — the shared
-    * encode of [[appendAssignedToIndex]] and [[repairInt8Index]]. */
+    * nrm) rows against the committed ONE-row scale frame — the int8
+    * rung's encode. */
   private def int8EncodeAssigned(assigned: DataFrame,
       scaleDf: DataFrame): DataFrame =
     assigned.crossJoin(broadcast(scaleDf))
@@ -1034,13 +1157,14 @@ object Similarity {
     * embedding must stop being retrievable"), absent from every
     * append-only index design. `ids` erase from the POSTINGS first
     * (the authoritative table), then from every quantized sibling the
-    * root carries (`codes`, `codes_i8`): the ordering INVERTS the
-    * append path's codes-first contract to preserve the same
+    * root carries ([[Rungs]]: `codes`, `codes_i8`, `codes_bin`): the
+    * ordering INVERTS the append path's codes-first contract to
+    * preserve the same
     * invariant — a crash between the two deletes leaves ORPHANED code
     * rows, which are probe-invisible (every rung's exact re-rank
     * inner-joins postings, and the shortlist scans read net of
     * deletion vectors via `readPruned`), are flagged by
-    * `verifyIvfPqIndex`/`verifyInt8Index`, and are reclaimed by the
+    * the rung audits ([[verifyCodesSibling]]), and are reclaimed by the
     * repair ops. Deletes land as MERGE-ON-READ sidecars: no clustered
     * list file is rewritten (a dense >50%-of-file hit upgrades to COW
     * for that file, `deleteMor`'s own discipline), so erasure cost is
@@ -1063,7 +1187,7 @@ object Similarity {
     val f = Seq(org.apache.spark.sql.sources.In("vec_id",
       ids.map(_.asInstanceOf[Any]).toArray))
     val n = graft.storage.GraftTable.open(s, s"$root/postings").deleteMor(f)
-    Seq("codes", "codes_i8", "codes_bin").foreach { t =>
+    Rungs.map(_.table).foreach { t =>
       if (graft.storage.GraftTable.exists(s"$root/$t"))
         graft.storage.GraftTable.open(s, s"$root/$t").deleteMor(f)
     }
@@ -1071,11 +1195,10 @@ object Similarity {
   }
 
   /** Every graft table an ANN index root may carry, in build order —
-    * ONE list shared by stats/compact/drop so a future rung cannot be
-    * forgotten by one verb and walked by another. */
-  private val IndexSiblingTables =
-    Seq("centroids", "postings", "codebook", "codes", "codes_i8", "i8meta",
-      "codes_bin")
+    * ONE list shared by stats/compact/drop, derived from [[Rungs]], so a
+    * rung cannot be forgotten by one verb and walked by another. */
+  private val IndexSiblingTables = Seq("centroids", "postings") ++
+    Rungs.flatMap(r => r.param.map(_.table).toSeq :+ r.table)
 
   /** Index OBSERVABILITY (`CALL g.system.ann_stats`): what an operator
     * needs before choosing a maintenance verb, from METADATA ONLY — no
@@ -1104,10 +1227,8 @@ object Similarity {
     // the physically-present-but-masked backlog on top of it
     val live = byName("postings").rowCountFromMetadata()
     val masked = byName("postings").deletedRowCount()
-    val rungs = Seq("fp64") ++
-      (if (byName.contains("codes") && byName.contains("codebook")) Seq("pq") else Nil) ++
-      (if (byName.contains("codes_i8") && byName.contains("i8meta")) Seq("int8") else Nil) ++
-      (if (byName.contains("codes_bin")) Seq("bin") else Nil)
+    val rungs = "fp64" +: Rungs.filter(r => byName.contains(r.table) &&
+      r.param.forall(p => byName.contains(p.table))).map(_.name)
     // explainMeta runs tableSize() — one file-status call per data/DV
     // file, the expensive part of this verb — so compute it ONCE per
     // sibling and serve the header's postings file count from the same
@@ -1265,27 +1386,8 @@ object Similarity {
     * never pair with its posting row, so the vector silently vanishes
     * from s9 results while both id sets look complete).
     * Empty result = sound. */
-  def verifyIvfPqIndex(s: SparkSession, root: String): Seq[String] = {
-    val postFull = graft.storage.GraftTable.open(s, s"$root/postings").read()
-    val codesFull = graft.storage.GraftTable.open(s, s"$root/codes").read()
-    val post = postFull.select(col("vec_id"))
-    val codes = codesFull.select(col("vec_id"))
-    val issues = Seq.newBuilder[String]
-    val missing = post.join(codes, Seq("vec_id"), "left_anti").count()
-    if (missing > 0) issues += s"$missing posting vector(s) have no code row (s9-invisible)"
-    val orphaned = codes.join(post, Seq("vec_id"), "left_anti").count()
-    if (orphaned > 0) issues += s"$orphaned code row(s) have no posting vector (orphaned)"
-    Seq("postings" -> post, "codes" -> codes).foreach { case (name, df) =>
-      val dups = df.groupBy("vec_id").count().filter(col("count") > 1).count()
-      if (dups > 0) issues += s"$dups duplicate vec_id(s) in $name (corrupts top-k)"
-    }
-    val mislabeled = postFull.select(col("vec_id"), col("label").as("p_label"))
-      .join(codesFull.select(col("vec_id"), col("label").as("c_label")), "vec_id")
-      .filter(col("p_label") =!= col("c_label")).count()
-    if (mislabeled > 0)
-      issues += s"$mislabeled vec_id(s) sit in different lists in postings vs codes (s9-invisible)"
-    issues.result()
-  }
+  def verifyIvfPqIndex(s: SparkSession, root: String): Seq[String] =
+    verifyCodesSibling(s, root, PqRung)
 
   /** Repair a postings/codes desync left by a failed
     * [[appendToIvfPqIndex]]: re-encode and append the code rows missing
@@ -1313,56 +1415,7 @@ object Similarity {
     * (codeRowsAdded, badCodeRowsFixed) where "fixed" counts orphans
     * dropped plus mislabeled rows re-labeled. */
   def repairIvfPqIndex(s: SparkSession, root: String): (Long, Long) =
-      withMaintenanceMarker(root) {
-    val tmp = s"$root/codes_repair"
-    // crash recovery FIRST: a previous repair that died between
-    // drop(codes) and cloneTo left the clean table in the staging dir
-    if (!graft.storage.GraftTable.exists(s"$root/codes")) {
-      require(graft.storage.GraftTable.exists(tmp),
-        s"IVF-PQ index at $root has neither codes nor codes_repair — rebuild it")
-      graft.storage.GraftTable.open(s, tmp).cloneTo(s"$root/codes")
-      graft.storage.GraftTable.drop(tmp)
-    } else if (graft.storage.GraftTable.exists(tmp)) {
-      // stale staging from a crash BEFORE the swap: codes is still the
-      // authoritative table, restage from scratch
-      graft.storage.GraftTable.drop(tmp)
-    }
-    val postT = graft.storage.GraftTable.open(s, s"$root/postings")
-    val codesT = graft.storage.GraftTable.open(s, s"$root/codes")
-    val post = postT.read()
-    val codeIds = codesT.read().select(col("vec_id"))
-    val missing = post.join(codeIds, Seq("vec_id"), "left_anti")
-    val cb = graft.storage.GraftTable.open(s, s"$root/codebook").read()
-    val added =
-      if (missing.isEmpty) 0L
-      else codesT.append(missing.select(col("label"), col("vec_id"))
-        .join(encodeCodes(missing.select(col("vec_id"), col("v")), cb), "vec_id")
-        .select(col("label"), col("vec_id"), col("codes")))
-    val postLabels = post.select(col("vec_id"), col("label").as("p_label"))
-    val orphans = codesT.read()
-      .join(post.select(col("vec_id")), Seq("vec_id"), "left_anti").count()
-    val mislabeled = codesT.read().select(col("vec_id"), col("label"))
-      .join(postLabels, "vec_id")
-      .filter(col("label") =!= col("p_label")).count()
-    if (orphans + mislabeled > 0) {
-      // rewrite net of orphans, labels taken from POSTINGS (the
-      // authoritative assignment), preserving the per-list clustering
-      val clean = codesT.read().drop("label")
-        .join(postLabels, Seq("vec_id"))
-        .withColumnRenamed("p_label", "label")
-      val nLists = graft.storage.GraftTable.open(s, s"$root/centroids")
-        .rowCountFromMetadata().toInt.max(1)
-      val staged = clean.repartitionByRange(nLists, col("label"))
-        .select(col("label"), col("vec_id"), col("codes"))
-      val tmpT = graft.storage.GraftTable.create(s, tmp, staged.schema,
-        graft.storage.GraftTableOptions(sortBy = Seq("label")))
-      tmpT.append(staged)
-      graft.storage.GraftTable.drop(s"$root/codes")
-      tmpT.cloneTo(s"$root/codes")
-      graft.storage.GraftTable.drop(tmp)
-    }
-    (added, orphans + mislabeled)
-  }
+    repairCodesSibling(s, root, PqRung)
 
   /** ANN index DRIFT audit (the maintenance-op discipline the storage
     * layer has — auto-compact, verify — extended to the index layer):
@@ -1703,13 +1756,11 @@ object Similarity {
     * keeps its previous centroid, so the list count never silently
     * shrinks); after `iters` rounds the final assignment and centroids
     * are staged as fresh graft tables (range-partitioned + sort_by
-    * label, the builder's layout) and swapped in. For an IVF-PQ root
-    * the codes table is restaged RELABELED to the new assignment —
-    * code ARRAYS encode vector content against the unchanged codebook,
-    * so only their list routing moves — keeping the
-    * [[verifyIvfPqIndex]] label-agreement invariant; an int8 root's
-    * `codes_i8` relabels the same way (content vs the unchanged
-    * committed scale), keeping [[verifyInt8Index]]'s invariant.
+    * label, the builder's layout) and swapped in. Every code sibling
+    * the root carries ([[Rungs]]) is restaged RELABELED to the new
+    * assignment — codes encode vector content against unchanged
+    * committed parameters, so only their list routing moves — keeping
+    * the audits' label-agreement invariant ([[verifyCodesSibling]]).
     *
     * Cost: `iters` passes over the postings with a broadcast centroid
     * join (the drift audit's cost × iters) plus one rewrite of
@@ -1733,8 +1784,7 @@ object Similarity {
     * discarded, leaving a silent quantizer/assignment desync. The
     * window is still NOT reader-safe: run with exclusive ownership of
     * the index root, probes quiesced. Returns (nLists, nVectors). */
-  private val RebuildTables =
-    Seq("centroids", "postings", "codes", "codes_i8", "codes_bin")
+  private val RebuildTables = Seq("centroids", "postings") ++ Rungs.map(_.table)
 
   // separate holder: mixing Logging into Similarity itself would shadow
   // functions.log (the math function) with the slf4j logger
@@ -2145,72 +2195,38 @@ object Similarity {
     * user-built root reaches the full serving ladder without ever
     * leaving the lifecycle API (`rung` ∈ "pq" | "int8" | "bin"; SQL:
     * `CALL g.system.ann_quantize('db.idx', '<rung>')`). Each rung
-    * commits exactly what its bench builder commits — PQ: codebook
-    * ([[pqCodebookFrom]], the same trainer) + per-list code arrays;
+    * commits exactly what its bench builder commits ([[commitRung]] is
+    * both) — PQ: codebook ([[pqCodebookFrom]]) + per-list code arrays;
     * int8: the ONE-row corpus scale + per-list code arrays; bin:
     * per-list packed sign words — so every downstream verb
     * (probeIvf{Pq,Int8,Bin}, append via [[appendAssignedToIndex]]
     * which maintains EVERY sibling present, audit/repair, erasure,
     * rebuild relabel, the CALL surface) serves the grown rung
     * unchanged. Retry-safe: a partial earlier build's parameter table
-    * (codebook / i8meta without its codes) is dropped first, exactly
-    * like the bench builders. Returns code rows committed. */
+    * (codebook / i8meta without its codes) is dropped first. Returns
+    * code rows committed. */
   def quantizeIndex(s: SparkSession, root: String, rung: String): Long = {
-    import graft.storage.{GraftTable, GraftTableOptions}
+    import graft.storage.GraftTable
     require(GraftTable.exists(s"$root/postings") &&
       GraftTable.exists(s"$root/centroids"),
       s"no committed IVF index at $root — build one first (buildIvfIndexFrom/ann_build)")
+    val r = rungNamed(rung)
     withMaintenanceMarker(root) {
-    val post = GraftTable.open(s, s"$root/postings").read()
-    val nLists = GraftTable.open(s, s"$root/centroids")
-      .rowCountFromMetadata().toInt.max(1)
-    def commitCodes(table: String, codesDf: DataFrame,
-        codeCol: String): Long = {
-      val staged = codesDf.repartitionByRange(nLists, col("label"))
-        .select(col("label"), col("vec_id"), col(codeCol))
-      val t = GraftTable.create(s, s"$root/$table", staged.schema,
-        GraftTableOptions(sortBy = Seq("label")))
-      t.append(staged)
-    }
-    rung match {
-      case "bin" =>
-        require(!GraftTable.exists(s"$root/codes_bin"),
-          s"$root already carries the binary rung")
-        commitCodes("codes_bin", binEncodeAssigned(post), "code")
-      case "int8" =>
-        require(!GraftTable.exists(s"$root/codes_i8"),
-          s"$root already carries the int8 rung")
-        // a scale without codes is a failed earlier build's residue
-        GraftTable.drop(s"$root/i8meta")
-        val metaDf = int8ScaleFrame(int8Unit(post))
-        val metaT = GraftTable.create(s, s"$root/i8meta", metaDf.schema)
-        metaT.append(metaDf)
-        commitCodes("codes_i8", int8EncodeAssigned(post, metaT.read()), "code")
-      case "pq" =>
-        require(!GraftTable.exists(s"$root/codes"),
-          s"$root already carries the PQ rung")
-        val dims = post.select(size(col("v"))).head.getInt(0)
+      require(!GraftTable.exists(s"$root/${r.table}"),
+        s"$root already carries the ${r.noun} rung")
+      if (r == PqRung) {
+        val dims = GraftTable.open(s, s"$root/postings").read()
+          .select(size(col("v"))).head.getInt(0)
         require(dims == PqM * PqSub,
           s"the PQ rung needs ${PqM * PqSub}-dim vectors (PqM=$PqM × PqSub=$PqSub), got $dims")
-        GraftTable.drop(s"$root/codebook")
-        val cbDf = pqCodebookFrom(post.select(col("vec_id"), col("v")))
-        val cbT = GraftTable.create(s, s"$root/codebook", cbDf.schema)
-        cbT.append(cbDf)
-        val codesDf = post.select(col("vec_id"), col("label"))
-          .join(encodeCodes(post.select(col("vec_id"), col("v")), cbT.read()),
-            "vec_id")
-        commitCodes("codes", codesDf, "codes")
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown quantization rung '$other' — expected pq, int8, or bin")
-    }
+      }
+      commitRung(s, root, r)
     }
   }
 
   def rebuildIvfIndex(s: SparkSession, root: String,
       iters: Int = 5): (Int, Long) = withMaintenanceMarker(root) {
     import graft.storage.{GraftTable, GraftTableOptions}
-    val names = RebuildTables
     val (fs, _) = GraftTable.fsAndPath(root)
     val marker = new org.apache.hadoop.fs.Path(root, RebuildSwapMarker)
     recoverRebuildSwap(s, root)
@@ -2243,54 +2259,24 @@ object Similarity {
       val centStage = GraftTable.create(s, s"$root/centroids_rebuild",
         centFinal.schema)
       centStage.append(centFinal)
-      val hasCodes = GraftTable.exists(s"$root/codes")
-      if (hasCodes) {
-        val codes = GraftTable.open(s, s"$root/codes").read()
+      // every code sibling relabels to the new assignment: its codes
+      // encode vector content against UNCHANGED committed parameters,
+      // so only the list routing moves
+      val present = Rungs.filter(r => GraftTable.exists(s"$root/${r.table}"))
+      present.foreach { r =>
+        val codes = GraftTable.open(s, s"$root/${r.table}").read()
           .drop("label")
           .join(finalAssign.select(col("vec_id"), col("label")), Seq("vec_id"))
           .repartitionByRange(nLists, col("label"))
-          .select(col("label"), col("vec_id"), col("codes"))
-        val codesStage = GraftTable.create(s, s"$root/codes_rebuild",
-          codes.schema, GraftTableOptions(sortBy = Seq("label")))
-        codesStage.append(codes)
-      }
-      // the int8 sibling (s17) relabels exactly like the PQ codes: the
-      // code arrays encode content against the UNCHANGED committed
-      // scale (i8meta), so only the list routing moves
-      val hasI8 = GraftTable.exists(s"$root/codes_i8")
-      if (hasI8) {
-        val codesI8 = GraftTable.open(s, s"$root/codes_i8").read()
-          .drop("label")
-          .join(finalAssign.select(col("vec_id"), col("label")), Seq("vec_id"))
-          .repartitionByRange(nLists, col("label"))
-          .select(col("label"), col("vec_id"), col("code"))
-        val i8Stage = GraftTable.create(s, s"$root/codes_i8_rebuild",
-          codesI8.schema, GraftTableOptions(sortBy = Seq("label")))
-        i8Stage.append(codesI8)
-      }
-      // the binary sibling (s22) relabels the same way: sign words
-      // encode vector content alone, so only the list routing moves
-      val hasBin = GraftTable.exists(s"$root/codes_bin")
-      if (hasBin) {
-        val codesBin = GraftTable.open(s, s"$root/codes_bin").read()
-          .drop("label")
-          .join(finalAssign.select(col("vec_id"), col("label")), Seq("vec_id"))
-          .repartitionByRange(nLists, col("label"))
-          .select(col("label"), col("vec_id"), col("code"))
-        val binStage = GraftTable.create(s, s"$root/codes_bin_rebuild",
-          codesBin.schema, GraftTableOptions(sortBy = Seq("label")))
-        binStage.append(codesBin)
+          .select(col("label"), col("vec_id"), col(r.codeCol))
+        GraftTable.create(s, s"$root/${r.table}_rebuild", codes.schema,
+          GraftTableOptions(sortBy = Seq("label"))).append(codes)
       }
       // the swap's COMMIT POINT: staging is complete, the marker makes
       // the sequence authoritative — any crash from here on completes
       // on the next call instead of being discarded as stale
       fs.create(marker, false).close()
-      names.filter {
-        case "codes" => hasCodes
-        case "codes_i8" => hasI8
-        case "codes_bin" => hasBin
-        case _ => true
-      }.foreach { n =>
+      (Seq("centroids", "postings") ++ present.map(_.table)).foreach { n =>
         GraftTable.drop(s"$root/$n")
         GraftTable.open(s, s"$root/${n}_rebuild").cloneTo(s"$root/$n")
         GraftTable.drop(s"$root/${n}_rebuild")
@@ -2308,19 +2294,36 @@ object Similarity {
   /** s9: ANN served from the composed IVF-PQ index. Per query: assign to
     * the nearest committed centroid (broadcast), ADC-score ONLY the
     * probed lists' zone-map-pruned code files against the broadcast
-    * per-query distance table, keep the top-[[PqRerank]] candidates by
+    * per-query distance table, keep the top-[[Rerank]] candidates by
     * quantized distance, then re-rank those EXACTLY from the full
     * vectors (fetched from the probed lists' posting files with the
     * candidate-id filter pushed into the scan). The exact re-rank makes
     * the result hash-checkable: the oracle replays quantizer + codebook
     * + ADC + re-rank in SQL. */
-  def s9AnnIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val root = ivfPqIndexDir(s, dir)
-    val s2 = probeSession(s)
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
+  def s9AnnIvfPq(s: SparkSession, dir: String): DataFrame =
+    rungEntry(s, dir, PqRung, filtered = false)
+
+  /** The bench query batch (vec_id < [[NumQueries]]) as `(q_id, qv,
+    * qn)`, read from a persisted root's postings. */
+  private def indexQueries(s: SparkSession, root: String): DataFrame =
+    graft.storage.GraftTable.open(s, s"$root/postings").read()
+      .filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    probeIvfPq(s2, root, q).orderBy("q_id", "rank")
+
+  /** The `lang='en'` id-universe the filtered entries scope to. */
+  private def enIds(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "documents").filter(col("lang") === "en")
+      .select(col("doc_id").cast("long").as("id"))
+
+  /** A quantized rung's bench entry (s9/s14, s17/s19, s22/s23): build
+    * the rung on the caller's session, probe the bench queries on
+    * [[probeSession]], optionally scoped to [[enIds]]. */
+  private def rungEntry(s: SparkSession, dir: String, r: Rung,
+      filtered: Boolean): DataFrame = {
+    val root = rungIndexDir(s, dir, r)
+    val s2 = probeSession(s)
+    probeRung(s2, root, r, indexQueries(s2, root),
+      if (filtered) Some(enIds(s2, dir)) else None, 1).orderBy("q_id", "rank")
   }
 
   /** Score one bounded query batch — (q_id, qv: array<double>, qn) —
@@ -2328,6 +2331,16 @@ object Similarity {
     * centroids, committed codebook). Shared by [[s9AnnIvfPq]], s14, the
     * continuous twin ([[graft.streaming.AnnStream.startPq]]) and
     * [[probeIvfPqRaw]], so they are the same operator by construction.
+    * The body is [[probeRung]]'s. */
+  private[graft] def probeIvfPq(s: SparkSession, root: String,
+      q: DataFrame, filterIds: Option[DataFrame] = None,
+      nprobe: Int = 1): DataFrame =
+    probeRung(s, root, PqRung, q, filterIds, nprobe)
+
+  /** The probe of every quantized rung `r`: assignment against the
+    * committed centroids, a shortlist over ONLY the probed lists'
+    * zone-map-pruned code files, then an exact re-rank of the
+    * shortlist's full vectors from postings.
     *
     * Once-run steps: every intermediate is bounded by construction, so
     * each is computed by ONE action and handed on as a local relation
@@ -2336,27 +2349,30 @@ object Similarity {
     *  1. the queries — ≤ batch size rows;
     *  2. `assigned`, the nearest-list assignment — ≤ nprobe rows per
     *     query; the probed labels are read from these rows;
-    *  3. `qtab`, the ADC table — PqM × PqK rows per query;
-    *  4. `cand`, the ADC shortlist — ≤ [[PqRerank]] rows per query; the
-    *     re-rank's candidate ids are read from these rows.
+    *  3. `qtab`, the rung's query-side table against its COMMITTED
+    *     parameters (PQ: the ADC table, PqM × PqK rows per query;
+    *     int8: the query codes against the committed scale; bin: the
+    *     query's sign words — one row per query);
+    *  4. `cand`, the shortlist — ≤ [[Rerank]] rows per query by the
+    *     rung's score, then vec_id; the re-rank's candidate ids are
+    *     read from these rows.
     * The returned frame is the exact re-rank over the candidates'
     * posting point lookups. The arithmetic, windows and tie-breaks are
     * those of the plan without the steps, so results are bit-identical;
-    * without them `assigned` would run three times and the whole ADC
-    * plan (codes scan, posexplode, join, aggregate, window) twice.
+    * without them `assigned` would run three times and the whole
+    * shortlist plan (codes scan, join, aggregate, window) twice.
     *
     * `filterIds` (one `id` column) scopes the search to a metadata
     * id-universe, as in [[probeIvf]]: the semi join lands on the CODES
-    * scan — BEFORE the ADC candidate selection — so the top-PqRerank
-    * quantized candidates are drawn from the filtered universe (a
-    * post-ADC filter would return fewer than k whenever the predicate
-    * is selective inside the shortlist), and the exact re-rank then
-    * touches only filtered ids. */
-  private[graft] def probeIvfPq(s: SparkSession, root: String,
-      q: DataFrame, filterIds: Option[DataFrame] = None,
-      nprobe: Int = 1): DataFrame = {
+    * scan — BEFORE the shortlist — so the top-Rerank candidates are
+    * drawn from the filtered universe (a post-shortlist filter would
+    * return fewer than k whenever the predicate is selective inside the
+    * shortlist), and the exact re-rank then touches only filtered
+    * ids. */
+  private def probeRung(s: SparkSession, root: String, r: Rung,
+      q: DataFrame, filterIds: Option[DataFrame], nprobe: Int): DataFrame = {
     val postT = graft.storage.GraftTable.open(s, s"$root/postings")
-    val codesT = graft.storage.GraftTable.open(s, s"$root/codes")
+    val codesT = graft.storage.GraftTable.open(s, s"$root/${r.table}")
     val cent = graft.storage.GraftTable.open(s, s"$root/centroids").read()
     val (queries, _) = runOnce(s, q.select(col("q_id"), col("qv"), col("qn")))
     val (assigned, assignedRows) =
@@ -2366,7 +2382,7 @@ object Similarity {
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       annResultSchema(q, cent, postT))
     if (probes.isEmpty) return empty
-    // ADC over the probed lists' CODES only — zone-map pruning keeps the
+    // the probed lists' CODES only — zone-map pruning keeps the
     // candidate scan at ~1/nlist of the code bytes (readPruned: net of
     // deletion vectors, so an erased vector never shortlists); the
     // label equality below makes pruning-overshoot (a file straddling
@@ -2375,21 +2391,14 @@ object Similarity {
       codesT.readPruned(Seq(org.apache.spark.sql.sources.In("label", probes)))
     val codes = filterIds.fold(codeScan)(f =>
       codeScan.join(f.select(col("id")), col("vec_id") === col("id"), "left_semi"))
-    // the COMMITTED codebook: probes are fully index-served, no retrain
-    val (qtab, _) = runOnce(s, pqQueryTable(queries,
-      graft.storage.GraftTable.open(s, s"$root/codebook").read()))
-    val wCand = Window.partitionBy("q_id").orderBy(col("pqd"), col("vec_id"))
-    val (cand, candRows) = runOnce(s, codes
+    val (qtab, _) = runOnce(s, r.queryTable(queries, paramOf(s, root, r)))
+    val score = if (r.descending) col("score").desc else col("score")
+    val wCand = Window.partitionBy("q_id").orderBy(score, col("vec_id"))
+    val (cand, candRows) = runOnce(s, r.scored(codes
       .join(broadcast(assigned.select(col("q_id").as("a_qid"), col("alabel"))),
-        col("label") === col("alabel"))
-      .select(col("a_qid"), col("vec_id"),
-        posexplode(col("codes")).as(Seq("m", "code")))
-      .join(broadcast(qtab),
-        col("a_qid") === col("q_id") && col("m") === col("qm") &&
-          col("code") === col("qcid") && col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id").agg(sum("pdq").as("pqd"))
+        col("label") === col("alabel")), qtab)
       .withColumn("crn", row_number().over(wCand))
-      .filter(col("crn") <= PqRerank)
+      .filter(col("crn") <= Rerank)
       .select(col("q_id").as("c_qid"), col("vec_id").as("c_vid")))
     // the exact-vector fetch is a point lookup, so push the id set into
     // the posting scan (row-group stats skip) instead of streaming the
@@ -2454,9 +2463,7 @@ object Similarity {
     * oracle-checkable contract those paths must match on the filtered
     * universe. */
   def s10FilteredAnn(s: SparkSession, dir: String): DataFrame = {
-    val en = Tables.load(s, dir, "documents")
-      .filter(col("lang") === "en")
-      .select(col("doc_id").cast("long").as("id"))
+    val en = enIds(s, dir)
     val e = normalized(Tables.load(s, dir, "embeddings"))
     // queries come from the UNFILTERED universe (a query need not
     // satisfy the predicate it scopes its search to)
@@ -2525,9 +2532,7 @@ object Similarity {
     val emb = Tables.load(s, dir, "embeddings")
     val e = normalized(emb)
     val cent = centroids(emb)
-    val en = Tables.load(s, dir, "documents")
-      .filter(col("lang") === "en")
-      .select(col("doc_id").cast("long").as("id"))
+    val en = enIds(s, dir)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
     // same shared assignment as the s7/s9 probes — one tie-break to rule
@@ -2562,13 +2567,8 @@ object Similarity {
   def s12FilteredPersisted(s: SparkSession, dir: String): DataFrame = {
     val root = ivfIndexDir(s, dir)
     val s2 = probeSession(s)
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val en = Tables.load(s2, dir, "documents")
-      .filter(col("lang") === "en")
-      .select(col("doc_id").cast("long").as("id"))
-    probeIvf(s2, root, q, Some(en)).orderBy("q_id", "rank")
+    probeIvf(s2, root, indexQueries(s2, root), Some(enIds(s2, dir)))
+      .orderBy("q_id", "rank")
   }
 
   /** s13's candidate-pool depth and selection count. λ = 0.7 is carried
@@ -2679,23 +2679,14 @@ object Similarity {
   /** s14: the FILTERED probe of the persisted IVF-PQ index — s12's
     * composition for the COMPOSED index: the `lang='en'` id-universe
     * rides [[probeIvfPq]]'s `filterIds` semi join on the CODES scan,
-    * BEFORE the ADC shortlist, so the top-PqRerank quantized candidates
+    * BEFORE the ADC shortlist, so the top-Rerank quantized candidates
     * are drawn from the filtered universe and the exact re-rank touches
     * only filtered ids. Hash-checkable because the exact re-rank makes
     * the result fully determined by quantizer + codebook + ADC + filter
     * — all of which the oracle ([[s9OracleSql]] with the filter at the
     * candidate stage) replays in SQL. */
-  def s14FilteredIvfPq(s: SparkSession, dir: String): DataFrame = {
-    val root = ivfPqIndexDir(s, dir)
-    val s2 = probeSession(s)
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val en = Tables.load(s2, dir, "documents")
-      .filter(col("lang") === "en")
-      .select(col("doc_id").cast("long").as("id"))
-    probeIvfPq(s2, root, q, Some(en)).orderBy("q_id", "rank")
-  }
+  def s14FilteredIvfPq(s: SparkSession, dir: String): DataFrame =
+    rungEntry(s, dir, PqRung, filtered = true)
 
   /** p4's context token budget: picks are packed in MMR order until the
     * inclusive running token count would exceed this — the first
@@ -2756,10 +2747,7 @@ object Similarity {
     val root = ivfIndexDir(s, dir)
     val s2 = probeSession(s) // bounded probe + ≤MmrPool rows/query tail
     val toks = docTokenCounts(Tables.load(s2, dir, "documents"))
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    mmrPackStage(s2, ragPoolFromIndex(s2, root, q, toks, None))
+    mmrPackStage(s2, ragPoolFromIndex(s2, root, indexQueries(s2, root), toks, None))
       .orderBy("q_id", "rank")
   }
 
@@ -2952,9 +2940,6 @@ object Similarity {
 
   // -- s18: binary (1-bit sign) quantization -----------------------------
 
-  /** Shortlist depth for s18's exact re-rank — the s9/s17 contract. */
-  private val BinRerank = 20
-
   /** s18: binary-quantized retrieval — the quantization ladder's last
     * rung (fp64 = s1, int8 = s15/s17, 8-byte PQ = s5/s9, 1 BIT/dim
     * here): each vector's code is its per-dimension SIGN BITS, and the
@@ -2966,7 +2951,7 @@ object Similarity {
     * sign-disagreement count over the value arrays (bit-identical to
     * popcount(xor(codes)) without packing arithmetic that BIGINT
     * overflow rules make engine-specific), so the BIGINT shortlist is
-    * exact under any execution order. Top-[[BinRerank]] by (hamming,
+    * exact under any execution order. Top-[[Rerank]] by (hamming,
     * vec_id) then re-rank exactly by true cosine — hash-checkable like
     * s17, and the reported `hamming` column is itself integer-exact. */
   def s18BinaryAnn(s: SparkSession, dir: String): DataFrame = {
@@ -2982,7 +2967,7 @@ object Similarity {
               .otherwise(lit(1L))),
           lit(0L), (acc, x) => acc + x).as("hamming"))
       .withColumn("srn", row_number().over(wShort))
-      .filter(col("srn") <= BinRerank)
+      .filter(col("srn") <= Rerank)
     val wRank = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
     short
       .select(col("q_id"), col("vec_id"), col("hamming"),
@@ -2995,15 +2980,6 @@ object Similarity {
   }
 
   // -- s17: the persisted INT8-quantized IVF index -----------------------
-
-  /** Shortlist depth for the exact re-rank — same contract as s9's
-    * [[PqRerank]]: deep enough that int8 rounding losses are visible to
-    * the spec, shallow enough that the exact-vector fetch stays a
-    * bounded point lookup. */
-  private val I8Rerank = 20
-
-  private val Int8Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** The memory ladder's PERSISTED middle rung (s7 = exact 8-byte
     * doubles, s17 = int8 codes, s9 = 8-byte-per-VECTOR PQ codes): on
@@ -3019,117 +2995,24 @@ object Similarity {
     * Same memoization contract as [[ivfIndexDir]]: never rebuild the
     * shared root in place. */
   private[graft] def int8IndexDir(s: SparkSession, dir: String): String =
-    Int8Cache.computeIfAbsent((s, dir), { _ =>
-      val root = ivfIndexDir(s, dir)
-      // retry-safe: drop partial artifacts of a failed earlier build
-      // (same discipline as ivfPqIndexDir)
-      Seq("codes_i8", "i8meta").foreach(t =>
-        graft.storage.GraftTable.drop(s"$root/$t"))
-      val e = normalized(Tables.load(s, dir, "embeddings"))
-      val metaDf = int8ScaleFrame(int8Unit(e))
-      val metaT = graft.storage.GraftTable.create(s, s"$root/i8meta", metaDf.schema)
-      metaT.append(metaDf)
-      val nLists = graft.storage.GraftTable.open(s, s"$root/centroids")
-        .rowCountFromMetadata().toInt.max(1)
-      // encode against the JUST-COMMITTED scale (one corpus pass for
-      // the aggregate, not two — the probe consumes i8meta the same way)
-      val scaleDf = metaT.read()
-      val codesDf = int8Unit(e).crossJoin(broadcast(scaleDf))
-        .select(col("label"), col("vec_id"),
-          transform(col("u"),
-            x => floor(x / col("scale") + lit(0.5)).cast("long")).as("code"))
-        .repartitionByRange(nLists, col("label"))
-      val codesT = graft.storage.GraftTable.create(s, s"$root/codes_i8",
-        codesDf.schema, graft.storage.GraftTableOptions(sortBy = Seq("label")))
-      codesT.append(codesDf)
-      root
-    })
+    rungIndexDir(s, dir, Int8Rung)
 
   /** Probe the persisted int8 index for one bounded query batch
-    * (q_id, qv, qn): assignment vs the broadcast committed centroids,
-    * the query quantized against the COMMITTED scale, an integer-dot
-    * shortlist over ONLY the probed lists' zone-map-pruned code files
-    * (top-[[I8Rerank]] by BIGINT score — no float in the shortlist
-    * path), then an exact re-rank fetching only the shortlist's full
-    * vectors from the posting files with the id set pushed into the
-    * scan (s9's re-rank discipline, which also makes the result
-    * hash-checkable). Both collects are bounded: probed labels (one per
-    * query) and shortlist ids (I8Rerank per query). `filterIds` lands
-    * as a semi join on the CODES scan — before the shortlist — so top
-    * candidates are drawn from the filtered universe (the s12/s14
-    * composition contract). */
+    * (q_id, qv, qn) — [[probeRung]] with the query quantized against
+    * the COMMITTED scale and a top-[[Rerank]] shortlist by BIGINT code
+    * dot (no float in the shortlist path). */
   private[graft] def probeIvfInt8(s: SparkSession, root: String,
       q: DataFrame, filterIds: Option[DataFrame] = None,
-      nprobe: Int = 1): DataFrame = {
-    val postT = graft.storage.GraftTable.open(s, s"$root/postings")
-    val codesT = graft.storage.GraftTable.open(s, s"$root/codes_i8")
-    val cent = graft.storage.GraftTable.open(s, s"$root/centroids").read()
-    val scaleDf = graft.storage.GraftTable.open(s, s"$root/i8meta").read()
-    val assigned = assignQueryBatch(q, cent, nprobe)
-    // bounded collect: ≤ nprobe probed lists per query
-    val probes = assigned.select("alabel").distinct().collect().map(_.get(0))
-    def empty = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      annResultSchema(q, cent, postT))
-    if (probes.isEmpty) return empty
-    // probed lists' code files only, NET of deletion vectors
-    // (readPruned) — an erased vector never shortlists
-    val codeScan =
-      codesT.readPruned(Seq(org.apache.spark.sql.sources.In("label", probes)))
-    val codes = filterIds.fold(codeScan)(f =>
-      codeScan.join(f.select(col("id")), col("vec_id") === col("id"), "left_semi"))
-    // quantize the query against the COMMITTED scale — (x/qn)/scale,
-    // the same association as the build's u/scale
-    val qq = q.crossJoin(broadcast(scaleDf))
-      .select(col("q_id"),
-        transform(col("qv"),
-          x => floor(x / col("qn") / col("scale") + lit(0.5)).cast("long")).as("qc"))
-    // the label equality below makes pruning-overshoot (a file
-    // straddling two lists) harmless, as in probeIvfPq
-    val wCand = Window.partitionBy("q_id").orderBy(col("iscore").desc, col("vec_id"))
-    val cand = codes
-      .join(broadcast(assigned.select(col("q_id").as("a_qid"), col("alabel"))),
-        col("label") === col("alabel"))
-      .join(broadcast(qq),
-        col("a_qid") === col("q_id") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        aggregate(zip_with(col("qc"), col("code"), (a, b) => a * b),
-          lit(0L), (acc, x) => acc + x).as("iscore"))
-      .withColumn("crn", row_number().over(wCand))
-      .filter(col("crn") <= I8Rerank)
-      .select(col("q_id").as("c_qid"), col("vec_id").as("c_vid"))
-    // bounded collect: I8Rerank candidates per query — push the id set
-    // into the posting scan (row-group stats skip)
-    val candIds = cand.select("c_vid").distinct().collect().map(_.get(0))
-    if (candIds.isEmpty) return empty
-    val post =
-      postT.readPruned(Seq(org.apache.spark.sql.sources.In("label", probes)))
-        .filter(col("vec_id").isInCollection(candIds))
-    val wRank = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    post.join(broadcast(cand), col("vec_id") === col("c_vid"))
-      .join(broadcast(q.select(col("q_id"), col("qv"), col("qn"))),
-        col("q_id") === col("c_qid"))
-      .select(col("q_id"), col("label"), col("vec_id"),
-        cosine(col("qv"), col("v"), col("qn"), col("nrm")).as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= IvfTopK)
-      .select(col("q_id"), col("label"), col("vec_id"),
-        round(col("cos"), 4).as("cos"), col("rank"))
-  }
+      nprobe: Int = 1): DataFrame =
+    probeRung(s, root, Int8Rung, q, filterIds, nprobe)
 
   /** s17: ANN served from the persisted INT8 index — committed
     * centroids, committed scale, integer shortlist over the probed
     * lists' code files, exact re-rank from bounded posting point
     * lookups. The oracle replays quantizer assignment + the shared int8
     * chain + the integer shortlist + the re-rank in SQL. */
-  def s17AnnInt8Persisted(s: SparkSession, dir: String): DataFrame = {
-    val root = int8IndexDir(s, dir)
-    val s2 = probeSession(s)
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    probeIvfInt8(s2, root, q).orderBy("q_id", "rank")
-  }
+  def s17AnnInt8Persisted(s: SparkSession, dir: String): DataFrame =
+    rungEntry(s, dir, Int8Rung, filtered = false)
 
   /** s19: the FILTERED probe of the persisted int8 index — s17 scoped
     * to a metadata id-universe (the s12/s14 composition at this rung):
@@ -3137,79 +3020,59 @@ object Similarity {
     * codes scan BEFORE the integer shortlist, so the top candidates are
     * drawn from the filtered universe and the exact re-rank touches
     * only filtered ids. */
-  def s19FilteredInt8(s: SparkSession, dir: String): DataFrame = {
-    val root = int8IndexDir(s, dir)
-    val s2 = probeSession(s)
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val en = Tables.load(s2, dir, "documents")
-      .filter(col("lang") === "en")
-      .select(col("doc_id").cast("long").as("id"))
-    probeIvfInt8(s2, root, q, Some(en)).orderBy("q_id", "rank")
-  }
+  def s19FilteredInt8(s: SparkSession, dir: String): DataFrame =
+    rungEntry(s, dir, Int8Rung, filtered = true)
 
   /** Incremental int8-index maintenance (the s17 analog of
-    * [[appendToIvfPqIndex]], same CODES-FIRST failure contract: an
-    * orphaned code row's candidate is dropped by the exact re-rank's
-    * inner join against postings, so a half-committed vector is
-    * consistently "not yet indexed" for both s7 and s17). New vectors
-    * are assigned against the COMMITTED centroids and encoded against
-    * the COMMITTED scale; the assigned batch is localCheckpoint-
-    * materialized so every commit sees the same rows (the
-    * appendToIvfPqIndex nondeterminism discipline). On a root that
-    * ALSO carries the PQ `codes` table, the PQ sibling is appended in
-    * the same call ([[appendAssignedToIndex]]) — neither index ever
-    * desyncs because the caller picked the other entry point. Input:
+    * [[appendToIvfPqIndex]], same CODES-FIRST failure contract): new
+    * vectors are assigned against the COMMITTED centroids and encoded
+    * against the COMMITTED scale, and every sibling the root carries is
+    * appended in the same call ([[appendAssignedToIndex]]). Input:
     * (vec_id, embedding). Returns rows appended. */
-  def appendToInt8Index(s: SparkSession, root: String, vectors: DataFrame): Long = {
-    require(graft.storage.GraftTable.exists(s"$root/i8meta"),
-      s"index at $root has no committed int8 scale — build via int8IndexDir")
-    val assigned = assignVectors(s, root, vectors).localCheckpoint(true)
-    appendAssignedToIndex(s, root, assigned)
-  }
+  def appendToInt8Index(s: SparkSession, root: String, vectors: DataFrame): Long =
+    appendToRung(s, root, vectors, Int8Rung)
 
   /** Repair a postings/codes_i8 desync left by a failed
-    * [[appendToInt8Index]] — the s17 analog of [[repairIvfPqIndex]],
-    * simpler because int8 codes derive DETERMINISTICALLY from the
-    * postings' vectors and the committed scale: re-encode and append
-    * code rows missing for committed postings, and when orphans or
-    * mislabels exist rewrite the codes table net of both with labels
-    * taken from POSTINGS (the authoritative assignment). Same
-    * crash-recovery contract as the PQ repair: staging into
-    * `codes_i8_repair`, the only destructive step is the final
-    * drop-then-clone swap, and a crash inside the swap completes on
-    * the next run. NOT reader-safe — exclusive ownership, like every
-    * maintenance swap. Duplicates are not auto-repaired (rebuild
-    * instead). Returns (codeRowsAdded, badCodeRowsFixed). */
-  def repairInt8Index(s: SparkSession, root: String): (Long, Long) = {
-    val scaleDf = () => graft.storage.GraftTable.open(s, s"$root/i8meta").read()
-    repairCodesSibling(s, root, "codes_i8", "int8",
-      missing => int8EncodeAssigned(missing, scaleDf()))
-  }
+    * [[appendToInt8Index]] — [[repairCodesSibling]] over the int8 rung
+    * (codes re-derive from the postings' vectors and the committed
+    * scale). */
+  def repairInt8Index(s: SparkSession, root: String): (Long, Long) =
+    repairCodesSibling(s, root, Int8Rung)
 
-  /** The shared repair state machine for the DERIVED-code siblings
-    * (`codes_i8`, `codes_bin`): their codes are pure functions of the
-    * postings' vectors (+ committed parameters the `encode` closure
-    * captures), so one protocol serves every rung — re-encode and
+  /** The repair state machine of every rung's code sibling: codes are
+    * functions of the postings' vectors and the rung's COMMITTED
+    * parameters, so one protocol serves every rung — re-encode and
     * append code rows missing for committed postings; when orphans or
-    * mislabels exist rewrite the codes table net of both with labels
-    * from POSTINGS (the authoritative assignment). Crash-recovery
-    * contract as [[repairIvfPqIndex]]: staging into
-    * `<table>_repair`, the only destructive step is the final
-    * drop-then-clone swap, a crash inside the swap completes on the
-    * next run. NOT reader-safe — exclusive ownership. Duplicates are
-    * not auto-repaired (rebuild instead). One definition, so a swap-
-    * protocol fix can never reach one rung and miss the other
-    * (review r13). Returns (codeRowsAdded, badCodeRowsFixed). */
+    * mislabels exist rewrite the code table net of both with labels
+    * from POSTINGS (the authoritative assignment), preserving the
+    * per-list clustering (orphans cost probe bytes, mislabels lose
+    * vectors). Duplicates are NOT auto-repaired (which copy is
+    * authoritative is not decidable here) — recluster/rebuild instead.
+    *
+    * CRASH-RECOVERABLE: the rewrite stages into `<table>_repair`, and
+    * the only destructive step is the drop-then-clone swap at the end.
+    * A crash before the swap leaves the code table intact (a stale
+    * staging table is dropped on the next run); a crash INSIDE the swap
+    * leaves the clean table in staging, and the next run completes the
+    * swap before anything else.
+    *
+    * NOT reader-safe: the swap window (drop → cloneTo → drop of the
+    * staging dir) is a multi-second distributed copy during which a
+    * concurrent probe opening the code table fails on a missing table.
+    * Run with EXCLUSIVE ownership of the index root — quiesce probes
+    * first, exactly like recluster/rebuild. Returns (codeRowsAdded,
+    * badCodeRowsFixed) where "fixed" counts orphans dropped plus
+    * mislabeled rows re-labeled. */
   private def repairCodesSibling(s: SparkSession, root: String,
-      table: String, rung: String,
-      encode: DataFrame => DataFrame): (Long, Long) =
+      r: Rung): (Long, Long) =
       withMaintenanceMarker(root) {
+    val table = r.table
     val tmp = s"$root/${table}_repair"
+    // crash recovery FIRST: a previous repair that died between the
+    // drop and the clone left the clean table in the staging dir
     if (!graft.storage.GraftTable.exists(s"$root/$table")) {
       require(graft.storage.GraftTable.exists(tmp),
-        s"$rung index at $root has neither $table nor ${table}_repair — rebuild it")
+        s"${r.noun} index at $root has neither $table nor ${table}_repair — rebuild it")
       graft.storage.GraftTable.open(s, tmp).cloneTo(s"$root/$table")
       graft.storage.GraftTable.drop(tmp)
     } else if (graft.storage.GraftTable.exists(tmp)) {
@@ -3222,7 +3085,7 @@ object Similarity {
     val missing = post.join(codeIds, Seq("vec_id"), "left_anti")
     val added =
       if (missing.isEmpty) 0L
-      else codesT.append(encode(missing))
+      else codesT.append(r.encode(missing, paramOf(s, root, r)))
     val postLabels = post.select(col("vec_id"), col("label").as("p_label"))
     val orphans = codesT.read()
       .join(post.select(col("vec_id")), Seq("vec_id"), "left_anti").count()
@@ -3236,7 +3099,7 @@ object Similarity {
       val nLists = graft.storage.GraftTable.open(s, s"$root/centroids")
         .rowCountFromMetadata().toInt.max(1)
       val staged = clean.repartitionByRange(nLists, col("label"))
-        .select(col("label"), col("vec_id"), col("code"))
+        .select(col("label"), col("vec_id"), col(r.codeCol))
       val tmpT = graft.storage.GraftTable.create(s, tmp, staged.schema,
         graft.storage.GraftTableOptions(sortBy = Seq("label")))
       tmpT.append(staged)
@@ -3247,25 +3110,35 @@ object Similarity {
     (added, orphans + mislabeled)
   }
 
-  /** The shared postings ↔ derived-codes audit behind
-    * [[verifyInt8Index]] and [[verifyBinIndex]] — the desync classes
-    * of [[verifyIvfPqIndex]] over any code sibling: missing code rows
-    * (rung-invisible vectors), orphans, duplicates, list
-    * disagreement. */
-  private def verifyCodesSibling(s: SparkSession, root: String,
-      table: String, codeNoun: String, rungTag: String): Seq[String] = {
+  /** Cross-table integrity audit of rung `r` — the per-table
+    * `GraftTable.verify` cannot see a postings/codes DESYNC (each table
+    * is individually consistent), so this compares them: vec_ids
+    * missing code rows (rung-invisible vectors), orphaned code rows (a
+    * failed append's committed half), duplicate ids in either table (a
+    * blind retry — duplicates CORRUPT shortlists/top-k), and LABEL
+    * disagreement for a shared vec_id (the code row sits in a list the
+    * probe never pairs with its posting row, so the vector silently
+    * vanishes from the rung's results while both id sets look
+    * complete). `postingsDups = false` skips the postings-duplicate
+    * check (another rung's audit of the same root already ran it).
+    * Empty result = sound. */
+  private def verifyCodesSibling(s: SparkSession, root: String, r: Rung,
+      postingsDups: Boolean = true): Seq[String] = {
     val postFull = graft.storage.GraftTable.open(s, s"$root/postings").read()
-    val codesFull = graft.storage.GraftTable.open(s, s"$root/$table").read()
+    val codesFull = graft.storage.GraftTable.open(s, s"$root/${r.table}").read()
     val post = postFull.select(col("vec_id"))
     val codes = codesFull.select(col("vec_id"))
+    val (noun, tag) = (r.auditNoun, r.auditTag)
     val issues = Seq.newBuilder[String]
     val missing = post.join(codes, Seq("vec_id"), "left_anti").count()
     if (missing > 0)
-      issues += s"$missing posting vector(s) have no $codeNoun row ($rungTag-invisible)"
+      issues += s"$missing posting vector(s) have no $noun row ($tag-invisible)"
     val orphaned = codes.join(post, Seq("vec_id"), "left_anti").count()
     if (orphaned > 0)
-      issues += s"$orphaned $codeNoun row(s) have no posting vector (orphaned)"
-    Seq("postings" -> post, table -> codes).foreach { case (name, df) =>
+      issues += s"$orphaned $noun row(s) have no posting vector (orphaned)"
+    val dupChecks =
+      (if (postingsDups) Seq("postings" -> post) else Nil) :+ (r.table -> codes)
+    dupChecks.foreach { case (name, df) =>
       val dups = df.groupBy("vec_id").count().filter(col("count") > 1).count()
       if (dups > 0) issues += s"$dups duplicate vec_id(s) in $name (corrupts top-k)"
     }
@@ -3273,16 +3146,27 @@ object Similarity {
       .join(codesFull.select(col("vec_id"), col("label").as("c_label")), "vec_id")
       .filter(col("p_label") =!= col("c_label")).count()
     if (mislabeled > 0)
-      issues += s"$mislabeled vec_id(s) sit in different lists in postings vs $table ($rungTag-invisible)"
+      issues += s"$mislabeled vec_id(s) sit in different lists in postings vs ${r.table} ($tag-invisible)"
     issues.result()
   }
 
+  /** The whole-root audit behind `CALL ann_verify`: every quantized rung
+    * the root carries, each line prefixed by the rung's name. A
+    * postings-duplicate defect is table-level, so only the first rung
+    * audited reports it — one defect never reads as two. A bare IVF
+    * root (postings + centroids only) audits clean. */
+  private[graft] def verifyIndex(s: SparkSession, root: String): Seq[String] =
+    Rungs.filter(r => graft.storage.GraftTable.exists(s"$root/${r.table}"))
+      .zipWithIndex.flatMap { case (r, i) =>
+        verifyCodesSibling(s, root, r, postingsDups = i == 0)
+          .map(s"${r.name}: " + _)
+      }
+
   /** Cross-table integrity audit for the int8 index — the postings ↔
     * codes_i8 desync classes [[verifyIvfPqIndex]] checks for s9, over
-    * s17's tables: missing code rows (s17-invisible vectors), orphaned
-    * code rows, duplicates, and list disagreement. */
+    * s17's tables. */
   def verifyInt8Index(s: SparkSession, root: String): Seq[String] =
-    verifyCodesSibling(s, root, "codes_i8", "int8 code", "s17")
+    verifyCodesSibling(s, root, Int8Rung)
 
   // -- s22: the persisted BINARY (1-bit sign) IVF index -------------------
 
@@ -3309,14 +3193,9 @@ object Similarity {
        |                         bigint(0))))""".stripMargin)
 
   /** (label, vec_id, code): packed sign words for assigned (label,
-    * vec_id, v, …) rows — the shared encode of [[binIndexDir]],
-    * [[appendAssignedToIndex]]'s binary branch, and [[repairBinIndex]],
-    * so build, append, and repair cannot drift. */
+    * vec_id, v, …) rows — the binary rung's encode. */
   private def binEncodeAssigned(assigned: DataFrame): DataFrame =
     assigned.select(col("label"), col("vec_id"), signWords("v").as("code"))
-
-  private val BinCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** The quantization ladder's PERSISTED 1-bit rung (s7 = exact 8-byte
     * doubles, s17 = ~1 byte/dim int8, s9 = 8 bytes/vector PQ, s22 =
@@ -3331,89 +3210,17 @@ object Similarity {
     * never-retrain). Same memoization contract as [[ivfIndexDir]]:
     * never rebuild the shared root in place. */
   private[graft] def binIndexDir(s: SparkSession, dir: String): String =
-    BinCache.computeIfAbsent((s, dir), { _ =>
-      val root = ivfIndexDir(s, dir)
-      // retry-safe: drop partial artifacts of a failed earlier build
-      graft.storage.GraftTable.drop(s"$root/codes_bin")
-      val e = normalized(Tables.load(s, dir, "embeddings"))
-      val nLists = graft.storage.GraftTable.open(s, s"$root/centroids")
-        .rowCountFromMetadata().toInt.max(1)
-      val codesDf = binEncodeAssigned(e)
-        .repartitionByRange(nLists, col("label"))
-      val codesT = graft.storage.GraftTable.create(s, s"$root/codes_bin",
-        codesDf.schema, graft.storage.GraftTableOptions(sortBy = Seq("label")))
-      codesT.append(codesDf)
-      root
-    })
+    rungIndexDir(s, dir, BinRung)
 
   /** Probe the persisted binary index for one bounded query batch
-    * (q_id, qv, qn): assignment vs the broadcast committed centroids,
-    * the query sign-packed (normalization never flips a sign, so raw
-    * `qv` encodes identically to `qv/qn`), an XOR+popcount Hamming
-    * shortlist over ONLY the probed lists' zone-map-pruned code files
-    * (top-[[BinRerank]] by (hamming, vec_id) — integer-exact under any
-    * execution order), then an exact re-rank fetching only the
-    * shortlist's full vectors from the posting files with the id set
-    * pushed into the scan (the s9/s17 re-rank discipline, which also
-    * makes the result hash-checkable). Both collects are bounded:
-    * probed labels (≤ nprobe per query) and shortlist ids
-    * ([[BinRerank]] per query). `filterIds` lands as a left-semi join
-    * on the CODES scan — before the shortlist — so top candidates come
-    * from the filtered universe (the s12/s14/s19 composition
-    * contract). */
+    * (q_id, qv, qn) — [[probeRung]] with the query sign-packed
+    * (normalization never flips a sign, so raw `qv` encodes identically
+    * to `qv/qn`) and a top-[[Rerank]] shortlist by (hamming, vec_id),
+    * integer-exact under any execution order. */
   private[graft] def probeIvfBin(s: SparkSession, root: String,
       q: DataFrame, filterIds: Option[DataFrame] = None,
-      nprobe: Int = 1): DataFrame = {
-    val postT = graft.storage.GraftTable.open(s, s"$root/postings")
-    val codesT = graft.storage.GraftTable.open(s, s"$root/codes_bin")
-    val cent = graft.storage.GraftTable.open(s, s"$root/centroids").read()
-    val assigned = assignQueryBatch(q, cent, nprobe)
-    // bounded collect: ≤ nprobe probed lists per query
-    val probes = assigned.select("alabel").distinct().collect().map(_.get(0))
-    def empty = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      annResultSchema(q, cent, postT))
-    if (probes.isEmpty) return empty
-    // probed lists' code files only, NET of deletion vectors
-    // (readPruned) — an erased vector never shortlists
-    val codeScan =
-      codesT.readPruned(Seq(org.apache.spark.sql.sources.In("label", probes)))
-    val codes = filterIds.fold(codeScan)(f =>
-      codeScan.join(f.select(col("id")), col("vec_id") === col("id"), "left_semi"))
-    val qq = q.select(col("q_id"), signWords("qv").as("qc"))
-    // label equality below makes pruning-overshoot harmless, as in
-    // probeIvfInt8; hamming = Σ bit_count(xor) over the word pairs
-    val wCand = Window.partitionBy("q_id").orderBy(col("hamming"), col("vec_id"))
-    val cand = codes
-      .join(broadcast(assigned.select(col("q_id").as("a_qid"), col("alabel"))),
-        col("label") === col("alabel"))
-      .join(broadcast(qq),
-        col("a_qid") === col("q_id") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        aggregate(zip_with(col("qc"), col("code"),
-            (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")),
-          lit(0L), (acc, x) => acc + x).as("hamming"))
-      .withColumn("crn", row_number().over(wCand))
-      .filter(col("crn") <= BinRerank)
-      .select(col("q_id").as("c_qid"), col("vec_id").as("c_vid"))
-    // bounded collect: BinRerank candidates per query — push the id set
-    // into the posting scan (row-group stats skip)
-    val candIds = cand.select("c_vid").distinct().collect().map(_.get(0))
-    if (candIds.isEmpty) return empty
-    val post =
-      postT.readPruned(Seq(org.apache.spark.sql.sources.In("label", probes)))
-        .filter(col("vec_id").isInCollection(candIds))
-    val wRank = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    post.join(broadcast(cand), col("vec_id") === col("c_vid"))
-      .join(broadcast(q.select(col("q_id"), col("qv"), col("qn"))),
-        col("q_id") === col("c_qid"))
-      .select(col("q_id"), col("label"), col("vec_id"),
-        cosine(col("qv"), col("v"), col("qn"), col("nrm")).as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= IvfTopK)
-      .select(col("q_id"), col("label"), col("vec_id"),
-        round(col("cos"), 4).as("cos"), col("rank"))
-  }
+      nprobe: Int = 1): DataFrame =
+    probeRung(s, root, BinRung, q, filterIds, nprobe)
 
   /** [[probeIvfBin]] over RAW `(vec_id, embedding)` query rows — the
     * binary sibling of [[probeIvfRaw]], shared with the SQL CALL
@@ -3430,66 +3237,35 @@ object Similarity {
     * sign-disagreement count (≡ popcount of the packed XOR) + the
     * shortlist + the re-rank in SQL — the s17-vs-s15 shared-definition
     * contract at the 1-bit rung. */
-  def s22AnnBinPersisted(s: SparkSession, dir: String): DataFrame = {
-    val root = binIndexDir(s, dir)
-    val s2 = probeSession(s)
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    probeIvfBin(s2, root, q).orderBy("q_id", "rank")
-  }
+  def s22AnnBinPersisted(s: SparkSession, dir: String): DataFrame =
+    rungEntry(s, dir, BinRung, filtered = false)
 
   /** s23: the FILTERED probe of the persisted binary index — s22
     * scoped to a metadata id-universe (the s12/s14/s19 composition at
     * the 1-bit rung): the `lang='en'` universe lands as a left-semi
     * join on the codes scan BEFORE the Hamming shortlist. */
-  def s23FilteredBin(s: SparkSession, dir: String): DataFrame = {
-    val root = binIndexDir(s, dir)
-    val s2 = probeSession(s)
-    val postT = graft.storage.GraftTable.open(s2, s"$root/postings")
-    val q = postT.read().filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val en = Tables.load(s2, dir, "documents")
-      .filter(col("lang") === "en")
-      .select(col("doc_id").cast("long").as("id"))
-    probeIvfBin(s2, root, q, Some(en)).orderBy("q_id", "rank")
-  }
+  def s23FilteredBin(s: SparkSession, dir: String): DataFrame =
+    rungEntry(s, dir, BinRung, filtered = true)
 
   /** Incremental binary-index maintenance (the s22 analog of
     * [[appendToInt8Index]], same CODES-FIRST failure contract): new
     * vectors are assigned against the COMMITTED centroids and
-    * sign-packed; the assigned batch is localCheckpoint-materialized
-    * so every sibling commit sees the same rows. On a root that also
-    * carries `codes`/`codes_i8`, those siblings are appended in the
-    * same call ([[appendAssignedToIndex]]) — no entry point can desync
-    * another rung. Input: (vec_id, embedding). Returns rows appended. */
-  def appendToBinIndex(s: SparkSession, root: String, vectors: DataFrame): Long = {
-    require(graft.storage.GraftTable.exists(s"$root/codes_bin"),
-      s"index at $root has no committed sign codes — build via binIndexDir")
-    val assigned = assignVectors(s, root, vectors).localCheckpoint(true)
-    appendAssignedToIndex(s, root, assigned)
-  }
+    * sign-packed, and every sibling the root carries is appended in the
+    * same call ([[appendAssignedToIndex]]). Input: (vec_id, embedding).
+    * Returns rows appended. */
+  def appendToBinIndex(s: SparkSession, root: String, vectors: DataFrame): Long =
+    appendToRung(s, root, vectors, BinRung)
 
   /** Repair a postings/codes_bin desync left by a failed
-    * [[appendToBinIndex]] — the s22 analog of [[repairInt8Index]],
-    * simplest of the three because sign codes derive from the
-    * postings' vectors ALONE (no committed scale or codebook):
-    * re-encode and append code rows missing for committed postings,
-    * and when orphans or mislabels exist rewrite the codes table net
-    * of both with labels taken from POSTINGS. Same crash-recovery
-    * contract: staging into `codes_bin_repair`, the only destructive
-    * step is the final drop-then-clone swap, a crash inside the swap
-    * completes on the next run. NOT reader-safe — exclusive ownership.
-    * Duplicates are not auto-repaired (rebuild instead). Returns
-    * (codeRowsAdded, badCodeRowsFixed). */
+    * [[appendToBinIndex]] — [[repairCodesSibling]] over the binary rung
+    * (sign codes re-derive from the postings' vectors alone). */
   def repairBinIndex(s: SparkSession, root: String): (Long, Long) =
-    repairCodesSibling(s, root, "codes_bin", "binary", binEncodeAssigned)
+    repairCodesSibling(s, root, BinRung)
 
   /** Cross-table integrity audit for the binary index — the postings ↔
-    * codes_bin desync classes of [[verifyInt8Index]], over s22's
-    * tables ([[verifyCodesSibling]], one definition per rung). */
+    * codes_bin desync classes, over s22's tables. */
   def verifyBinIndex(s: SparkSession, root: String): Seq[String] =
-    verifyCodesSibling(s, root, "codes_bin", "sign-code", "s22")
+    verifyCodesSibling(s, root, BinRung)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s8_hybrid_retrieval" -> s8HybridRetrieval _,
@@ -3558,7 +3334,7 @@ object Similarity {
        |  FROM candr c
        |  JOIN nn cv ON cv.vec_id = c.vec_id
        |  JOIN nn qv ON qv.vec_id = c.q_id
-       |  WHERE c.crn <= $PqRerank)
+       |  WHERE c.crn <= $Rerank)
        |SELECT q_id, label, vec_id, round(cos, 4) cos, rank FROM (
        |  SELECT *, row_number() OVER (PARTITION BY q_id
        |    ORDER BY cos DESC, vec_id) rank FROM rer)
@@ -3789,7 +3565,7 @@ object Similarity {
        |  FROM shortr sr
        |  JOIN n cv ON cv.vec_id = sr.vec_id
        |  JOIN n qv ON qv.vec_id = sr.q_id
-       |  WHERE sr.crn <= $I8Rerank)
+       |  WHERE sr.crn <= $Rerank)
        |SELECT q_id, label, vec_id, round(cos, 4) cos, rank FROM (
        |  SELECT *, row_number() OVER (PARTITION BY q_id
        |    ORDER BY cos DESC, vec_id) rank FROM rer)
@@ -3842,7 +3618,7 @@ object Similarity {
        |  FROM shortr sr
        |  JOIN n cv ON cv.vec_id = sr.vec_id
        |  JOIN n qv ON qv.vec_id = sr.q_id
-       |  WHERE sr.crn <= $BinRerank)
+       |  WHERE sr.crn <= $Rerank)
        |SELECT q_id, label, vec_id, round(cos, 4) cos, rank FROM (
        |  SELECT *, row_number() OVER (PARTITION BY q_id
        |    ORDER BY cos DESC, vec_id) rank FROM rer)
@@ -4114,7 +3890,7 @@ object Similarity {
          |  round(iscore::DOUBLE * scale * scale, 4) cos_q, rank
          |FROM ranked WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin),
     // s17: s2's centroid assignment + the shared int8 chain + the
-    // integer shortlist (top-I8Rerank by BIGINT score, vec_id ties) +
+    // integer shortlist (top-Rerank by BIGINT score, vec_id ties) +
     // the exact re-rank — the SQL replay of probeIvfInt8's four stages.
     // s19 is the same body with the filter CTE + shortlist-stage
     // predicate (the s9/s14 parameterization pattern).
@@ -4150,7 +3926,7 @@ object Similarity {
          |    ORDER BY hamming, vec_id) srn FROM ham),
          |rer AS (SELECT q_id, vec_id, hamming,
          |    ${dotSql("qv", "tv")} / (qn * tn) cos
-         |  FROM short WHERE srn <= $BinRerank)
+         |  FROM short WHERE srn <= $Rerank)
          |SELECT q_id, vec_id, hamming, round(cos, 4) cos, rank FROM (
          |  SELECT *, row_number() OVER (PARTITION BY q_id
          |    ORDER BY cos DESC, vec_id) rank FROM rer)

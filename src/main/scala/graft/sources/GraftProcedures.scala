@@ -86,6 +86,12 @@ import graft.storage.GraftTable
   * table and return only the written row count. */
 private[sources] object GraftProcedures {
 
+  /** `ann_probe` serves the fp64 rung; `ann_probe_<rung>` each quantized
+    * rung of the index's rung table (`Similarity.RungNames`). */
+  private val AnnProbeRungs: Map[String, String] =
+    Map("ann_probe" -> "fp64") ++
+      graft.operators.Similarity.RungNames.map(r => s"ann_probe_$r" -> r)
+
   val Names: Seq[String] =
     Seq("compact", "compact_small", "compact_overlapping",
       "vacuum", "analyze", "analyze_sample",
@@ -96,17 +102,17 @@ private[sources] object GraftProcedures {
       // flagship dedup/decontaminate/ANN ops callable from SQL against
       // committed tables/indexes, like the reference's utility UDF
       // surface (cstore_fdw--1.7.sql:17-37)
-      "dedup_exact", "decontaminate", "ann_probe", "ann_drift",
+      "dedup_exact", "decontaminate", "ann_drift",
       "ann_rebuild", "dedup_spans", "contamination_report",
       "source_mix", "split_assign", "quality_votes", "dataset_card",
       "ngram_novelty", "quality_gate", "novelty_match", "threshold_gate",
-      "ann_probe_int8", "ann_probe_pq", "ann_probe_bin", "ann_verify",
+      "ann_verify",
       "ann_delete", "ann_build", "ann_quantize", "ann_append",
       "ann_stats", "ann_compact", "ann_drop", "pii_scrub", "lang_id",
       "phash_dedup", "audio_dedup", "phash_index", "phash_match",
       "audio_index", "audio_match", "phash_index_append",
       "audio_index_append", "video_dedup", "video_index", "video_match",
-      "video_index_append", "ann_vacuum")
+      "video_index_append", "ann_vacuum") ++ AnnProbeRungs.keys
 
   def load(ident: Identifier, tableDir: String => String): UnboundProcedure = {
     require(ident.namespace().isEmpty || ident.namespace().sameElements(Array("system")),
@@ -185,8 +191,7 @@ private[sources] object GraftProcedures {
               procName == "video_index_append")
             Array(ProcedureParameter.in("table", StringType).build(),
               ProcedureParameter.in("fingerprints", StringType).build())
-          else if (procName == "ann_probe" || procName == "ann_probe_int8" ||
-              procName == "ann_probe_pq" || procName == "ann_probe_bin") {
+          else if (AnnProbeRungs.contains(procName)) {
             // arity-overloaded: an optional 4th arg widens the probe to
             // each query's n nearest lists (the IVF recall/cost dial) —
             // CALL g.system.ann_probe('db.idx','db.q','db.out', 3)
@@ -274,9 +279,8 @@ private[sources] object GraftProcedures {
           val dir = tableDir(tableName)
           // index procedures address an INDEX ROOT (a directory of
           // graft tables: postings/centroids/...), not a table itself
-          val indexProc = procName == "ann_drift" || procName == "ann_probe" ||
-            procName == "ann_rebuild" || procName == "ann_probe_int8" ||
-            procName == "ann_probe_pq" || procName == "ann_probe_bin" ||
+          val indexProc = procName == "ann_drift" ||
+            AnnProbeRungs.contains(procName) || procName == "ann_rebuild" ||
             procName == "ann_verify" || procName == "ann_delete" ||
             procName == "ann_quantize" || procName == "ann_append" ||
             procName == "ann_stats" || procName == "ann_compact" ||
@@ -284,21 +288,8 @@ private[sources] object GraftProcedures {
           if (indexProc) {
             require(GraftTable.exists(s"$dir/postings"),
               s"no persisted ANN index at $tableName")
-            if (procName == "ann_probe_pq")
-              require(GraftTable.exists(s"$dir/codes") &&
-                  GraftTable.exists(s"$dir/codebook"),
-                s"index $tableName has no PQ codes/codebook " +
-                  "(build via ivfPqIndexDir)")
-            if (procName == "ann_probe_bin")
-              require(GraftTable.exists(s"$dir/codes_bin"),
-                s"index $tableName has no sign codes (build via binIndexDir)")
-            if (procName == "ann_probe_int8") {
-              require(GraftTable.exists(s"$dir/codes_i8"),
-                s"index $tableName has no int8 codes (build via int8IndexDir)")
-              require(GraftTable.exists(s"$dir/i8meta"),
-                s"index $tableName has int8 codes but no committed scale " +
-                  "(i8meta) — clone the pair together or rebuild via int8IndexDir")
-            }
+            AnnProbeRungs.get(procName).foreach(
+              graft.operators.Similarity.requireProbeRung(dir, _, tableName))
           } else require(GraftTable.exists(dir), s"no graft table $tableName")
           lazy val t = GraftTable.open(SparkSession.active, dir)
           /** Run a distributed operator, commit its result to a FRESH
@@ -385,36 +376,10 @@ private[sources] object GraftProcedures {
               override def rows(): Array[InternalRow] = rs
             }
           } else if (procName == "ann_verify") {
-            // cross-table desync audit over whichever quantized siblings
-            // the index root carries (codes = IVF-PQ, codes_i8 = int8);
-            // a bare IVF index (postings+centroids only) audits clean
-            val spark = SparkSession.active
-            // prefixes name the AUDIT, not a table (each audit also
-            // checks postings); when both audits run, the int8 pass
-            // drops its postings-duplicate line — the PQ pass already
-            // reported that (table-level) defect, and double-counting
-            // would make one defect read as two
-            val pqIssues =
-              if (GraftTable.exists(s"$dir/codes"))
-                graft.operators.Similarity.verifyIvfPqIndex(spark, dir)
-                  .map("pq: " + _)
-              else Seq.empty
-            val i8Issues =
-              if (GraftTable.exists(s"$dir/codes_i8")) {
-                val raw = graft.operators.Similarity.verifyInt8Index(spark, dir)
-                (if (pqIssues.nonEmpty || GraftTable.exists(s"$dir/codes"))
-                  raw.filterNot(_.contains("in postings ("))
-                else raw).map("int8: " + _)
-              } else Seq.empty
-            val binIssues =
-              if (GraftTable.exists(s"$dir/codes_bin")) {
-                val raw = graft.operators.Similarity.verifyBinIndex(spark, dir)
-                (if (GraftTable.exists(s"$dir/codes") ||
-                    GraftTable.exists(s"$dir/codes_i8"))
-                  raw.filterNot(_.contains("in postings ("))
-                else raw).map("bin: " + _)
-              } else Seq.empty
-            val issues = pqIssues ++ i8Issues ++ binIssues
+            // cross-table desync audit over every quantized rung the
+            // index root carries, prefixed by rung name (Similarity.verifyIndex)
+            val issues = graft.operators.Similarity
+              .verifyIndex(SparkSession.active, dir)
             val schema = StructType(Seq(
               StructField("metric", StringType, nullable = false),
               StructField("value", StringType, nullable = false)))
@@ -651,11 +616,10 @@ private[sources] object GraftProcedures {
               override def rows(): Array[InternalRow] = Array(row)
             }
           } else if (procName == "dedup_exact" || procName == "decontaminate" ||
-              procName == "ann_probe" || procName == "dedup_spans" ||
+              AnnProbeRungs.contains(procName) || procName == "dedup_spans" ||
               procName == "contamination_report" ||
               procName == "source_mix" || procName == "split_assign" ||
-              procName == "quality_votes" || procName == "ann_probe_int8" ||
-              procName == "ann_probe_pq" || procName == "ann_probe_bin" ||
+              procName == "quality_votes" ||
               procName == "dataset_card" || procName == "pii_scrub" ||
               procName == "lang_id" || procName == "phash_dedup" ||
               procName == "audio_dedup" || procName == "phash_index" ||
@@ -856,7 +820,7 @@ private[sources] object GraftProcedures {
                 ("contaminated_flagged",
                   writeResult(graft.operators.Sampling
                     .bloomDecontaminateCore(t.read(), ev), 2))
-              case "ann_probe" =>
+              case p if AnnProbeRungs.contains(p) =>
                 val qName = checkName(input.getUTF8String(1).toString)
                 val qDir = tableDir(qName)
                 require(GraftTable.exists(qDir), s"no graft table $qName")
@@ -864,38 +828,8 @@ private[sources] object GraftProcedures {
                 val nprobe = if (input.numFields >= 4) input.getInt(3) else 1
                 require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
                 ("results_written",
-                  writeResult(graft.operators.Similarity
-                    .probeIvfRaw(spark, dir, q, nprobe = nprobe), 2))
-              case "ann_probe_int8" =>
-                val qName = checkName(input.getUTF8String(1).toString)
-                val qDir = tableDir(qName)
-                require(GraftTable.exists(qDir), s"no graft table $qName")
-                val q = GraftTable.open(spark, qDir).read()
-                val nprobe = if (input.numFields >= 4) input.getInt(3) else 1
-                require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-                ("results_written",
-                  writeResult(graft.operators.Similarity
-                    .probeIvfInt8Raw(spark, dir, q, nprobe = nprobe), 2))
-              case "ann_probe_pq" =>
-                val qName = checkName(input.getUTF8String(1).toString)
-                val qDir = tableDir(qName)
-                require(GraftTable.exists(qDir), s"no graft table $qName")
-                val q = GraftTable.open(spark, qDir).read()
-                val nprobe = if (input.numFields >= 4) input.getInt(3) else 1
-                require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-                ("results_written",
-                  writeResult(graft.operators.Similarity
-                    .probeIvfPqRaw(spark, dir, q, nprobe = nprobe), 2))
-              case "ann_probe_bin" =>
-                val qName = checkName(input.getUTF8String(1).toString)
-                val qDir = tableDir(qName)
-                require(GraftTable.exists(qDir), s"no graft table $qName")
-                val q = GraftTable.open(spark, qDir).read()
-                val nprobe = if (input.numFields >= 4) input.getInt(3) else 1
-                require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-                ("results_written",
-                  writeResult(graft.operators.Similarity
-                    .probeIvfBinRaw(spark, dir, q, nprobe = nprobe), 2))
+                  writeResult(graft.operators.Similarity.probeRungRaw(
+                    spark, dir, AnnProbeRungs(p), q, nprobe), 2))
             }
             val schema = StructType(Seq(
               StructField("table", StringType, nullable = false),
