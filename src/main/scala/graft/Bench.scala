@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line for the driver (BENCH_r{N}.json).
   * Runs every SparkEntry query against SPARK_GRAFT_SF_DIR. A warm-up
   * query first absorbs one-time JVM/codegen/parquet-footer costs so the
@@ -124,19 +122,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.sources.GraftExtensions())
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.sessionConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Tables.session(cpus, fair = true)
 
     // Warm-up: exercise codegen, parquet reader, shuffle, joins once —
     // including the pipeline tables (documents/embeddings/events), whose
@@ -189,7 +176,7 @@ object Bench {
     // running it DURING the suite would contend with the measurement
     // itself.
     def calibParSpin(): Double = {
-      val n = cpus.toInt
+      val n = cpus
       val t0 = System.nanoTime()
       val threads = (0 until n).map { _ =>
         new Thread(() => {
@@ -696,7 +683,7 @@ object Bench {
       postSpin = calibPostSpin, postParSpin = calibPostParSpin,
       insuiteMedian = calibInsuite,
       certCpuPerWall = passCpu(bestIdx) / math.max(1e-9, total),
-      cpus = cpus.toInt)
+      cpus = cpus)
     // the sentinel series gets its OWN guard (VERDICT r16 #2):
     // window_suspect certifies the suite's best pass, but the
     // sentinels run last and a late-degrading window poisons exactly

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures the reference's published compression claims (BASELINE.md
   * rows 1–3, `README.md:21-46`) against graft tables on the round's
   * data: per table, raw uncompressed CSV bytes (the archival-data
@@ -25,14 +23,7 @@ object CompressionBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val tables = if (args.nonEmpty) args.toSeq else Seq("lineitem", "documents")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-compression-bench")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.sessionConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
 
     tables.foreach { table =>
       val raw = Tables.load(spark, sfDir, table)

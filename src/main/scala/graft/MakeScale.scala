@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize a FACTOR×-scaled copy of a testdata directory
-  * for scale-behavior runs (ProfHeavy at ~sf1 from sf0.1), preserving
+  * for scale-behavior runs (SCALE_r07.md's ~sf1 from sf0.1), preserving
   * per-replica workload density instead of planting artificial
   * cross-replica duplicates:
   *
@@ -37,11 +37,7 @@ object MakeScale {
     val Array(base, out, fs) = args
     val factor = fs.toInt
     require(factor >= 1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.sessionConfs).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session(32)
 
     val IdStride = 100000000L
 

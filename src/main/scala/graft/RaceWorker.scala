@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-JVM writer for the cross-process concurrency spec
   * (TwoProcessRaceSpec): the CAS commit protocol's correctness story is
   * "two UNSERIALIZED writers never lose a commit", proven in-JVM by the
@@ -18,13 +16,7 @@ object RaceWorker {
   def main(args: Array[String]): Unit = {
     val Array(loc, workerIdS, nAppendsS, rowsS) = args.take(4)
     val (workerId, nAppends, rows) = (workerIdS.toInt, nAppendsS.toInt, rowsS.toInt)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-race-worker-$workerId")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tables.session(2)
     import spark.implicits._
     try {
       val t = graft.storage.GraftTable.open(spark, loc)

@@ -35,8 +35,9 @@ object Tables {
     * round 17, guide §2.5 input skew): the bench inputs are each ONE
     * single-row-group parquet file, so every scan is one task and any
     * expensive per-row stage fused above it (tokenize/shingle/hash/
-    * minhash) runs SERIAL with the other cores idle — ProfJobs measured
-    * d6's probe stage as one task burning 1.63 s CPU, 66 % of its wall.
+    * minhash) runs SERIAL with the other cores idle — OPTIMIZATION_r17.md
+    * measured d6's probe stage as one task burning 1.63 s CPU, 66 % of
+    * its wall.
     * The exchange is hash-partitioned on a data column (deterministic
     * under task retry, unlike round-robin) and moves only the slim
     * pre-explosion rows. At 100 TB inputs arrive as many files/row
@@ -67,8 +68,8 @@ object Tables {
     // several codegen units each (>1000 distinct sources), so the cache
     // thrashed completely and EVERY pass re-ran janino and re-warmed
     // fresh classes from the interpreter. Measured A/B on the full
-    // sequential sweep (ProfCpu, steady-state pass): wall 89.7 → 65.3 s,
-    // process-CPU 314 → 189 s, task-CPU 161 → 79 s. 4096 covers the
+    // sequential sweep (OPTIMIZATION_r18.md, steady-state pass): wall
+    // 89.7 → 65.3 s, process-CPU 314 → 189 s, task-CPU 161 → 79 s. 4096 covers the
     // suite's working set with headroom; the entries are code strings +
     // class references (MBs, not GBs). Scale-neutral: any long-lived
     // serving process with a wide query surface wants its compiled
@@ -78,7 +79,7 @@ object Tables {
     // reduce-partition counts ≤ 200 Spark picks the bypass-merge writer,
     // which opens one stream+temp file PER REDUCE PARTITION per map task
     // — measured ~130 ms of task CPU per map task at 32 partitions on
-    // this box (ProfTaskFloor; ~4 ms/stream), INDEPENDENT of data size,
+    // this box (OPTIMIZATION_r17.md; ~4 ms/stream), INDEPENDENT of data size,
     // and a 195-query suite of small keyed shuffles pays it tens of
     // thousands of times. Forcing the serialized sort writer (the same
     // writer every >200-partition at-scale shuffle uses — production
@@ -100,6 +101,27 @@ object Tables {
     // all — its file set and sizes come from the manifest — so this
     // only governs the utility read paths.
     "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "512")
+
+  /** The one way graft builds a session — the single point where the
+    * engine plugs into Spark, as cstore_fdw plugs into PostgreSQL's
+    * executor through its FDW handler: the graft extensions, a local
+    * master of `cpus` cores with as many shuffle partitions, a UTC
+    * session clock, no UI, [[sessionConfs]], and WARN logging. `fair`
+    * selects the FAIR scheduler, which entry points that run queries
+    * concurrently need so each query thread gets its own pool. */
+  def session(cpus: Int, fair: Boolean = false): SparkSession = {
+    val b = SparkSession.builder()
+      .withExtensions(new graft.sources.GraftExtensions())
+      .master(s"local[$cpus]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(sessionConfs)
+    val s = (if (fair) b.config("spark.scheduler.mode", "FAIR") else b).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** The events table's `ts` physical encoding is the data generator's
     * choice, not ours, and it has changed across regenerations — the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,17 +11,8 @@ object Verify {
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.sources.GraftExtensions())
-      .master(s"local[$cpus]")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.sessionConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, fair = true)
     new java.io.File(outDir).mkdirs()
     // Queries are independent; run a few concurrently (same pattern as
     // Bench) so the correctness dump isn't serialized on small jobs.

@@ -578,8 +578,9 @@ object Dedup {
     // input skew): at bench scale the embeddings table is ONE parquet
     // file — one scan task — so the whole probe-side chain above it
     // (18×SignKey Generate → broadcast-hash-join probe emitting the
-    // ~n²-dense candidate pairs → partial distinct) ran SERIAL: ProfJobs
-    // measured ONE task burning 1.63 s CPU, 66 % of the query's wall.
+    // ~n²-dense candidate pairs → partial distinct) ran SERIAL:
+    // OPTIMIZATION_r17.md measured ONE task burning 1.63 s CPU, 66 % of
+    // the query's wall.
     // The exchange moves one ~540-byte row per vector, hash-partitioned
     // on vec_id (deterministic under retry). At 100 TB embeddings arrive
     // as many files and the scan parallelizes on its own.
@@ -656,8 +657,8 @@ object Dedup {
   def d16IncrementalEmbed(s: SparkSession, dir: String): DataFrame = {
     val (bands, bits) = (D6Bands, D6Bits)
     // same single-file fan-out as d6 (guide §2.5): banding + the bloom
-    // prefilter otherwise run on the lone scan task (ProfJobs: three
-    // ~0.25 s single-task jobs)
+    // prefilter otherwise run on the lone scan task (OPTIMIZATION_r17.md:
+    // three ~0.25 s single-task jobs)
     val e = Similarity.normalized(Tables.load(s, dir, "embeddings"))
       .select(col("vec_id"), col("v"))
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
@@ -1221,8 +1222,8 @@ object Dedup {
     * fingerprint (optimization round 17): both are pure functions of the
     * weighted postings — the TF-IDF index artifacts, the d12
     * indexPostings discipline — and recomputing them per invocation was
-    * the bulk of d13's steady-state CPU (ProfD13: posting lists ~10
-    * CPU-s + norms ~9 CPU-s of the ~24 CPU-s warm re-run; the pair
+    * the bulk of d13's steady-state CPU (OPTIMIZATION_r17.md: posting
+    * lists ~10 CPU-s + norms ~9 CPU-s of the ~24 CPU-s warm re-run; the pair
     * expansion and the DECIMAL dot aggregation are the operator's real
     * per-run work and still run per call). */
   private val d13PostingCache = new PersistedLru(2)

@@ -141,8 +141,8 @@ object Pipeline {
     // defaultParallelism floor for plain shuffles, so it never folded
     // them). Every later action then re-paid the file count: per-file
     // footer harvest at commit, a 33-path listing JOB in the read-back
-    // (ProfJobs: 0.22 s), 32-split scans of a few thousand rows. The
-    // rebalance hint is the scale-correct form — AQE sizes the write to
+    // (OPTIMIZATION_r18.md: 0.22 s), 32-split scans of a few thousand
+    // rows. The rebalance hint is the scale-correct form — AQE sizes the write to
     // advisoryPartitionSizeInBytes, so the same plan writes ~one file
     // here and properly-sized files at the 100 TB design point. Rows
     // are identical; only the row→file assignment changes.
@@ -156,7 +156,7 @@ object Pipeline {
     // materializes the window shuffle once AND truncates the curate()
     // lineage, so the three downstream actions (sketch build, anti-join
     // append, read-back) re-analyze a scan, not the full window+text
-    // expression tree (~165 ms of Catalyst per action, ProfJobs gaps).
+    // expression tree (~165 ms of Catalyst per action, OPTIMIZATION_r18.md).
     // Assumes local mode: the checkpointed blocks live in the executors'
     // block managers, are freed only when the ContextCleaner collects
     // the Dataset (no unpersist, also on exceptions), and the truncated

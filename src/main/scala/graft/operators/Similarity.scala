@@ -1914,8 +1914,15 @@ object Similarity {
     val tomb = new org.apache.hadoop.fs.Path(marker.getParent,
       s".${marker.getName}_tomb_${java.util.UUID.randomUUID().toString.take(8)}")
     val renamed = try fs.rename(marker, tomb) catch { case _: Exception => false }
-    if (!renamed) false // another reclaimer (or the owner's release) won
-    else if (readMarkerContent(fs, tomb) == observedContent) {
+    if (!renamed) {
+      // another reclaimer (or the owner's release) won. A copy-fallback
+      // rename (RawLocalFileSystem when File.renameTo fails) can still
+      // have written the tombstone before its source delete failed; the
+      // UUID-named path is this call's alone, so drop it and its .crc
+      Seq(tomb, new org.apache.hadoop.fs.Path(tomb.getParent, s".${tomb.getName}.crc"))
+        .foreach(p => try fs.delete(p, false) catch { case _: Exception => () })
+      false
+    } else if (readMarkerContent(fs, tomb) == observedContent) {
       try fs.delete(tomb, false) catch { case _: Exception => () }
       true
     } else {

@@ -19,8 +19,8 @@ import graft.storage.GraftTable
   *    into range predicates ([[GraftTruncRangeRule]]) so the monthly/
   *    yearly rollup filter reaches zone maps and row-group stats.
   *
-  * Installed by every engine session (Verify/Bench/Smoke/SparkSpec via
-  * `.withExtensions`, or `spark.sql.extensions=graft.sources.GraftExtensions`).
+  * Installed by every engine session (`graft.Tables.session`, or
+  * `spark.sql.extensions=graft.sources.GraftExtensions`).
   *
   * {{{
   *   spark.sql.extensions = graft.sources.GraftExtensions

@@ -2362,8 +2362,9 @@ final class GraftTable private (
         // (optimization round 18): per (key, any-null-key) group, tally
         // target/source/delete multiplicities, then fold. SQL-equality
         // semantics are preserved exactly — null-key target rows match
-        // nothing (!__nk guards updated; delete keys are non-null by
-        // construction), null-key source rows always insert.
+        // nothing (!__nk guards updated; delete keys are non-null
+        // because `d0`'s `na.drop(keyCols)` drops null-key delete rows),
+        // null-key source rows always insert.
         val nk2 = keyCols.map(col(_).isNull).reduce(_ || _)
         val tFlags = t.select((keyCols.map(col) :+ lit(1L).as("__t") :+
           lit(0L).as("__s") :+ lit(0L).as("__d")): _*)

@@ -240,52 +240,56 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("p3: the store is in the loop - two commits, append rewrites nothing, batch is fingerprint-deduped") {
-    val dir = sf("sf0.001")
-    val before = p3StoreDirs().toSet
-    val out = Pipeline.p3IncrementalRefresh(spark, dir).collect()
-    assert(out.nonEmpty)
-    // optimization round 18: both appends REBALANCE before the write,
-    // so the store must NOT carry one near-empty file per shuffle
-    // partition (32 at the session default) — at this scale each
-    // append coalesces to ~one sized file. Pin the new write shape on
-    // the entry's own store (the freshest p3-* dir under the scratch
-    // root this call created).
-    val created = (p3StoreDirs().toSet -- before).toSeq
-    assert(created.nonEmpty, "the entry must create its store under the scratch root")
-    // the rebalance hint sizes files only under AQE; without it the
-    // hint is a plain shuffle at spark.sql.shuffle.partitions
-    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true",
-      "spark.sql.adaptive.enabled must be true: it is the precondition of the rebalance file-count pin below")
-    created.foreach { loc =>
-      val st = graft.storage.GraftTable.open(spark, loc)
-      assert(st.committedFiles.size <= 4,
-        s"rebalanced appends must write few sized files, got ${st.committedFiles.size}")
+    // a private scratch root: the p3-* directories listed below are then
+    // exactly the stores this test opened, not another spec's in this JVM
+    withConf("spark.graft.scratchDir", tmpDir("p3-scratch")) {
+      val dir = sf("sf0.001")
+      val before = p3StoreDirs().toSet
+      val out = Pipeline.p3IncrementalRefresh(spark, dir).collect()
+      assert(out.nonEmpty)
+      // optimization round 18: both appends REBALANCE before the write,
+      // so the store must NOT carry one near-empty file per shuffle
+      // partition (32 at the session default) — at this scale each
+      // append coalesces to ~one sized file. Pin the new write shape on
+      // the entry's own store (the freshest p3-* dir under the scratch
+      // root this call created).
+      val created = (p3StoreDirs().toSet -- before).toSeq
+      assert(created.nonEmpty, "the entry must create its store under the scratch root")
+      // the rebalance hint sizes files only under AQE; without it the
+      // hint is a plain shuffle at spark.sql.shuffle.partitions
+      assert(spark.conf.get("spark.sql.adaptive.enabled") === "true",
+        "spark.sql.adaptive.enabled must be true: it is the precondition of the rebalance file-count pin below")
+      created.foreach { loc =>
+        val st = graft.storage.GraftTable.open(spark, loc)
+        assert(st.committedFiles.size <= 4,
+          s"rebalanced appends must write few sized files, got ${st.committedFiles.size}")
+      }
+      // ids are unique (both dedup levels held) and the 80/20 split is
+      // respected: every id is a base or batch id
+      val ids = out.map(_.getLong(0)).toSeq
+      assert(ids.distinct.length === ids.length)
+      // drive the same pipeline by hand to inspect the STORE's commit
+      // mechanics (the entry uses a fresh temp store per call, so probe a
+      // fresh one through the same public surface)
+      import graft.storage.GraftTable
+      import org.apache.spark.sql.functions.md5
+      val docs = Tables.load(spark, dir, "documents").select(
+        col("doc_id").cast("long").as("doc_id"), col("text"),
+        col("source"), col("n_chars").cast("long").as("n_chars"))
+      val base = docs.filter(col("doc_id") % 5 =!= 4).limit(20)
+      val loc = tmpDir("p3-probe") + "/t"
+      val t = GraftTable.create(spark, loc, base.schema)
+      t.append(base)
+      val filesAfterBase = GraftTable.open(spark, loc).committedFiles.toSet
+      val vAfterBase = GraftTable.open(spark, loc).version
+      GraftTable.open(spark, loc).append(docs.filter(col("doc_id") % 5 === 4).limit(5))
+      val t2 = GraftTable.open(spark, loc)
+      assert(filesAfterBase.subsetOf(t2.committedFiles.toSet),
+        "the incremental append must not rewrite the base commit's files")
+      assert(t2.version === vAfterBase + 1, "exactly one CAS commit per refresh")
+      assert(t2.verify() === Seq.empty)
+      GraftTable.drop(loc)
     }
-    // ids are unique (both dedup levels held) and the 80/20 split is
-    // respected: every id is a base or batch id
-    val ids = out.map(_.getLong(0)).toSeq
-    assert(ids.distinct.length === ids.length)
-    // drive the same pipeline by hand to inspect the STORE's commit
-    // mechanics (the entry uses a fresh temp store per call, so probe a
-    // fresh one through the same public surface)
-    import graft.storage.GraftTable
-    import org.apache.spark.sql.functions.md5
-    val docs = Tables.load(spark, dir, "documents").select(
-      col("doc_id").cast("long").as("doc_id"), col("text"),
-      col("source"), col("n_chars").cast("long").as("n_chars"))
-    val base = docs.filter(col("doc_id") % 5 =!= 4).limit(20)
-    val loc = tmpDir("p3-probe") + "/t"
-    val t = GraftTable.create(spark, loc, base.schema)
-    t.append(base)
-    val filesAfterBase = GraftTable.open(spark, loc).committedFiles.toSet
-    val vAfterBase = GraftTable.open(spark, loc).version
-    GraftTable.open(spark, loc).append(docs.filter(col("doc_id") % 5 === 4).limit(5))
-    val t2 = GraftTable.open(spark, loc)
-    assert(filesAfterBase.subsetOf(t2.committedFiles.toSet),
-      "the incremental append must not rewrite the base commit's files")
-    assert(t2.version === vAfterBase + 1, "exactly one CAS commit per refresh")
-    assert(t2.verify() === Seq.empty)
-    GraftTable.drop(loc)
   }
 
   test("p3: the store side of the dedup join is Bloom-pruned, never broadcast-hinted") {
