@@ -124,6 +124,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Tables.session(cpus, fair = true)
+    // one FAIR pool per query plus the calibration probe's (see runSuite)
+    org.apache.spark.sql.graft.Bridge.declarePools(spark.sparkContext,
+      SparkEntry.queries.keys ++ Seq("calib"))
 
     // Warm-up: exercise codegen, parquet reader, shuffle, joins once —
     // including the pipeline tables (documents/embeddings/events), whose

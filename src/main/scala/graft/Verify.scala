@@ -13,6 +13,8 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = Tables.session(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, fair = true)
+    org.apache.spark.sql.graft.Bridge.declarePools(spark.sparkContext,
+      SparkEntry.queries.keys)
     new java.io.File(outDir).mkdirs()
     // Queries are independent; run a few concurrently (same pattern as
     // Bench) so the correctness dump isn't serialized on small jobs.

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
+  LongType, MapType, StructField, StructType}
 
 import graft.Tables
 
@@ -14,7 +16,7 @@ import graft.Tables
   *  - s2: IVF-style ANN — coarse quantizer from per-label centroids;
   *    queries probe only their nearest centroid's partition. This is the
   *    100 TB path: candidate scan shrinks by the partition fan-out, and
-  *    the centroid table is broadcast (tiny).
+  *    the centroid table is collected (tiny) and assigned on the driver.
   *
   * All float math is widened to double before any arithmetic, and every
   * reduction is a sequential left fold, so the DuckDB oracles reproduce
@@ -120,28 +122,22 @@ object Similarity {
 
   /** s2: IVF ANN — assign each query to its nearest centroid, then search
     * only that partition. */
-  def s2AnnIvf(s: SparkSession, dir: String): DataFrame = {
+  def s2AnnIvf(s: SparkSession, dir: String): DataFrame = inMemoryIvf(s, dir, None)
+
+  /** s2's and s11's body: the quantizer recomputed from the corpus
+    * ([[centroids]]), the ≤5 queries assigned to it on the driver by the
+    * persisted probes' own [[driverStep]] — one tie-break to rule them
+    * all — and the corpus, optionally semi-joined to `filterIds`, scored
+    * as [[probeIvf]] scores the probed lists. */
+  private def inMemoryIvf(s: SparkSession, dir: String,
+      filterIds: Option[DataFrame]): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
     val e = normalized(emb)
-    val cent = centroids(emb)
     val q = e.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val wAssign = Window.partitionBy("q_id").orderBy(col("ccos").desc, col("label"))
-    val assigned = q.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("qv"), col("qn"), col("label"),
-        cosine(col("qv"), col("cv"), col("qn"), col("cnrm")).as("ccos"))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("q_id"), col("qv"), col("qn"), col("label"))
-    val wRank = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    e.join(broadcast(assigned),
-      e("label") === assigned("label") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), e("label"), col("vec_id"),
-        cosine(col("qv"), col("v"), col("qn"), col("nrm")).as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= IvfTopK)
-      .select(col("q_id"), col("label"), col("vec_id"),
-        round(col("cos"), 4).as("cos"), col("rank"))
+    val step = driverStep(s, "in-memory", q, centroids(emb), 1)
+    topIvf(scorePairs(filterIds.fold(e)(f =>
+      e.join(f, col("vec_id") === col("id"), "left_semi")), step))
       .orderBy("q_id", "rank")
   }
 
@@ -366,9 +362,9 @@ object Similarity {
 
   /** s7: ANN served FROM the persisted index — same quantizer, same
     * result as s2 (spec-pinned equality; the driver hash-checks the
-    * shared oracle), but the probe is a STORAGE operation: the ≤5 query
-    * assignments resolve against the broadcast centroid table, their
-    * label set is collected (bounded by the query count), and the
+    * shared oracle), but the probe is a STORAGE operation: the ≤5
+    * queries and the committed centroid table are collected and
+    * assigned on the driver (bounded by the query count), and the
     * postings scan reads ONLY the files whose zone maps cover probed
     * lists — at 10 lists the candidate read is ~1/10 of the corpus
     * before any row is deserialized, and the ratio scales with nlist. */
@@ -400,12 +396,11 @@ object Similarity {
   }
 
   /** Score one bounded query batch — (q_id, qv: array<double>, qn) —
-    * against the persisted index: assignment vs the broadcast committed
-    * centroids, then top-k over ONLY the probed lists' zone-map-pruned
-    * files. The collect is bounded by the batch's query count (one list
-    * per query). Shared by [[s7AnnPersisted]] and the continuous twin
-    * ([[graft.streaming.AnnStream]]), so the two are the same operator
-    * by construction.
+    * against the persisted index: the batch's nearest-list assignment
+    * on the driver ([[driverStep]]), then top-k over ONLY the probed
+    * lists' zone-map-pruned files. Shared by [[s7AnnPersisted]] and the
+    * continuous twin ([[graft.streaming.AnnStream]]), so the two are the
+    * same operator by construction.
     *
     * `filterIds` (one `id` column) scopes the search to a metadata
     * id-universe — the production RAG shape ("top-k among `lang='en'`
@@ -423,10 +418,14 @@ object Similarity {
     * production deployment tunes instead of rebuilding the index. */
   private[graft] def probeIvf(s: SparkSession, root: String,
       q: DataFrame, filterIds: Option[DataFrame] = None,
-      nprobe: Int = 1): DataFrame = {
+      nprobe: Int = 1): DataFrame =
+    topIvf(probeCandidatesIvf(s, root, q, filterIds, nprobe))
+
+  /** The top [[IvfTopK]] of scored pairs per query by cosine, then
+    * vec_id: (q_id, label, vec_id, cos rounded to 4, rank). */
+  private def topIvf(pairs: DataFrame): DataFrame = {
     val wRank = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    probeCandidatesIvf(s, root, q, filterIds, nprobe)
-      .withColumn("rank", row_number().over(wRank).cast("long"))
+    pairs.withColumn("rank", row_number().over(wRank).cast("long"))
       .filter(col("rank") <= IvfTopK)
       .select(col("q_id"), col("label"), col("vec_id"),
         round(col("cos"), 4).as("cos"), col("rank"))
@@ -437,39 +436,33 @@ object Similarity {
     * pair inside the probed lists' zone-map-pruned files — UNROUNDED
     * cosine, candidate vector + norm carried — so consumers can top-k
     * rank or MMR-diversify over a wider pool without re-reading the
-    * index. Cost is the probe's scan cost; ranking/rounding stays in
-    * the consumers. */
+    * index. The queries and the committed centroids are collected and
+    * assigned on the driver ([[driverStep]]). Cost is the probe's scan
+    * cost; ranking/rounding stays in the consumers. */
   private[graft] def probeCandidatesIvf(s: SparkSession, root: String,
       q: DataFrame, filterIds: Option[DataFrame] = None,
       nprobe: Int = 1): DataFrame = {
     val postT = graft.storage.GraftTable.open(s, s"$root/postings")
-    val cent = graft.storage.GraftTable.open(s, s"$root/centroids").read()
-    val assigned = assignQueryBatch(q, cent, nprobe)
-    // bounded collect: ≤ nprobe probed lists per query
-    val probes = assigned.select("alabel").distinct().collect().map(_.get(0))
-    if (probes.isEmpty) {
-      val base = annResultSchema(q, cent, postT)
-      val candSchema = org.apache.spark.sql.types.StructType(
-        base.take(4) ++ Seq( // q_id, label, vec_id, cos
-          org.apache.spark.sql.types.StructField("v",
-            postT.readSchema()("v").dataType),
-          org.apache.spark.sql.types.StructField("nrm",
-            org.apache.spark.sql.types.DoubleType)))
-      return s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], candSchema)
-    }
+    val step = driverStep(s, "fp64", q,
+      graft.storage.GraftTable.open(s, s"$root/centroids").read(), nprobe)
     // zone-map-pruned scan NET of deletion vectors (readPruned) — an
     // erased vector must not resurrect into a probe
     val scan =
-      postT.readPruned(Seq(org.apache.spark.sql.sources.In("label", probes)))
-    val post = filterIds.fold(scan)(f =>
-      scan.join(f.select(col("id")), col("vec_id") === col("id"), "left_semi"))
-    post.join(broadcast(assigned),
-      col("label") === col("alabel") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("label"), col("vec_id"),
-        cosine(col("qv"), col("v"), col("qn"), col("nrm")).as("cos"),
-        col("v"), col("nrm"))
+      postT.readPruned(Seq(org.apache.spark.sql.sources.In("label", step.probes)))
+    scorePairs(filterIds.fold(scan)(f =>
+      scan.join(f.select(col("id")), col("vec_id") === col("id"), "left_semi")), step)
   }
+
+  /** `(label, vec_id, v, nrm)` rows paired with the queries assigned to
+    * their list ([[pairQueries]]) and scored: (q_id, label, vec_id,
+    * cos, v, nrm), a query's own id excluded. */
+  private def scorePairs(post: DataFrame, step: DriverStep): DataFrame =
+    pairQueries(post, "label", step.labelType, step.byLabel,
+        step.vectorRows, step.vectorType)
+      .filter(col("vec_id") =!= col("qq.q_id"))
+      .select(col("qq.q_id").as("q_id"), col("label"), col("vec_id"),
+        cosine(col("qq.qv"), col("v"), col("qq.qn"), col("nrm")).as("cos"),
+        col("v"), col("nrm"))
 
   /** `(vec_id, embedding)` → `(q_id, qv, qn)`: the ONE query
     * normalization every raw-query consumer uses (float embedding cast
@@ -559,40 +552,144 @@ object Similarity {
     else onProbeSession(s, rawQueries, None)(
       probeRung(_, root, rungNamed(rung), _, _, nprobe))
 
-  /** Nearest-committed-centroid assignment of a bounded QUERY batch:
-    * (q_id, qv, qn, alabel) — the shared first step of the s7 and s9
-    * probes (fixing a tie-break or rename here fixes both). `nprobe > 1`
-    * emits one row per (query, probed list) — the standard IVF recall
-    * knob: each query searches its `nprobe` NEAREST lists instead of
-    * only the closest, and the candidate union converges to the exact
-    * scan as nprobe → nlist. Candidates never duplicate across probes
-    * because the lists partition the corpus. */
-  private def assignQueryBatch(q: DataFrame, cent: DataFrame,
-      nprobe: Int = 1): DataFrame = {
-    val wAssign = Window.partitionBy("q_id").orderBy(col("ccos").desc, col("clabel"))
-    q.crossJoin(broadcast(cent.withColumnRenamed("label", "clabel")))
-      .select(col("q_id"), col("qv"), col("qn"), col("clabel"),
-        cosine(col("qv"), col("cv"), col("qn"), col("cnrm")).as("ccos"))
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") <= nprobe)
-      .select(col("q_id"), col("qv"), col("qn"), col("clabel").as("alabel"))
+  // -- the driver step of the index probes ------------------------------
+
+  /** One collected vector with its key (a query's id, a list's label —
+    * the frame's own value) and norm. */
+  private[operators] final case class Vec(key: Any, v: Array[Double], n: Double)
+
+  /** `(key, array<double>, norm)` rows as [[Vec]]s; a null vector,
+    * element or norm refuses. */
+  private[operators] def vecsOf(rows: Array[Row]): Array[Vec] =
+    rows.map { r =>
+      require(!r.isNullAt(1) && !r.isNullAt(2), s"vector ${r.get(0)} or its norm is null")
+      Vec(r.get(0), r.getSeq[Any](1).map { x =>
+        require(x != null, s"vector ${r.get(0)} has a null element")
+        x.asInstanceOf[Double]
+      }.toArray, r.getDouble(2))
+    }
+
+  /** The nearest-`nprobe` committed lists of every query, on the
+    * driver: `(query index, label)` pairs, ordered per query by centroid
+    * cosine descending, then label — the tie-break of a `row_number()`
+    * window over the pairs. The cosine is [[cosine]]'s arithmetic
+    * (`DotProduct.dot`, the codegen loop's own fold, over `qn · cnrm`),
+    * so every score, and so every tie, is the plan's bit for bit.
+    * `nprobe > 1` is the standard IVF recall knob: the candidate union
+    * converges to the exact scan as nprobe → nlist. Candidates never
+    * duplicate across probes because the lists partition the corpus.
+    * A query whose dimension differs from the centroids' refuses. */
+  private[operators] def assignNearest(queries: Array[Vec], cents: Array[Vec],
+      labelType: DataType, nprobe: Int): Array[(Int, Any)] = {
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(labelType)
+    val labelOrder = org.apache.spark.sql.catalyst.util.TypeUtils
+      .getInterpretedOrdering(labelType)
+    val keys = cents.map(c => toCatalyst(c.key))
+    queries.indices.toArray.flatMap { i =>
+      val q = queries(i)
+      val cos = cents.map { c =>
+        require(q.v.length == c.v.length,
+          s"query ${q.key} has ${q.v.length} dimensions; the index has ${c.v.length}")
+        graft.functions.DotProduct.dot(q.v, c.v) / (q.n * c.n)
+      }
+      // SQL's orders: NaN above every number, a null label first
+      cents.indices.sortWith { (a, b) =>
+        val byCos = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+          .compareDoubles(cos(b), cos(a))
+        if (byCos != 0) byCos < 0
+        else if (keys(a) == null) keys(b) != null
+        else keys(b) != null && labelOrder.lt(keys(a), keys(b))
+      }.take(nprobe).map(j => (i, cents(j).key))
+    }
   }
 
-  /** The (q_id, label, vec_id, cos, rank) shape every persisted-index
-    * probe returns — built once so the s7/s9 empty-result paths cannot
-    * drift from the scored paths. */
-  private def annResultSchema(q: DataFrame, cent: DataFrame,
-      postT: graft.storage.GraftTable): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("q_id", q.schema("q_id").dataType),
-      org.apache.spark.sql.types.StructField("label",
-        cent.schema("label").dataType),
-      org.apache.spark.sql.types.StructField("vec_id",
-        postT.readSchema()("vec_id").dataType),
-      org.apache.spark.sql.types.StructField("cos",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.LongType)))
+  /** What a probe's driver step holds: the batch's queries, their
+    * nearest-list assignment, the schema types the literals carry them
+    * in, and the rows of the step's further inputs. */
+  private final case class DriverStep(queries: Array[Vec],
+      assigned: Array[(Int, Any)], qidField: StructField, labelType: DataType,
+      inputs: Seq[Array[Row]]) {
+    /** The probed labels (a null label matches no row). */
+    def probes: Array[Any] = assigned.map(_._2).filter(_ != null).distinct
+
+    /** Probed label → the indices of the queries probing it. */
+    def byLabel: Map[Any, Seq[Int]] =
+      assigned.toSeq.filter(_._2 != null).groupBy(_._2)
+        .map { case (l, qs) => l -> qs.map(_._1) }
+
+    /** Each query's `(q_id, qv, qn)`, of struct type [[vectorType]]. */
+    def vectorRows: Seq[Row] = queries.toSeq.map(q => Row(q.key, q.v.toSeq, q.n))
+
+    def vectorType: StructType = StructType(Seq(qidField,
+      StructField("qv", ArrayType(DoubleType, containsNull = false), nullable = false),
+      StructField("qn", DoubleType, nullable = false)))
+  }
+
+  /** The driver step of every index probe: collect the query batch, the
+    * committed centroids (`cent`, `(label, cv, cnrm)` rows) and any
+    * further bounded `inputs` (a rung's parameter table) in ONE job,
+    * described `ann_probe <rung>: inputs`, and assign the batch to its
+    * nearest lists on the driver ([[assignNearest]]). */
+  private def driverStep(s: SparkSession, rung: String, q: DataFrame,
+      cent: DataFrame, nprobe: Int, inputs: Seq[DataFrame] = Nil): DriverStep = {
+    val rows = tagged(s, s"ann_probe $rung: inputs")(collectAll(
+      q.select(col("q_id"), col("qv"), col("qn")) +:
+        cent.select(col("label"), col("cv"), col("cnrm")) +: inputs))
+    val (queries, cents) = (vecsOf(rows(0)), vecsOf(rows(1)))
+    val labelType = cent.schema("label").dataType
+    DriverStep(queries, assignNearest(queries, cents, labelType, nprobe),
+      q.schema("q_id"), labelType, rows.drop(2))
+  }
+
+  /** The rows of several bounded frames from ONE job: frame i becomes
+    * struct column i of a union, null in the other frames' rows. Each
+    * separate collect would pay its own plan-and-run round on the
+    * driver, which costs far more than these few KB of rows. */
+  private def collectAll(frames: Seq[DataFrame]): Seq[Array[Row]] = {
+    val types = frames.map(_.schema)
+    val rows = frames.zipWithIndex.map { case (f, i) =>
+      f.select(types.indices.map(j => (if (j == i) struct(f.columns.map(col).toIndexedSeq: _*)
+        else lit(null).cast(types(j))).as(s"f$j")): _*)
+    }.reduce(_ union _).collect()
+    frames.indices.map(i => rows.filter(!_.isNullAt(i)).map(_.getStruct(i)))
+  }
+
+  /** `body`'s jobs described as `what` in the Spark UI and event log; the
+    * caller's own description comes back afterwards. The job group is
+    * left alone, so a caller's group still holds every job. */
+  private def tagged[T](s: SparkSession, what: String)(body: => T): T = {
+    val sc = s.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setLocalProperty("spark.job.description", caller)
+  }
+
+  /** A driver value as a Catalyst literal of type `t`. Array, map and
+    * struct literals reach generated code by reference, so a plan built
+    * from them compiles to the same classes whatever the batch's values
+    * — and, unlike a local relation, they plan no broadcast job. */
+  private def driverLit(v: Any, t: DataType): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(v, t))
+
+  /** Each row of `df` paired with the driver rows its `key` column maps
+    * to, in the struct column `qq`: `rows` (of struct type `rowType`)
+    * enter the plan as one array literal and `byKey` (key → indices into
+    * `rows`) as one map literal, so a row is carried — and rendered into
+    * every plan description — once however many keys name it. A row of
+    * `df` whose key has no entry (a file straddling two lists, a null
+    * key) pairs with nothing and drops out; with no entry at all (an
+    * empty batch, an empty shortlist) `df` is not read — an empty IN
+    * prunes no file. */
+  private def pairQueries(df: DataFrame, key: String, keyType: DataType,
+      byKey: Map[Any, Seq[Int]], rows: Seq[Row], rowType: StructType): DataFrame = {
+    val idx = driverLit(byKey, MapType(keyType, ArrayType(IntegerType, containsNull = false)))
+    val paired = df.withColumn("qq", explode(element_at(idx, col(key))))
+      .withColumn("qq", element_at(driverLit(rows, ArrayType(rowType, containsNull = false)),
+        col("qq") + 1))
+    if (byKey.isEmpty) paired.limit(0) else paired
+  }
 
   // -- s3: sign-random-projection LSH buckets ---------------------------
 
@@ -746,9 +843,9 @@ object Similarity {
 
   // -- s5: product-quantization ANN -------------------------------------
 
-  private val PqM = 8 // subspaces
+  private[operators] val PqM = 8 // subspaces
   private val PqSub = 8 // dims per subspace (PqM * PqSub = 64)
-  private val PqK = 16 // codes per subspace
+  private[operators] val PqK = 16 // codes per subspace
   private val PqTopK = 10
 
   /** s5: product-quantization ANN — the memory story for 100 TB ANN: the
@@ -845,13 +942,42 @@ object Similarity {
     * integer micro-units (the 8-way per-candidate sum is then exact
     * under any aggregation order). (q_id, qm, qcid, pdq) — PqM × PqK
     * rows per query; always broadcast. */
-  private def pqQueryTable(q: DataFrame, codebook: DataFrame): DataFrame = {
+  private[operators] def pqQueryTable(q: DataFrame, codebook: DataFrame): DataFrame = {
     val dot = graft.functions.DotProduct.dotFast _
     val qv = q.select(col("q_id").as("vec_id"), col("qv").as("v"))
     pqSubspaces(qv).withColumn("vvm", dot(col("vm"), col("vm")))
       .join(broadcast(codebook), "m")
       .select(col("vec_id").as("q_id"), col("m").as("qm"), col("cid").as("qcid"),
         floor(pqDist * 1e6).cast("long").as("pdq"))
+  }
+
+  /** [[pqQueryTable]] on the driver: the committed codebook's `(m, cid,
+    * cv, cc)` rows → each query vector's ADC lookup table, PqM × PqK
+    * entries row-major by sub-space (entry `m·PqK + cid` is
+    * floor(pqDist × 1e6), folded with `DotProduct.dot`, the codegen
+    * loop's own order, so every entry is the plan's bit for bit), null
+    * where the codebook has no centroid. Duplicate codebook rows add up,
+    * as a join to them would. */
+  private[operators] def pqLut(codebook: Array[Row])
+      : Array[Double] => Array[java.lang.Long] = {
+    val dot = graft.functions.DotProduct.dot _
+    val cb = codebook.map { r =>
+      val (m, cid) = (r.getInt(0), r.getInt(1))
+      require(m >= 0 && m < PqM && cid >= 0 && cid < PqK,
+        s"codebook entry ($m, $cid) lies outside the $PqM × $PqK table")
+      (m, cid, r.getSeq[Double](2).toArray, r.getDouble(3))
+    }
+    qv => {
+      val vm = Array.tabulate(PqM)(m => qv.slice(m * PqSub, m * PqSub + PqSub))
+      val vvm = vm.map(x => dot(x, x))
+      val lut = new Array[java.lang.Long](PqM * PqK)
+      cb.foreach { case (m, cid, cv, cc) =>
+        val d = math.floor(((vvm(m) - 2.0 * dot(vm(m), cv)) + cc) * 1e6).toLong
+        val j = m * PqK + cid
+        lut(j) = if (lut(j) == null) d else lut(j) + d
+      }
+      lut
+    }
   }
 
   def s5PqAnn(s: SparkSession, dir: String): DataFrame = {
@@ -895,11 +1021,11 @@ object Similarity {
     *    appends encode against it and never retrain;
     *  - `encode`: assigned `(label, vec_id, v, nrm)` rows + parameter
     *    rows → `(label, vec_id, <codeCol>)`;
-    *  - `queryTable`: the bounded query-side table for `(q_id, qv, qn)`
-    *    queries + parameter rows;
-    *  - `scored`: `(a_qid, vec_id, <codeCol>)` candidates + the query
-    *    table → `(q_id, vec_id, score)`, shortlisted by `score`
-    *    (descending if `descending`) then `vec_id`;
+    *  - `queryTable`: on the driver, the collected parameter rows → one
+    *    query's bounded table of longs;
+    *  - `score`: (code column, query-table column) → the pair's score,
+    *    shortlisted by `score` (descending if `descending`) then
+    *    `vec_id`;
     *  - the rest is wording: the audit's code noun and entry tag, the
     *    rung's noun, the append refusal, and the
     *    `CALL ann_probe_<name>` refusals (tables that must exist →
@@ -907,8 +1033,8 @@ object Similarity {
   private final case class Rung(name: String, table: String,
       codeCol: String, param: Option[RungParam],
       encode: (DataFrame, Option[DataFrame]) => DataFrame,
-      queryTable: (DataFrame, Option[DataFrame]) => DataFrame,
-      scored: (DataFrame, DataFrame) => DataFrame,
+      queryTable: Array[Row] => Vec => Array[java.lang.Long],
+      score: (Column, Column) => Column,
       descending: Boolean,
       auditNoun: String, auditTag: String, noun: String,
       appendRefusal: String, probeRefusals: Seq[(Seq[String], String)])
@@ -921,14 +1047,8 @@ object Similarity {
     encode = (a, cb) => a.select(col("label"), col("vec_id"))
       .join(encodeCodes(a.select(col("vec_id"), col("v")), cb.get), "vec_id")
       .select(col("label"), col("vec_id"), col("codes")),
-    queryTable = (q, cb) => pqQueryTable(q, cb.get),
-    scored = (c, qtab) => c
-      .select(col("a_qid"), col("vec_id"),
-        posexplode(col("codes")).as(Seq("m", "code")))
-      .join(broadcast(qtab),
-        col("a_qid") === col("q_id") && col("m") === col("qm") &&
-          col("code") === col("qcid") && col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id").agg(sum("pdq").as("score")),
+    queryTable = cb => { val lut = pqLut(cb); q => lut(q.v) },
+    score = graft.functions.DotProduct.adcScore(_, _, PqK),
     descending = false, auditNoun = "code", auditTag = "s9", noun = "IVF-PQ",
     appendRefusal = "PQ codebook — use appendToIvfIndex or build via ivfPqIndexDir",
     probeRefusals = Seq(Seq("codes", "codebook") ->
@@ -939,13 +1059,15 @@ object Similarity {
   private val Int8Rung = Rung("int8", "codes_i8", "code",
     Some(RungParam("i8meta", post => int8ScaleFrame(int8Unit(post)))),
     encode = (a, scale) => int8EncodeAssigned(a, scale.get),
-    // (x/qn)/scale, the same association as the build's u/scale
-    queryTable = (q, scale) => q.crossJoin(broadcast(scale.get))
-      .select(col("q_id"), transform(col("qv"),
-        x => floor(x / col("qn") / col("scale") + lit(0.5)).cast("long")).as("qc")),
-    scored = pairScored(_, _, aggregate(
-      zip_with(col("qc"), col("code"), (a, b) => a * b), lit(0L),
-      (acc, x) => acc + x)),
+    queryTable = meta => {
+      require(meta.length == 1 && !meta(0).isNullAt(0),
+        s"i8meta holds ${meta.length} row(s); an int8 index commits one scale")
+      val scale = meta(0).getDouble(0)
+      // (x/qn)/scale, the same association as the build's u/scale
+      q => q.v.map(x => java.lang.Long.valueOf(math.floor(x / q.n / scale + 0.5).toLong))
+    },
+    score = (code, qc) => aggregate(
+      zip_with(qc, code, (a, b) => a * b), lit(0L), (acc, x) => acc + x),
     descending = true, auditNoun = "int8 code", auditTag = "s17", noun = "int8",
     appendRefusal = "committed int8 scale — build via int8IndexDir",
     probeRefusals = Seq(
@@ -957,11 +1079,10 @@ object Similarity {
     * Hamming distance (Σ bit_count(xor) over the word pairs). */
   private val BinRung = Rung("bin", "codes_bin", "code", None,
     encode = (a, _) => binEncodeAssigned(a),
-    queryTable = (q, _) => q.select(col("q_id"), signWords("qv").as("qc")),
-    scored = pairScored(_, _, aggregate(
-      zip_with(col("qc"), col("code"),
-        (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")), lit(0L),
-      (acc, x) => acc + x)),
+    queryTable = _ => q => signWordsOf(q.v).map(java.lang.Long.valueOf),
+    score = (code, qc) => aggregate(
+      zip_with(qc, code, (a, b) => bit_count(a.bitwiseXOR(b)).cast("long")),
+      lit(0L), (acc, x) => acc + x),
     descending = false, auditNoun = "sign-code", auditTag = "s22", noun = "binary",
     appendRefusal = "committed sign codes — build via binIndexDir",
     probeRefusals = Seq(
@@ -982,14 +1103,6 @@ object Similarity {
   /** The rung's committed parameter rows at `root`, if it has any. */
   private def paramOf(s: SparkSession, root: String, r: Rung): Option[DataFrame] =
     r.param.map(p => graft.storage.GraftTable.open(s, s"$root/${p.table}").read())
-
-  /** `scored` of a rung whose query table is one row per query: join
-    * each candidate to its query's row and score the pair. */
-  private def pairScored(cand: DataFrame, qtab: DataFrame,
-      score: Column): DataFrame =
-    cand.join(broadcast(qtab),
-        col("a_qid") === col("q_id") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), score.as("score"))
 
   /** Commit rung `r` on `root` from the root's own committed postings:
     * the parameter table first (trained from postings; one file — a
@@ -1042,10 +1155,10 @@ object Similarity {
     *    postings) — a probe's label filter zone-map-prunes to the probed
     *    lists' code files, and those files hold ~PqM small ints per
     *    vector instead of PqSub·PqM doubles (~1/32 of the bytes).
-    * Probe cost at scale: centroid scan (tiny, broadcast) + ADC over
-    * ~1/nlist of the CODES bytes + an exact re-rank that fetches only
-    * top-[[Rerank]] full vectors per query via a pushed-down id filter
-    * over the probed lists' posting files. */
+    * Probe cost at scale: centroid and codebook scans (tiny, collected)
+    * + ADC over ~1/nlist of the CODES bytes + an exact re-rank that
+    * fetches only top-[[Rerank]] full vectors per query via a pushed-down
+    * id filter over the probed lists' posting files. */
   private[graft] def ivfPqIndexDir(s: SparkSession, dir: String): String =
     rungIndexDir(s, dir, PqRung)
 
@@ -2299,9 +2412,9 @@ object Similarity {
   }
 
   /** s9: ANN served from the composed IVF-PQ index. Per query: assign to
-    * the nearest committed centroid (broadcast), ADC-score ONLY the
-    * probed lists' zone-map-pruned code files against the broadcast
-    * per-query distance table, keep the top-[[Rerank]] candidates by
+    * the nearest committed centroid (on the driver), ADC-score ONLY the
+    * probed lists' zone-map-pruned code files against the query's
+    * distance table (a literal), keep the top-[[Rerank]] candidates by
     * quantized distance, then re-rank those EXACTLY from the full
     * vectors (fetched from the probed lists' posting files with the
     * candidate-id filter pushed into the scan). The exact re-rank makes
@@ -2344,30 +2457,31 @@ object Similarity {
       nprobe: Int = 1): DataFrame =
     probeRung(s, root, PqRung, q, filterIds, nprobe)
 
-  /** The probe of every quantized rung `r`: assignment against the
-    * committed centroids, a shortlist over ONLY the probed lists'
-    * zone-map-pruned code files, then an exact re-rank of the
-    * shortlist's full vectors from postings.
+  /** The probe of every quantized rung `r`: one driver step and two
+    * Spark plans.
     *
-    * Once-run steps: every intermediate is bounded by construction, so
-    * each is computed by ONE action and handed on as a local relation
-    * (its rows are on the driver anyway) instead of being re-planned
-    * and re-run inside every later plan that references it:
-    *  1. the queries — ≤ batch size rows;
-    *  2. `assigned`, the nearest-list assignment — ≤ nprobe rows per
-    *     query; the probed labels are read from these rows;
-    *  3. `qtab`, the rung's query-side table against its COMMITTED
-    *     parameters (PQ: the ADC table, PqM × PqK rows per query;
-    *     int8: the query codes against the committed scale; bin: the
-    *     query's sign words — one row per query);
-    *  4. `cand`, the shortlist — ≤ [[Rerank]] rows per query by the
-    *     rung's score, then vec_id; the re-rank's candidate ids are
-    *     read from these rows.
-    * The returned frame is the exact re-rank over the candidates'
-    * posting point lookups. The arithmetic, windows and tie-breaks are
-    * those of the plan without the steps, so results are bit-identical;
-    * without them `assigned` would run three times and the whole
-    * shortlist plan (codes scan, join, aggregate, window) twice.
+    * The driver step: every input is bounded, so one job collects them
+    * all ([[driverStep]]) — the query batch, the committed centroids and
+    * the rung's committed parameter rows (`codebook`, `i8meta`, none) —
+    * and the nearest-list
+    * assignment ([[assignNearest]]) and each query's table
+    * (`r.queryTable`: the PQ ADC table of PqM × PqK longs, the int8
+    * query codes against the committed scale, the query's sign words)
+    * are computed as plain arrays, with the codegen's own fold order.
+    * They enter the plans as literals ([[pairQueries]]), never as
+    * relations, so no plan broadcasts rows the driver already holds.
+    *
+    * Plan 1, the shortlist: ONLY the probed lists' zone-map-pruned code
+    * files, each code row paired with the queries probing its list and
+    * scored by one column (`r.score`; PQ: [[graft.functions.AdcScore]]);
+    * the top [[Rerank]] per query by score, then vec_id, are collected.
+    * A code row the rung cannot score (a PQ candidate with no codebook
+    * entry) drops out.
+    *
+    * Plan 2, returned lazily: the exact re-rank over the shortlist's
+    * posting point lookups — cosine, top [[IvfTopK]], `round(cos, 4)`.
+    *
+    * The probe's own jobs are described `ann_probe <rung>: <step>`.
     *
     * `filterIds` (one `id` column) scopes the search to a metadata
     * id-universe, as in [[probeIvf]]: the semi join lands on the CODES
@@ -2380,60 +2494,47 @@ object Similarity {
       q: DataFrame, filterIds: Option[DataFrame], nprobe: Int): DataFrame = {
     val postT = graft.storage.GraftTable.open(s, s"$root/postings")
     val codesT = graft.storage.GraftTable.open(s, s"$root/${r.table}")
-    val cent = graft.storage.GraftTable.open(s, s"$root/centroids").read()
-    val (queries, _) = runOnce(s, q.select(col("q_id"), col("qv"), col("qn")))
-    val (assigned, assignedRows) =
-      runOnce(s, assignQueryBatch(queries, cent, nprobe))
-    val probes = assignedRows.map(_.getAs[Any]("alabel")).distinct
-    def empty = s.createDataFrame(
-      s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      annResultSchema(q, cent, postT))
-    if (probes.isEmpty) return empty
+    val step = driverStep(s, r.name, q, graft.storage.GraftTable.open(s,
+      s"$root/centroids").read(), nprobe, paramOf(s, root, r).toSeq)
+    val table = r.queryTable(step.inputs.headOption.getOrElse(Array.empty[Row]))
+    val probes = step.probes
     // the probed lists' CODES only — zone-map pruning keeps the
     // candidate scan at ~1/nlist of the code bytes (readPruned: net of
     // deletion vectors, so an erased vector never shortlists); the
-    // label equality below makes pruning-overshoot (a file straddling
+    // label lookup below makes pruning-overshoot (a file straddling
     // two lists) harmless
     val codeScan =
       codesT.readPruned(Seq(org.apache.spark.sql.sources.In("label", probes)))
     val codes = filterIds.fold(codeScan)(f =>
       codeScan.join(f.select(col("id")), col("vec_id") === col("id"), "left_semi"))
-    val (qtab, _) = runOnce(s, r.queryTable(queries, paramOf(s, root, r)))
+    val tableType = StructType(Seq(step.qidField,
+      StructField("qt", ArrayType(LongType), nullable = false)))
     val score = if (r.descending) col("score").desc else col("score")
     val wCand = Window.partitionBy("q_id").orderBy(score, col("vec_id"))
-    val (cand, candRows) = runOnce(s, r.scored(codes
-      .join(broadcast(assigned.select(col("q_id").as("a_qid"), col("alabel"))),
-        col("label") === col("alabel")), qtab)
-      .withColumn("crn", row_number().over(wCand))
-      .filter(col("crn") <= Rerank)
-      .select(col("q_id").as("c_qid"), col("vec_id").as("c_vid")))
+    val cand = tagged(s, s"ann_probe ${r.name}: shortlist")(
+      pairQueries(codes, "label", step.labelType, step.byLabel,
+          step.queries.toSeq.map(x => Row(x.key, table(x).toSeq)), tableType)
+        .filter(col("vec_id") =!= col("qq.q_id"))
+        .select(col("qq.q_id").as("q_id"), col("vec_id"),
+          r.score(col(r.codeCol), col("qq.qt")).as("score"))
+        .filter(col("score").isNotNull)
+        .withColumn("crn", row_number().over(wCand))
+        .filter(col("crn") <= Rerank)
+        .select(col("q_id"), col("vec_id"))
+        .collect())
     // the exact-vector fetch is a point lookup, so push the id set into
     // the posting scan (row-group stats skip) instead of streaming the
     // probed lists again
-    val candIds = candRows.map(_.getAs[Any]("c_vid")).distinct
-    if (candIds.isEmpty) return empty
     val post =
       postT.readPruned(Seq(org.apache.spark.sql.sources.In("label", probes)))
-        .filter(col("vec_id").isInCollection(candIds))
-    val wRank = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    post.join(broadcast(cand), col("vec_id") === col("c_vid"))
-      .join(broadcast(queries), col("q_id") === col("c_qid"))
-      .select(col("q_id"), col("label"), col("vec_id"),
-        cosine(col("qv"), col("v"), col("qn"), col("nrm")).as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= IvfTopK)
-      .select(col("q_id"), col("label"), col("vec_id"),
-        round(col("cos"), 4).as("cos"), col("rank"))
-  }
-
-  /** One action over a BOUNDED frame: its rows, and the same rows as a
-    * local relation of `s` for the plans that consume them, so no
-    * consumer recomputes them. Only for frames whose size is bounded by
-    * the query batch. */
-  private def runOnce(s: SparkSession,
-      df: DataFrame): (DataFrame, Array[org.apache.spark.sql.Row]) = {
-    val rows = df.collect()
-    (s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema), rows)
+        .filter(col("vec_id").isInCollection(cand.map(_.get(1)).distinct))
+    val index = step.queries.map(_.key).zipWithIndex.toMap
+    val byCand = cand.toSeq.groupBy(_.get(1))
+      .map { case (vid, cs) => vid -> cs.map(c => index(c.get(0))) }
+    topIvf(pairQueries(post, "vec_id", postT.readSchema()("vec_id").dataType,
+        byCand, step.vectorRows, step.vectorType)
+      .select(col("qq.q_id").as("q_id"), col("label"), col("vec_id"),
+        cosine(col("qq.qv"), col("v"), col("qq.qn"), col("nrm")).as("cos")))
   }
 
   /** s6: RANGE search — every vector within a cosine radius of each
@@ -2535,28 +2636,8 @@ object Similarity {
     * against s10's exact scan (production engines widen nprobe under
     * selective filters; the exact twin s10 is the oracle for what a
     * widened probe converges to). */
-  def s11FilteredIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.load(s, dir, "embeddings")
-    val e = normalized(emb)
-    val cent = centroids(emb)
-    val en = enIds(s, dir)
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    // same shared assignment as the s7/s9 probes — one tie-break to rule
-    // them all (centroids() yields exactly the (label, cv, cnrm) shape)
-    val assigned = assignQueryBatch(q, cent)
-    val wRank = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    e.join(en, col("vec_id") === col("id"), "left_semi")
-      .join(broadcast(assigned),
-        e("label") === col("alabel") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), e("label"), col("vec_id"),
-        cosine(col("qv"), col("v"), col("qn"), col("nrm")).as("cos"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= IvfTopK)
-      .select(col("q_id"), col("label"), col("vec_id"),
-        round(col("cos"), 4).as("cos"), col("rank"))
-      .orderBy("q_id", "rank")
-  }
+  def s11FilteredIvf(s: SparkSession, dir: String): DataFrame =
+    inMemoryIvf(s, dir, Some(enIds(s, dir)))
 
   /** s12: FILTERED probe of the PERSISTED IVF index — s10/s11's
     * metadata pre-filter composed with the COMMITTED s7 index (the gap
@@ -3191,13 +3272,23 @@ object Similarity {
     * `expr` because the variable shift (`shiftleft(1L, bit)`) is only
     * expressible in SQL text — the whole expression stays codegen'd
     * Catalyst, no UDF. */
-  private def signWords(vExpr: String): Column = expr(
+  private[operators] def signWords(vExpr: String): Column = expr(
     s"""transform(sequence(0, (size($vExpr)-1) div 64), w ->
        |  aggregate(sequence(w*64, least(w*64+63, bigint(size($vExpr))-1)),
        |    bigint(0),
        |    (acc, i) -> acc | if(element_at($vExpr, int(i)+1) >= 0D,
        |                         shiftleft(bigint(1), int(i - w*64)),
        |                         bigint(0))))""".stripMargin)
+
+  /** [[signWords]] on the driver: bit `i mod 64` of word `i div 64` is
+    * set iff element i is `>= 0` in SQL's order, where NaN sorts above
+    * every number. */
+  private[operators] def signWordsOf(v: Array[Double]): Array[Long] =
+    Array.tabulate((v.length - 1) / 64 + 1) { w =>
+      (w * 64 until math.min(w * 64 + 64, v.length)).foldLeft(0L) { (acc, i) =>
+        if (v(i) >= 0.0 || v(i).isNaN) acc | (1L << (i - w * 64)) else acc
+      }
+    }
 
   /** (label, vec_id, code): packed sign words for assigned (label,
     * vec_id, v, …) rows — the binary rung's encode. */
@@ -3658,7 +3749,7 @@ object Similarity {
   /** The IVF oracle body, parameterized by probe width: s2/s7 run it at
     * nprobe = 1, s20 at [[MultiProbe]] — `arn <= nprobe` in the
     * assignment CTE is the ONLY difference, mirroring
-    * [[assignQueryBatch]]'s rank filter. Candidates never duplicate
+    * [[assignNearest]]'s `take(nprobe)`. Candidates never duplicate
     * across probes (each vector lives in exactly one list), so the
     * scored join needs no DISTINCT. One definition, so the single- and
     * multi-probe oracles cannot drift. */

@@ -23,7 +23,7 @@ import graft.storage.GraftTable
   * streaming plans refuse; inside foreachBatch the batch is a bounded
   * DataFrame and the full API applies.
   *
-  * At scale each trigger costs: one broadcast of the (tiny) centroid
+  * At scale each trigger costs: one collect of the (tiny) centroid
   * table, one scan of ~(probed lists / nlist) of the corpus, one
   * window over candidates. Nothing grows with stream history.
   *

@@ -12,7 +12,7 @@ import graft.storage.GraftTable
   * STREAM of query vectors with the COMMITTED IVF index as the
   * retrieval stage: per micro-batch, each query's candidate pool comes
   * from the persisted probe machinery
-  * ([[Similarity.probeCandidatesIvf]] — assignment vs the broadcast
+  * ([[Similarity.probeCandidatesIvf]] — assignment on the driver vs the
   * committed centroids, only the probed lists' zone-map-pruned files
   * scanned, optional stream-static `filterIds` semi join: the s12
   * composition), widened to [[Similarity.MmrPool]] candidates and
@@ -32,7 +32,7 @@ import graft.storage.GraftTable
   * depends only on its own row, the COMMITTED index, and the static
   * docs frame — ZERO streaming state; the index is the state and it is
   * maintained transactionally. Results land exactly-once under the
-  * checkpoint's txn id. Per trigger: one tiny centroid broadcast, one
+  * checkpoint's txn id. Per trigger: one tiny centroid collect, one
   * ~1/nlist postings scan, one bounded-pool window, then ≤ MmrPool
   * rows per query through the greedy. Nothing grows with stream
   * history. Id-universe contract as [[AnnStream]]. */

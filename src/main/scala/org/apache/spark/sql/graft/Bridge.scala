@@ -1,12 +1,15 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{Pool, SchedulingMode}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 
-/** Column ↔ catalyst Expression bridge for custom expressions, and the
-  * session re-wrap the persisted-index probes use.
+/** Column ↔ catalyst Expression bridge for custom expressions, the
+  * session re-wrap the persisted-index probes use, and the FAIR pool
+  * declaration of the concurrent entry points.
   *
   * Spark 4 split the public `Column` API from catalyst; the converters
   * live in `classic.ExpressionUtils`, which is `private[sql]`, as is
@@ -23,4 +26,17 @@ object Bridge {
     * not re-resolved, so rows and column ids are `df`'s own. */
   def onSession(s: SparkSession, df: DataFrame): DataFrame =
     ClassicDataset.ofRows(s.asInstanceOf[ClassicSession], df.queryExecution.analyzed)
+
+  /** Declare FAIR scheduler pools `names` with Spark's defaults (FIFO
+    * inside a pool, minShare 0, weight 1) before any job names them, so
+    * the scheduler does not create each on first use with a WARN. Pools
+    * that exist are left alone; a FIFO context has no pools to declare. */
+  def declarePools(sc: SparkContext, names: Iterable[String]): Unit = {
+    val root = sc.taskScheduler.rootPool
+    if (root.schedulingMode == SchedulingMode.FAIR)
+      names.foreach { n =>
+        if (root.getSchedulableByName(n) == null)
+          root.addSchedulable(new Pool(n, SchedulingMode.FIFO, 0, 1))
+      }
+  }
 }
