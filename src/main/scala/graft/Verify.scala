@@ -1,5 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import graft.storage.MetaCodec
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -52,32 +56,14 @@ object Verify {
     futures.foreach(f =>
       scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // the subset filter applies here too, so a filtered dump +
     // check_oracle.py is a self-consistent fast local gate
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), MetaCodec.render(
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) }))
     // Sidecar for humans/tooling: which registered queries errored (the
     // sentinel parquets above make them count as failures either way).
-    val errJson = {
-      import scala.jdk.CollectionConverters._
-      errors.asScala.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    }
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), MetaCodec.render(
+      scala.collection.immutable.TreeMap(errors.asScala.toSeq: _*)))
     spark.stop()
   }
 }

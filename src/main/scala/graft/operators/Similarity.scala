@@ -679,16 +679,13 @@ object Similarity {
     * `rows`) as one map literal, so a row is carried — and rendered into
     * every plan description — once however many keys name it. A row of
     * `df` whose key has no entry (a file straddling two lists, a null
-    * key) pairs with nothing and drops out; with no entry at all (an
-    * empty batch, an empty shortlist) `df` is not read — an empty IN
-    * prunes no file. */
+    * key) pairs with nothing and drops out. */
   private def pairQueries(df: DataFrame, key: String, keyType: DataType,
       byKey: Map[Any, Seq[Int]], rows: Seq[Row], rowType: StructType): DataFrame = {
     val idx = driverLit(byKey, MapType(keyType, ArrayType(IntegerType, containsNull = false)))
-    val paired = df.withColumn("qq", explode(element_at(idx, col(key))))
+    df.withColumn("qq", explode(element_at(idx, col(key))))
       .withColumn("qq", element_at(driverLit(rows, ArrayType(rowType, containsNull = false)),
         col("qq") + 1))
-    if (byKey.isEmpty) paired.limit(0) else paired
   }
 
   // -- s3: sign-random-projection LSH buckets ---------------------------
@@ -1665,15 +1662,14 @@ object Similarity {
     val tmp = new org.apache.hadoop.fs.Path(root, s"$DriftBaselineFile.tmp")
     val dst = new org.apache.hadoop.fs.Path(root, DriftBaselineFile)
     val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"n": $n, "p50": $p50, "lists": "$lists", "hist": "$hist"}"""
-        .getBytes("UTF-8"))
+    try out.write(graft.storage.MetaCodec.render(
+      graft.storage.MetaCodec.DriftBaseline(n, p50, lists, Some(hist))).getBytes("UTF-8"))
     finally out.close()
     if (fs.exists(dst)) fs.delete(dst, false)
     require(fs.rename(tmp, dst), s"could not commit drift baseline at $dst")
   }
 
-  private def readDriftBaseline(root: String)
+  private[graft] def readDriftBaseline(root: String)
       : Option[(Long, Double, Map[String, Long], Option[Array[Long]])] = {
     val (fs, _) = graft.storage.GraftTable.fsAndPath(root)
     val p = new org.apache.hadoop.fs.Path(root, DriftBaselineFile)
@@ -1683,25 +1679,20 @@ object Similarity {
       val txt =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-      // minimal parse of the object this module writes; a malformed
-      // file (torn write on a non-atomic-rename store) reads as absent
-      // → file-grain fallback, never a crash
-      val n = """"n"\s*:\s*(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      val p50 = """"p50"\s*:\s*(-?[0-9.eE+-]+)""".r
-        .findFirstMatchIn(txt).map(_.group(1).toDouble)
-      val lists = """"lists"\s*:\s*"([^"]*)"""".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-        .split(",").filter(_.contains(":"))
-        .map { kv =>
-          val i = kv.lastIndexOf(':')
-          kv.substring(0, i) -> kv.substring(i + 1).toLong
-        }.toMap
-      // absent on pre-feature baselines → the TV signal degrades to "-"
-      val hist = """"hist"\s*:\s*"([^"]*)"""".r
-        .findFirstMatchIn(txt).map(_.group(1))
-        .map(_.split(",").filter(_.nonEmpty).map(_.toLong))
-        .filter(_.length == 20)
-      for (a <- n; b <- p50) yield (a, b, lists, hist)
+      // a malformed file (torn write on a non-atomic-rename store)
+      // reads as absent → file-grain fallback, never a crash
+      try {
+        val b = graft.storage.MetaCodec.driftBaseline(txt)
+        val lists = b.lists.split(",").filter(_.contains(":"))
+          .map { kv =>
+            val i = kv.lastIndexOf(':')
+            kv.substring(0, i) -> kv.substring(i + 1).toLong
+          }.toMap
+        // absent on pre-feature baselines → the TV signal degrades to "-"
+        val hist = b.hist.map(_.split(",").filter(_.nonEmpty).map(_.toLong))
+          .filter(_.length == 20)
+        Some((b.n, b.p50, lists, hist))
+      } catch { case _: Exception => None }
     }
   }
 

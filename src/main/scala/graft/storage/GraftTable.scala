@@ -3715,9 +3715,6 @@ object GraftTable {
     * sidecar read on the driver). */
   final case class DvEntry(path: String, card: Long)
 
-  private val MagicKey = "graft_magic"
-  private val Magic = "graft_cstore_v1" // role of `citus_cstore` magic, cstore_fdw.h:50
-
   // ---- schema changes (applied transactionally by alterAll) ----------
 
   sealed trait SchemaChange
@@ -4301,8 +4298,9 @@ object GraftTable {
       case GreaterThanOrEqual(c, v) => allNull(c) || cmpMax(c, v).exists(_ < 0)
       case LessThan(c, v) => allNull(c) || cmpMin(c, v).exists(_ >= 0)
       case LessThanOrEqual(c, v) => allNull(c) || cmpMin(c, v).exists(_ > 0)
+      // an empty IN matches no row: every file is refuted
       case In(c, vs) =>
-        allNull(c) || (vs != null && vs.nonEmpty && vs.forall(v =>
+        allNull(c) || (vs != null && vs.forall(v =>
           cmpMax(c, v).exists(_ < 0) || cmpMin(c, v).exists(_ > 0)))
       // Prefix refutation under the same ASCII-binary discipline as the
       // comparisons: values with prefix p live in [p, nextPrefix(p)), so
@@ -4398,42 +4396,14 @@ object GraftTable {
   private def statsPath(location: String): HPath =
     new HPath(location, "_graft_stats.json")
 
-  private[storage] def writeStatsAtomic(location: String, st: TableStats): Unit = {
-    def js(s: String) = if (s == null) "null" else jsonStr(s)
-    val cols = st.columns.map { case (k, c) =>
-      val mcv = if (c.mcvs.isEmpty) ""
-        else c.mcvs.map { case (v, n) => s"[${js(v)}, $n]" }
-          .mkString(", \"mcvs\": [", ",", "]")
-      val hist = if (c.hist.isEmpty) ""
-        else c.hist.map(js).mkString(", \"hist\": [", ",", "]")
-      s"${js(k)}: {\"min\": ${js(c.min)}, \"max\": ${js(c.max)}, " +
-        s"\"ndv\": ${c.ndv}, \"nulls\": ${c.nullCount}$mcv$hist}"
-    }.mkString("{", ",", "}")
-    val txt = s"""{"row_count": ${st.rowCount}, "size_bytes": ${st.sizeBytes}, "columns": $cols}"""
-    writeFileAtomic(location, statsPath(location), txt)
-  }
+  private[storage] def writeStatsAtomic(location: String, st: TableStats): Unit =
+    writeFileAtomic(location, statsPath(location), MetaCodec.renderStats(st))
 
   private[storage] def readStats(location: String): Option[TableStats] = {
     val (fs, _) = fsAndPath(location)
     val path = statsPath(location)
-    if (!fs.exists(path)) return None
-    val m = parseJsonObject(readFileFully(fs, path))
-    val cols = m("columns").asInstanceOf[Map[String, Any]].map { case (k, v) =>
-      val o = v.asInstanceOf[Map[String, Any]]
-      val mcvs = o.get("mcvs").map(_.asInstanceOf[List[Any]].map { e =>
-        val pair = e.asInstanceOf[List[Any]]
-        pair.head.asInstanceOf[String] -> pair(1).asInstanceOf[Number].longValue()
-      }).getOrElse(Nil)
-      val hist = o.get("hist")
-        .map(_.asInstanceOf[List[Any]].map(_.asInstanceOf[String])).getOrElse(Nil)
-      k -> ColumnStats(
-        o("min").asInstanceOf[String], o("max").asInstanceOf[String],
-        o("ndv").asInstanceOf[Number].longValue(),
-        o("nulls").asInstanceOf[Number].longValue(),
-        mcvs, hist)
-    }
-    Some(TableStats(m("row_count").asInstanceOf[Number].longValue(),
-      m("size_bytes").asInstanceOf[Number].longValue(), cols))
+    if (!fs.exists(path)) None
+    else Some(MetaCodec.stats(readFileFully(fs, path)))
   }
 
   /** CREATE TABLE: validates options, writes initial metadata so the empty
@@ -4591,7 +4561,7 @@ object GraftTable {
     def attempt(): Boolean =
       try {
         val out = fs.create(path, false)
-        try out.write(renderMeta(meta).getBytes(StandardCharsets.UTF_8))
+        try out.write(MetaCodec.renderSnapshot(meta).getBytes(StandardCharsets.UTF_8))
         finally out.close()
         true
       } catch {
@@ -4623,8 +4593,7 @@ object GraftTable {
   private[storage] def pointerVersion(location: String): Option[Long] =
     try {
       val (fs, _) = fsAndPath(location)
-      parseJsonObject(readFileFully(fs, metaPath(location)))
-        .get("version").collect { case n: java.lang.Number => n.longValue() }
+      Some(MetaCodec.snapshot(readFileFully(fs, metaPath(location))).version)
     } catch { case _: Exception => None }
 
   /** Schemes whose stock Hadoop connector implements
@@ -4667,7 +4636,7 @@ object GraftTable {
     try {
       val st = fs.getFileStatus(path)
       (System.currentTimeMillis() - st.getModificationTime > claimGraceMs) && {
-        try { parseJsonObject(readFileFully(fs, path)); false }
+        try { MetaCodec.snapshot(readFileFully(fs, path)).checked(path); false }
         catch { case _: Exception => true }
       }
     } catch { case _: Exception => false }
@@ -4719,11 +4688,11 @@ object GraftTable {
   }
 
   def readHistoryMeta(location: String, version: Long): Meta =
-    readMetaFromFields(location, readHistoryObj(location, version))
+    hydrate(location, readHistoryDoc(location, version))
 
-  /** Read + parse one archived snapshot's JSON object (no hydration —
-    * the caller picks [[readMetaFromFields]] or [[rawSnapshotFromFields]]). */
-  private def readHistoryObj(location: String, version: Long): Map[String, Any] = {
+  /** Read + decode one archived snapshot (no hydration — the caller
+    * picks [[hydrate]] or [[MetaCodec.Snapshot.raw]]). */
+  private def readHistoryDoc(location: String, version: Long): MetaCodec.Snapshot = {
     val (fs, _) = fsAndPath(location)
     val path = historyPath(location, version)
     if (!fs.exists(path))
@@ -4731,9 +4700,7 @@ object GraftTable {
         s"no snapshot v$version at $location (expired or never committed)")
     val content = readFileFully(fs, path)
     MetaIo.historyRead(location, content.length.toLong)
-    val m = parseJsonObject(content)
-    require(m.get(MagicKey).contains(Magic), s"bad magic in $path")
-    m
+    MetaCodec.snapshot(content).checked(path)
   }
 
   /** Metadata-I/O instrumentation (test/profiler hook): bytes of
@@ -4804,33 +4771,16 @@ object GraftTable {
       changeCommit: Boolean,
       emitFiles: Vector[String])
 
-  private def rawSnapshotFromFields(m: Map[String, Any]): RawSnapshot =
-    RawSnapshot(
-      version = m.getOrElse("version", java.lang.Long.valueOf(0L))
-        .asInstanceOf[Number].longValue(),
-      schemaJson = m("schema").asInstanceOf[String],
-      manifest = m.getOrElse("manifest", List.empty[Any])
-        .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector,
-      inlineFiles = m("files").asInstanceOf[List[Any]]
-        .map(_.asInstanceOf[String]).toVector,
-      dvs = parseDvFields(m),
-      defaults = parseDefaultFields(m),
-      rowCount = m("row_count").asInstanceOf[Number].longValue(),
-      changeCommit = m.getOrElse("change_commit", java.lang.Boolean.FALSE)
-        .asInstanceOf[Boolean],
-      emitFiles = m.getOrElse("emit_files", List.empty[Any])
-        .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector)
-
   def readHistoryRaw(location: String, version: Long): RawSnapshot =
-    rawSnapshotFromFields(readHistoryObj(location, version))
+    readHistoryDoc(location, version).raw
 
   /** BOTH forms of one snapshot from a SINGLE read + parse — the
     * streaming initial load needs the hydrated file list (its output)
     * AND the raw walk seed; reading the JSON twice doubled the one
     * legitimately large metadata read at stream start (ADVICE r16). */
   def readHistoryBoth(location: String, version: Long): (Meta, RawSnapshot) = {
-    val m = readHistoryObj(location, version)
-    (readMetaFromFields(location, m), rawSnapshotFromFields(m))
+    val s = readHistoryDoc(location, version)
+    (hydrate(location, s), s.raw)
   }
 
   /** Net (removed, added) file-list delta of the commit taking `p` to
@@ -4893,8 +4843,7 @@ object GraftTable {
     * streaming sources' latestOffset. */
   def committedVersion(location: String): Long = {
     MetaIo.headProbed(location)
-    walkClaims(location,
-      rawSnapshotFromFields(readHeadObj(location)).version)(_ => ())
+    walkClaims(location, readHeadDoc(location).version)(_ => ())
   }
 
   /** [[relativize]] for callers outside the storage package (the
@@ -4935,46 +4884,9 @@ object GraftTable {
     fs.listStatus(p).toSeq.flatMap(walk).sorted
   }
 
-  // -- JSON (de)serialization of Meta, no external deps ----------------
-
   private def writeMetaAtomic(location: String, meta: Meta): Unit =
     // Atomic commit point — the reference's footer rename, cstore_writer.c:350-357.
-    writeFileAtomic(location, metaPath(location), renderMeta(meta))
-
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  /** Render a per-file-stats map as a JSON object — shared by the
-    * legacy inline form and the stats shard files. min/max are null
-    * for an all-null column (null count still prunes). */
-  private def renderFileStats(
-      m: Map[String, Map[String, ColFileStats]]): String = {
-    def jsn(s: String) = if (s == null) "null" else jsonStr(s)
-    m.map { case (f, cols) =>
-      s"${jsonStr(f)}: " + cols.map { case (c, cs) =>
-        s"${jsonStr(c)}: {\"mn\": ${jsn(cs.min)}, \"mx\": ${jsn(cs.max)}, " +
-          s"\"nu\": ${cs.nulls}, \"rw\": ${cs.rows}}"
-      }.mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-  }
-
-  /** Parse [[renderFileStats]]' form — shared by the inline meta field
-    * and the shard files. */
-  private def parseFileStats(v: Any): Map[String, Map[String, ColFileStats]] =
-    v.asInstanceOf[Map[String, Any]].map { case (f, cols) =>
-      f -> cols.asInstanceOf[Map[String, Any]].map { case (c, cv) =>
-        val o = cv.asInstanceOf[Map[String, Any]]
-        c -> ColFileStats(
-          o("mn").asInstanceOf[String], o("mx").asInstanceOf[String],
-          o("nu").asInstanceOf[Number].longValue(),
-          o("rw").asInstanceOf[Number].longValue())
-      }
-    }
+    writeFileAtomic(location, metaPath(location), MetaCodec.renderSnapshot(meta))
 
   // ---- manifest segments ---------------------------------------------
   //
@@ -5099,14 +5011,7 @@ object GraftTable {
       p: HPath): ManifestSegment = {
     val content = readFileFully(fs, p)
     MetaIo.segmentParsed(location, content.length.toLong)
-    val m = parseJsonObject(content)
-    require(m.get(MagicKey).contains(Magic), s"bad magic in manifest segment $p")
-    ManifestSegment(
-      added = m.getOrElse("files_added", List.empty[Any])
-        .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector,
-      removed = m.getOrElse("files_removed", List.empty[Any])
-        .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toSet,
-      stats = parseFileStats(m.getOrElse("file_stats", Map.empty[String, Any])))
+    MetaCodec.segment(content, p)
   }
 
   /** Replay a segment list: the file list in commit order, and the
@@ -5127,14 +5032,8 @@ object GraftTable {
       stats: Map[String, Map[String, ColFileStats]]): String = {
     val rel = f"_graft_manifest/m$version%020d-${
       java.util.UUID.randomUUID().toString.take(8)}.json"
-    val content =
-      s"""{
-         |  ${jsonStr(MagicKey)}: ${jsonStr(Magic)},
-         |  "files_added": ${added.map(jsonStr).mkString("[", ",", "]")},
-         |  "files_removed": ${removed.toSeq.sorted.map(jsonStr).mkString("[", ",", "]")},
-         |  "file_stats": ${renderFileStats(stats)}
-         |}""".stripMargin
-    writeFileAtomic(location, new HPath(location, rel), content)
+    writeFileAtomic(location, new HPath(location, rel),
+      MetaCodec.renderSegment(added, removed, stats))
     rel
   }
 
@@ -5200,74 +5099,13 @@ object GraftTable {
     }
   }
 
-  private def renderMeta(m: Meta): String = {
-    def js(s: String) = jsonStr(s)
-    def jv(v: Any): String = v match {
-      case null => "null"
-      case b: Boolean => b.toString
-      case n: java.lang.Number => n.toString
-      case s: String => js(s)
-      case other => js(other.toString)
-    }
-    val defaults = m.defaults.map { case (k, v) =>
-      val tag = v match {
-        case _: java.lang.Long | _: java.lang.Integer => "long"
-        case _: java.lang.Double | _: java.lang.Float => "double"
-        case _: java.lang.Boolean => "boolean"
-        case _ => "string"
-      }
-      s"${js(k)}: {${js("t")}: ${js(tag)}, ${js("v")}: ${jv(v)}}"
-    }.mkString("{", ",", "}")
-    // With manifest segments in play the inline forms are EMPTY by
-    // contract — the commit already wrote its delta segment and every
-    // serialized state (history snapshot, pointer cache) carries only
-    // the segment refs.
-    val fileStats =
-      if (m.manifest.nonEmpty) "{}" else renderFileStats(m.fileStats)
-    val filesJson =
-      if (m.manifest.nonEmpty) "[]" else m.files.map(js).mkString("[", ",", "]")
-    val streamTxn = m.streamTxn.map { case (q, b) => s"${js(q)}: $b" }
-      .mkString("{", ",", "}")
-    val dvs = m.dvs.map { case (f, e) =>
-      s"${js(f)}: {\"p\": ${js(e.path)}, \"n\": ${e.card}}"
-    }.mkString("{", ",", "}")
-    s"""{
-       |  ${js(MagicKey)}: ${js(Magic)},
-       |  "schema": ${js(m.currentSchema.json)},
-       |  "compression": ${js(m.options.compression)},
-       |  "stripe_row_count": ${m.options.stripeRowCount},
-       |  "block_row_count": ${m.options.blockRowCount},
-       |  "sort_by": ${m.options.sortBy.map(js).mkString("[", ",", "]")},
-       |  "zorder_by": ${m.options.zorderBy.map(js).mkString("[", ",", "]")},
-       |  "bloom_filter": ${m.options.bloomFilterColumns.map(js).mkString("[", ",", "]")},
-       |  "bucket_by": ${m.options.bucketBy.map(js).mkString("[", ",", "]")},
-       |  "bucket_count": ${m.options.bucketCount},
-       |  "delete_mode": ${js(m.options.deleteMode)},
-       |  "auto_compact_min_files": ${m.options.autoCompactMinFiles},
-       |  "checks": ${m.options.checks.map { case (k, v) => s"${js(k)}: ${js(v)}" }
-                        .mkString("{", ",", "}")},
-       |  "dvs": $dvs,
-       |  "row_count": ${m.rowCount},
-       |  "version": ${m.version},
-       |  "next_batch_id": ${m.nextBatchId},
-       |  "defaults": $defaults,
-       |  "manifest": ${m.manifest.map(js).mkString("[", ",", "]")},
-       |  "file_stats": $fileStats,
-       |  "stream_txn": $streamTxn,
-       |  "emit_files": ${m.emitFiles.map(js).mkString("[", ",", "]")},
-       |  "dropped_cols": ${m.droppedCols.map(js).mkString("[", ",", "]")},
-       |  "change_commit": ${m.changeCommit},
-       |  "files": $filesJson
-       |}""".stripMargin
-  }
-
   private[storage] def readMeta(location: String): Meta =
-    walkToHead(location, readMetaFromFields(location, readHeadObj(location)))
+    walkToHead(location, hydrate(location, readHeadDoc(location)))
 
-  /** Read + parse the pointer file's JSON object, with the commit-window
-    * retry (shared by the hydrating [[readMeta]] and the raw
+  /** Read + decode the pointer file, with the commit-window retry
+    * (shared by the hydrating [[readMeta]] and the raw
     * [[committedVersion]] probe). */
-  private def readHeadObj(location: String): Map[String, Any] = {
+  private def readHeadDoc(location: String): MetaCodec.Snapshot = {
     val (fs, _) = fsAndPath(location)
     val path = metaPath(location)
     // On filesystems without atomic rename-replace a commit passes
@@ -5276,11 +5114,11 @@ object GraftTable {
     // read-and-parse retries — not just an existence probe — so a
     // commit landing between any two steps still converges; only after
     // the retries are exhausted is the table declared absent/corrupt.
-    var m: Map[String, Any] = null
+    var doc: MetaCodec.Snapshot = null
     var attempt = 0
-    while (m == null) {
+    while (doc == null) {
       try {
-        m = parseJsonObject(readFileFully(fs, path))
+        doc = MetaCodec.snapshot(readFileFully(fs, path))
       } catch {
         case e: Exception =>
           // Fast path for a genuine no-such-table probe: the commit
@@ -5297,8 +5135,7 @@ object GraftTable {
           Thread.sleep(50L * attempt)
       }
     }
-    require(m.get(MagicKey).contains(Magic), s"bad magic in $path")
-    m
+    doc.checked(path)
   }
 
   /** Advance a pointer-cached state to the committed HEAD of the
@@ -5311,7 +5148,7 @@ object GraftTable {
     * costs one negative existence probe. */
   private def walkToHead(location: String, from: Meta): Meta = {
     var cur = from
-    walkClaims(location, from.version)(m => cur = readMetaFromFields(location, m))
+    walkClaims(location, from.version)(s => cur = hydrate(location, s))
     cur
   }
 
@@ -5331,213 +5168,44 @@ object GraftTable {
     * head) costs one negative existence probe. Returns the last
     * committed version. */
   private def walkClaims(location: String, fromVersion: Long)
-      (onCommit: Map[String, Any] => Unit): Long = {
+      (onCommit: MetaCodec.Snapshot => Unit): Long = {
     val (fs, _) = fsAndPath(location)
     var v = fromVersion
     var advancing = true
     while (advancing) {
       val hp = historyPath(location, v + 1)
-      val parsed: Option[Map[String, Any]] =
+      val parsed: Option[MetaCodec.Snapshot] =
         try {
           if (!fs.exists(hp)) None
           else {
             val content = readFileFully(fs, hp)
-            val m = parseJsonObject(content)
-            require(m.get(MagicKey).contains(Magic), s"bad magic in $hp")
+            val s = MetaCodec.snapshot(content).checked(hp)
             MetaIo.historyRead(location, content.length.toLong)
-            Some(m)
+            Some(s)
           }
         } catch { case _: Exception => None }
       parsed match {
-        case Some(m) => onCommit(m); v += 1
+        case Some(s) => onCommit(s); v += 1
         case None => advancing = false
       }
     }
     v
   }
 
-  /** Build a Meta from a parsed metadata JSON object (shared by the
-    * current-pointer and history-snapshot readers). `location` resolves
-    * stats shard refs; hydration is strict — a missing shard is loud
-    * corruption (vacuum never reclaims a shard any retained snapshot
-    * references), never silently-empty zone maps. */
-  /** Typed `defaults` map of a parsed snapshot object (shared by the
-    * hydrating and raw readers). */
-  private def parseDefaultFields(m: Map[String, Any]): Map[String, Any] =
-    m.getOrElse("defaults", Map.empty[String, Any])
-      .asInstanceOf[Map[String, Any]].map { case (k, tv) =>
-        val obj = tv.asInstanceOf[Map[String, Any]]
-        val v = (obj("t"), obj("v")) match {
-          case ("long", n: java.lang.Number) => n.longValue(): java.lang.Long
-          case ("double", n: java.lang.Number) => n.doubleValue(): java.lang.Double
-          case ("boolean", b: java.lang.Boolean) => b
-          case (_, s) => s
-        }
-        k -> (v: Any)
-      }
-
-  /** Deletion-vector map of a parsed snapshot object (shared by the
-    * hydrating and raw readers). */
-  private def parseDvFields(m: Map[String, Any]): Map[String, DvEntry] =
-    m.getOrElse("dvs", Map.empty[String, Any])
-      .asInstanceOf[Map[String, Any]].map { case (f, v) =>
-        val o = v.asInstanceOf[Map[String, Any]]
-        f -> DvEntry(o("p").asInstanceOf[String],
-          o("n").asInstanceOf[Number].longValue())
-      }
-
-  private def readMetaFromFields(location: String, m: Map[String, Any]): Meta = {
-    val schema = DataType.fromJson(m("schema").asInstanceOf[String]).asInstanceOf[StructType]
-    val defaults = parseDefaultFields(m)
-    val inlineFiles = m("files").asInstanceOf[List[Any]]
-      .map(_.asInstanceOf[String]).toVector
-    val manifest = m.getOrElse("manifest", List.empty[Any])
-      .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector
-    val inlineStats = parseFileStats(
-      m.getOrElse("file_stats", Map.empty[String, Any]))
-    val (files, fileStats) =
-      if (manifest.isEmpty) (inlineFiles, inlineStats)
-      else {
-        // replay the segments for the list; later segment wins for
-        // stats; dead entries (rewritten-away files) are dropped by
-        // the live-file restriction
-        val (segFiles, segStats) = replaySegments(location, manifest)
-        val fileSet = segFiles.toSet
-        (segFiles, segStats.filter { case (f, _) => fileSet(f) })
-      }
-    Meta(
-      currentSchema = schema,
-      options = GraftTableOptions(
-        compression = m("compression").asInstanceOf[String],
-        stripeRowCount = m("stripe_row_count").asInstanceOf[Number].longValue(),
-        blockRowCount = m("block_row_count").asInstanceOf[Number].longValue(),
-        sortBy = m.getOrElse("sort_by", List.empty[Any])
-          .asInstanceOf[List[Any]].map(_.asInstanceOf[String]),
-        zorderBy = m.getOrElse("zorder_by", List.empty[Any])
-          .asInstanceOf[List[Any]].map(_.asInstanceOf[String]),
-        bloomFilterColumns = m.getOrElse("bloom_filter", List.empty[Any])
-          .asInstanceOf[List[Any]].map(_.asInstanceOf[String]),
-        bucketBy = m.getOrElse("bucket_by", List.empty[Any])
-          .asInstanceOf[List[Any]].map(_.asInstanceOf[String]),
-        bucketCount = m.getOrElse("bucket_count", java.lang.Long.valueOf(0L))
-          .asInstanceOf[Number].intValue(),
-        deleteMode = m.getOrElse("delete_mode", "copy-on-write")
-          .asInstanceOf[String],
-        checks = m.getOrElse("checks", Map.empty[String, Any])
-          .asInstanceOf[Map[String, Any]]
-          .map { case (k, v) => k -> v.asInstanceOf[String] },
-        autoCompactMinFiles = m.getOrElse("auto_compact_min_files",
-          java.lang.Long.valueOf(0L)).asInstanceOf[Number].intValue()),
-      files = files,
-      rowCount = m("row_count").asInstanceOf[Number].longValue(),
-      defaults = defaults,
-      nextBatchId = m("next_batch_id").asInstanceOf[Number].longValue(),
-      version = m.getOrElse("version", java.lang.Long.valueOf(0L))
-        .asInstanceOf[Number].longValue(),
-      fileStats = fileStats,
-      manifest = manifest,
-      streamTxn = m.getOrElse("stream_txn", Map.empty[String, Any])
-        .asInstanceOf[Map[String, Any]]
-        .map { case (q, b) => q -> b.asInstanceOf[Number].longValue() },
-      emitFiles = m.getOrElse("emit_files", List.empty[Any])
-        .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector,
-      droppedCols = m.getOrElse("dropped_cols", List.empty[Any])
-        .asInstanceOf[List[Any]].map(_.asInstanceOf[String]).toVector,
-      changeCommit = m.getOrElse("change_commit", java.lang.Boolean.FALSE)
-        .asInstanceOf[Boolean],
-      dvs = parseDvFields(m))
-  }
-
-  /** Minimal recursive-descent JSON parser (objects/arrays/strings/numbers/
-    * bool/null) — keeps the metadata layer dependency-free. */
-  private[storage] def parseJsonObject(s: String): Map[String, Any] = {
-    val p = new JsonParser(s)
-    val v = p.parseValue()
-    p.skipWs()
-    require(p.eof, s"trailing content in JSON at ${p.pos}")
-    v.asInstanceOf[Map[String, Any]]
-  }
-
-  private final class JsonParser(s: String) {
-    var pos = 0
-    def eof: Boolean = pos >= s.length
-    def skipWs(): Unit = while (!eof && s.charAt(pos).isWhitespace) pos += 1
-    private def expect(c: Char): Unit = {
-      skipWs()
-      require(!eof && s.charAt(pos) == c, s"expected '$c' at $pos")
-      pos += 1
+  /** The committed state a decoded snapshot describes (shared by the
+    * pointer and history readers). With manifest segments the file list
+    * and zone maps replay from the segments; hydration is strict — a
+    * missing segment is loud corruption (vacuum never reclaims a
+    * segment any retained snapshot references), never silently-empty
+    * zone maps. */
+  private def hydrate(location: String, s: MetaCodec.Snapshot): Meta =
+    if (s.manifest.isEmpty) s.meta(s.files, s.inlineStats)
+    else {
+      // replay the segments for the list; later segment wins for
+      // stats; dead entries (rewritten-away files) are dropped by
+      // the live-file restriction
+      val (segFiles, segStats) = replaySegments(location, s.manifest)
+      val fileSet = segFiles.toSet
+      s.meta(segFiles, segStats.filter { case (f, _) => fileSet(f) })
     }
-    def parseValue(): Any = {
-      skipWs()
-      s.charAt(pos) match {
-        case '{' => parseObject()
-        case '[' => parseArray()
-        case '"' => parseString()
-        case 't' => pos += 4; true
-        case 'f' => pos += 5; false
-        case 'n' => pos += 4; null
-        case _ => parseNumber()
-      }
-    }
-    private def parseObject(): Map[String, Any] = {
-      expect('{'); skipWs()
-      val b = Map.newBuilder[String, Any]
-      if (s.charAt(pos) == '}') { pos += 1; return b.result() }
-      var done = false
-      while (!done) {
-        skipWs()
-        val k = parseString()
-        expect(':')
-        b += (k -> parseValue())
-        skipWs()
-        if (s.charAt(pos) == ',') pos += 1 else { expect('}'); done = true }
-      }
-      b.result()
-    }
-    private def parseArray(): List[Any] = {
-      expect('['); skipWs()
-      val b = List.newBuilder[Any]
-      if (s.charAt(pos) == ']') { pos += 1; return b.result() }
-      var done = false
-      while (!done) {
-        b += parseValue()
-        skipWs()
-        if (s.charAt(pos) == ',') pos += 1 else { expect(']'); done = true }
-      }
-      b.result()
-    }
-    private def parseString(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (s.charAt(pos) != '"') {
-        val c = s.charAt(pos)
-        if (c == '\\') {
-          pos += 1
-          s.charAt(pos) match {
-            case '"' => sb += '"'
-            case '\\' => sb += '\\'
-            case '/' => sb += '/'
-            case 'n' => sb += '\n'
-            case 't' => sb += '\t'
-            case 'r' => sb += '\r'
-            case 'b' => sb += '\b'
-            case 'f' => sb += '\f'
-            case 'u' =>
-              sb += Integer.parseInt(s.substring(pos + 1, pos + 5), 16).toChar
-              pos += 4
-          }
-        } else sb += c
-        pos += 1
-      }
-      pos += 1
-      sb.toString
-    }
-    private def parseNumber(): Any = {
-      val start = pos
-      while (!eof && "+-0123456789.eE".indexOf(s.charAt(pos)) >= 0) pos += 1
-      val tok = s.substring(start, pos)
-      if (tok.exists(c => c == '.' || c == 'e' || c == 'E')) tok.toDouble
-      else tok.toLong
-    }
-  }
 }

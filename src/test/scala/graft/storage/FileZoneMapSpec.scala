@@ -62,6 +62,17 @@ class FileZoneMapSpec extends SparkSpec {
     GraftTable.drop(t.location)
   }
 
+  test("an empty IN refutes every file: readPruned keeps none and returns the table schema") {
+    val t = mkTable("zm-empty-in")
+    assert(t.prunedFiles(Seq(In("id", Array.empty[Any]))).isEmpty)
+    // a non-empty list keeps exactly the files its values can hit
+    assert(t.prunedFiles(Seq(In("id", Array[Any](5, 1005)))).size === 2)
+    val df = t.readPruned(Seq(In("id", Array.empty[Any])))
+    assert(df.schema === t.readSchema())
+    assert(df.collect().isEmpty)
+    GraftTable.drop(t.location)
+  }
+
   test("NaN discipline: NaN-carrying files never refute; NaN-free files refute NaN probes") {
     import spark.implicits._
     // Spark SQL orders NaN ABOVE every value (x > 100.0 is TRUE for a

@@ -85,8 +85,7 @@ class MetaShardSpec extends SparkSpec {
     // the full-table stats are durable in the SHARDS alone: the union of
     // the shard files equals the hydrated map
     val unioned = after.manifest
-      .map(rel => GraftTable.parseJsonObject(rawJson(t, rel))("file_stats")
-        .asInstanceOf[Map[String, Any]].keySet)
+      .map(rel => MetaCodec.segment(rawJson(t, rel), rel).stats.keySet)
       .foldLeft(Set.empty[String])(_ ++ _)
     assert(unioned === after.fileStats.keySet)
     GraftTable.drop(t.location)
@@ -229,12 +228,15 @@ class MetaShardSpec extends SparkSpec {
   test("legacy metas without the manifest key still read") {
     val t = mkSharded("ms-legacy", 3) // inline form
     val loc = new HPath(t.location).toUri.getPath
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
     for (rel <- Seq("_graft_meta.json",
         f"_graft_history/v${metaOf(t).version}%020d.json")) {
       val p = java.nio.file.Paths.get(loc, rel)
-      val stripped = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        .replaceFirst("""(?m)^\s*"manifest":\s*\[\],\s*\n""", "")
-      java.nio.file.Files.write(p, stripped.getBytes("UTF-8"))
+      val tree = json.readTree(java.nio.file.Files.readAllBytes(p))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      tree.remove("manifest")
+      java.nio.file.Files.write(p, json.writeValueAsBytes(tree))
+      assert(!json.readTree(java.nio.file.Files.readAllBytes(p)).has("manifest"), rel)
     }
     val m = GraftTable.readMeta(t.location)
     assert(m.manifest.isEmpty && m.fileStats.size === 3)
