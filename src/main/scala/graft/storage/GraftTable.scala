@@ -166,9 +166,10 @@ final class GraftTable private (
   def pendingEvolutionColumns: Seq[String] =
     meta.defaults.collect { case (k, null) => k }.toSeq.sorted
 
-  /** Parquet codec name for this table's `compression` option — for
-    * writers outside the storage package (the SQL row-level write). */
-  def parquetCodec: String = GraftTable.codecName(meta.options.compression)
+  /** [[GraftTable.parquetWriteOptions]] for this table — for writers
+    * outside the storage package (the SQL row-level writes). */
+  def parquetWriteOptions(schema: StructType): Map[String, String] =
+    GraftTable.parquetWriteOptions(meta.options, schema)
   def defaults: Map[String, Any] = meta.defaults
 
   /** True when any column may be SYNTHESIZED at read time for files
@@ -605,8 +606,10 @@ final class GraftTable private (
     if (replayed) 0L else appendLocked(df, txn, mergeSchema)
   }
 
-  /** Write one batch dir with the table's sizing/codec options, sort_by
-    * clustering, and the TIMESTAMP_MICROS override. Returns the new dir.
+  /** Write one batch dir with `layout`'s sizing/codec options and
+    * clustering (the committed table's unless a rewrite publishes a new
+    * schema or clustering with its files), and the TIMESTAMP_MICROS
+    * override. Returns the new dir.
     *
     * Timestamps are written as INT64 TIMESTAMP_MICROS, not Spark's
     * default INT96: INT96 footer stats don't order like instants, so
@@ -621,7 +624,8 @@ final class GraftTable private (
     * the same session may still observe MICROS instead of INT96; that
     * direction is benign (MICROS is the post-INT96-deprecation
     * default and reads back identically). */
-  private def writeBatchDir(df: DataFrame): String = {
+  private def writeBatchDir(df: DataFrame, layout: GraftTable.Meta = meta): String = {
+    val opts = layout.options
     // sort_by option: cluster rows within each written file so the
     // per-page/row-group min-max ranges are narrow - the reference's
     // "skip indexes are most effective on sorted load order" guidance
@@ -635,38 +639,25 @@ final class GraftTable private (
     // VALUE, so compaction and COW rewrites through this writer re-bucket
     // correctly for free. sort_by composes: rows sort within each bucket.
     val clustered =
-      if (meta.options.bucketBy.nonEmpty) {
-        val bc = meta.options.bucketBy.head
+      if (opts.bucketBy.nonEmpty) {
+        val bc = opts.bucketBy.head
         val b = GraftTable.bucketIdColumn(
-          meta.currentSchema(bc).dataType, col(bc), meta.options.bucketCount)
+          layout.currentSchema(bc).dataType, col(bc), opts.bucketCount)
         df.withColumn(GraftTable.BucketCol, b)
-          .repartition(meta.options.bucketCount, col(GraftTable.BucketCol))
+          .repartition(opts.bucketCount, col(GraftTable.BucketCol))
           .sortWithinPartitions(
-            (GraftTable.BucketCol +: meta.options.sortBy).map(col): _*)
+            (GraftTable.BucketCol +: opts.sortBy).map(col): _*)
       }
-      else if (meta.options.zorderBy.nonEmpty) zorderCluster(df)
-      else if (meta.options.sortBy.isEmpty) df
-      else df.sortWithinPartitions(meta.options.sortBy.map(col): _*)
+      else if (opts.zorderBy.nonEmpty) zorderCluster(df, layout)
+      else if (opts.sortBy.isEmpty) df
+      else df.sortWithinPartitions(opts.sortBy.map(col): _*)
     val batchDir = s"$location/data/batch-${meta.nextBatchId}-" +
       java.util.UUID.randomUUID().toString.take(8)
-    val hasTs = meta.currentSchema.fields.exists(_.dataType == TimestampType)
-    val otsKey = "spark.sql.parquet.outputTimestampType"
-    // parquet-mr's per-column bloom-filter switch; readers (Spark's
-    // included) consult the filter during row-group elimination, so a
-    // point lookup on a high-cardinality column skips row groups whose
-    // min/max range is too wide for the zone maps to refute.
-    def writeOptions: Map[String, String] = Map(
-      "compression" -> codecName(meta.options.compression),
-      "parquet.block.size" -> (meta.options.stripeRowCount * 64).toString,
-      "parquet.page.row.count.limit" -> meta.options.blockRowCount.toString) ++
-      meta.options.bloomFilterColumns.map(c =>
-        s"parquet.bloom.filter.enabled#$c" -> "true")
+    val writeOptions = GraftTable.parquetWriteOptions(opts, layout.currentSchema)
     def runClassic(): Unit = {
-      val w = writeOptions.foldLeft(clustered.write) { case (acc, (k, v)) =>
-        acc.option(k, v)
-      }
+      val w = clustered.write.options(writeOptions)
       val wp =
-        if (meta.options.bucketBy.nonEmpty) w.partitionBy(GraftTable.BucketCol)
+        if (opts.bucketBy.nonEmpty) w.partitionBy(GraftTable.BucketCol)
         else w
       wp.mode(SaveMode.Overwrite).parquet(batchDir)
     }
@@ -681,13 +672,13 @@ final class GraftTable private (
     // back to the classic write + re-read harvest — slower, never
     // wrong.
     def run(): Unit = {
-      val collFields = collatedFields
+      val collFields = collatedFields(layout.currentSchema)
       if (collFields.isEmpty) runClassic()
       else {
         val collNamesIds = collFields.toSeq.map(f =>
           f.name -> GraftTable.collatedType(f.dataType).get.collationId)
         val partCol =
-          if (meta.options.bucketBy.nonEmpty) Some(GraftTable.BucketCol)
+          if (opts.bucketBy.nonEmpty) Some(GraftTable.BucketCol)
           else None
         try {
           pendingWitnesses = org.apache.spark.sql.graft.WitnessWrite
@@ -704,9 +695,10 @@ final class GraftTable private (
         }
       }
     }
-    if (hasTs) GraftTable.writeConfLock.synchronized {
+    val otsKey = GraftTable.OutputTimestampType
+    if (writeOptions.contains(otsKey)) GraftTable.writeConfLock.synchronized {
       val prevOts = spark.conf.get(otsKey)
-      spark.conf.set(otsKey, "TIMESTAMP_MICROS")
+      spark.conf.set(otsKey, writeOptions(otsKey))
       try run() finally spark.conf.set(otsKey, prevOts)
     } else run()
     batchDir
@@ -726,13 +718,13 @@ final class GraftTable private (
     * The quantile pass re-executes the caller's plan once; callers
     * appending an expensive transformation should persist it first
     * (same eager-input contract as d5's documentation). */
-  private def zorderCluster(df: DataFrame): DataFrame = {
-    val zcols = meta.options.zorderBy
+  private def zorderCluster(df: DataFrame, layout: GraftTable.Meta): DataFrame = {
+    val zcols = layout.options.zorderBy
     val bits = 6
     val buckets = 1 << bits
     // monotone numeric view of each column (quantiles + bucketing must
     // use the same mapping)
-    def asNum(c: String): Column = meta.currentSchema(c).dataType match {
+    def asNum(c: String): Column = layout.currentSchema(c).dataType match {
       case DateType => col(c).cast("int").cast("double")
       case _ => col(c).cast("double")
     }
@@ -811,63 +803,21 @@ final class GraftTable private (
         }
         out.map(f => StructField(f.name, f.dataType, nullable = true))
       }
-    val schemaAtWrite =
-      if (novel.isEmpty) schemaBefore else StructType(schemaBefore.fields ++ novel)
-    val batchDir = writeBatchDir(alignTo(df, schemaAtWrite))
-    val newFiles = listParquetFiles(batchDir)
-    try enforceChecks(newFiles, schemaAtWrite, "append")
-    catch { case e: Throwable =>
-      // refused data never commits; reclaim the staged batch eagerly
-      // (a crash here still leaves only vacuum-able residue)
-      val (fs, _) = GraftTable.fsAndPath(location)
-      try fs.delete(new HPath(batchDir), true) catch { case _: Exception => () }
-      throw e
-    }
-    val infos = footerInfosRel(newFiles)
-    val n = infos.map(_._2._1).sum
-    val committed = commitMutation { base =>
-      // the batch was written against the schema observed under the
-      // lock; if a concurrent writer ALTERed between our write and our
-      // claim, committing the old-shape files could corrupt reads (e.g.
-      // a type change) — fail clearly; the orphan batch dir is vacuum's
-      // to reclaim. A schema-evolving append additionally publishes its
-      // evolved schema in this same commit.
-      require(base.currentSchema == schemaBefore,
-        s"concurrent schema change during append to $location — retry the append")
-      txn.foreach { case (qid, bid) =>
-        // a replay detected only at REBASE time (a zombie driver's twin
-        // committed the batch after our front-door check) is the same
-        // no-op the front door returns — failing the live query here
-        // would break appendStream's idempotence contract
-        if (base.streamTxn.get(qid).exists(_ >= bid))
-          throw new GraftTable.CommitSuperseded(
-            s"stream batch $bid for query $qid was committed concurrently")
-      }
-      base.copy(
-        currentSchema = schemaAtWrite,
-        files = base.files ++ infos.map(_._1),
-        rowCount = base.rowCount + n,
-        nextBatchId = base.nextBatchId + 1,
-        fileStats = base.fileStats ++ infos.collect {
-          case (rel, (_, st)) if st.nonEmpty => rel -> st
-        },
-        // evolved columns record a NULL default: the entry marks "older
-        // files lack this column", which refuses footer aggregate
-        // pushdown (pre-evolution footers have no stats for it) — same
-        // rule as ALTER ADD COLUMN
-        defaults = base.defaults ++ novel.map(_.name -> (null: Any)),
-        streamTxn = txn.fold(base.streamTxn) { case (qid, bid) =>
-          base.streamTxn + (qid -> bid)
-        })
-    }
-    if (!committed) {
-      // the batch dir was never referenced by any commit; reclaim it
-      // now rather than leaving it to vacuum
-      try { val (fs, _) = GraftTable.fsAndPath(location)
-        fs.delete(new HPath(batchDir), true) } catch { case _: Exception => () }
-      return 0L
-    }
-    n
+    val evolved = StructType(schemaBefore.fields ++ novel)
+    val layout = meta.copy(currentSchema = evolved)
+    val batchDir = writeBatchDir(alignTo(df, evolved), layout)
+    val added = addedInfos(listParquetFiles(batchDir), evolved)
+    val n = added.map(_._2._1).sum
+    // a schema-evolving append publishes its evolved schema in the same
+    // commit; evolved columns record a NULL default: the entry marks
+    // "older files lack this column", which refuses footer aggregate
+    // pushdown (pre-evolution footers have no stats for it) — same rule
+    // as ALTER ADD COLUMN
+    val evolve = Option.when(novel.nonEmpty)((m: GraftTable.Meta) => m.copy(
+      currentSchema = evolved, defaults = m.defaults ++ novel.map(_.name -> (null: Any))))
+    val committed = swap(GraftTable.Swap("append", schemaBefore, added = added,
+      rowDelta = n, checked = true, txn = txn, dirs = Seq(batchDir), fix = evolve))
+    if (committed) n else 0L
   }
 
   /** Row count + per-column zone map of a just-written file, from its
@@ -884,7 +834,8 @@ final class GraftTable private (
     * that do have stats would record `nulls = 0` (or too-tight min/max)
     * for a file that still holds nulls / out-of-range values, and
     * `refutes()` would silently prune matching rows. */
-  private def footerInfo(file: String): (Long, Map[String, GraftTable.ColFileStats]) = {
+  private def footerInfo(file: String, schema: StructType = meta.currentSchema)
+      : (Long, Map[String, GraftTable.ColFileStats]) = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(file), spark.sessionState.newHadoopConf())
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -892,14 +843,14 @@ final class GraftTable private (
       val rows = r.getRecordCount
       val byCol = scala.collection.mutable.Map[String, GraftTable.ColFileStats]()
       val unusable = scala.collection.mutable.Set[String]()
-      val eligible = meta.currentSchema.fields
+      val eligible = schema.fields
         .filter(f => GraftTable.zoneMapEligible(f.dataType)).map(_.name).toSet
       r.getFooter.getBlocks.forEach { block =>
         block.getColumns.forEach { cc =>
           val name = cc.getPath.toDotString
           val st = cc.getStatistics
           if (eligible.contains(name)) {
-            val dt = meta.currentSchema(name).dataType
+            val dt = schema(name).dataType
             // INT96 timestamps carry stats, but their byte order does not
             // order like instants — only INT64 parquet timestamps prune.
             val primOk = dt match {
@@ -950,15 +901,14 @@ final class GraftTable private (
       }
       // (Collation-order WITNESS bounds are NOT harvested here:
       // footerInfo is the pure footer-metadata reader — every commit
-      // path harvests witnesses through [[footerInfosRel]]'s single
+      // path harvests witnesses through [[addedInfos]]'s single
       // grouped job instead.)
       (rows, (byCol -- unusable).toMap)
     } finally r.close()
   }
 
-  private def collatedFields: Array[StructField] =
-    meta.currentSchema.fields
-      .filter(f => GraftTable.collatedType(f.dataType).isDefined)
+  private def collatedFields(schema: StructType): Array[StructField] =
+    schema.fields.filter(f => GraftTable.collatedType(f.dataType).isDefined)
 
   /** One grouped aggregate computing the collation-order min/max of
     * every collated column for EVERY file in `files`: row layout is
@@ -973,10 +923,9 @@ final class GraftTable private (
     * so the normal commit pays ZERO extra read. This pass still covers
     * batches the tracker could not (its own failure fallback), keeping
     * every commit path sound either way. */
-  private def collWitnessRows(files: Seq[String])
+  private def collWitnessRows(files: Seq[String], collFields: Array[StructField])
       : Map[String, org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.functions.{min => fMin, max => fMax, col => fCol, input_file_name}
-    val collFields = collatedFields
     if (collFields.isEmpty || files.isEmpty) return Map.empty
     val sub = org.apache.spark.sql.types.StructType(collFields.toSeq)
     val aggs = collFields.flatMap(f =>
@@ -992,7 +941,7 @@ final class GraftTable private (
   /** Witnesses harvested by the LAST tracked write ([[writeBatchDir]]'s
     * collated branch), keyed by [[org.apache.spark.sql.graft
     * .WitnessWrite.fileKey]]; consumed (and cleared) by the next
-    * [[footerInfosRel]]. Writers are serialized by the table lock, and
+    * [[addedInfos]]. Writers are serialized by the table lock, and
     * every commit path harvests stats right after its write, so the
     * handoff window holds exactly one batch. */
   private var pendingWitnesses
@@ -1004,10 +953,12 @@ final class GraftTable private (
     * came through the tracked writer, with the single-job re-read
     * ([[collWitnessRows]]) as the fallback for any file the tracker
     * did not cover. Returns `(relativePath, info)` in the input
-    * order — the shape every commit path's `infos` wants. */
-  private def footerInfosRel(files: Seq[String])
-      : Seq[(String, (Long, Map[String, GraftTable.ColFileStats]))] = {
-    val collFields = collatedFields
+    * order for the files holding rows — the shape [[Swap]]'s `added`
+    * wants (a fully-deleted or empty output leaves no file behind).
+    * `schema` is the one the files were written under. */
+  private def addedInfos(files: Seq[String], schema: StructType = meta.currentSchema)
+      : Seq[GraftTable.FileInfo] = {
+    val collFields = collatedFields(schema)
     val tracked: Map[String, IndexedSeq[Option[(String, String)]]] =
       if (collFields.isEmpty) Map.empty
       else files.flatMap(f =>
@@ -1015,9 +966,9 @@ final class GraftTable private (
           org.apache.spark.sql.graft.WitnessWrite.fileKey(f)).map(f -> _))
         .toMap
     pendingWitnesses = Map.empty
-    val witnesses = collWitnessRows(files.filterNot(tracked.contains))
-    files.map { f =>
-      val (rows, base) = footerInfo(f)
+    val witnesses = collWitnessRows(files.filterNot(tracked.contains), collFields)
+    files.flatMap { f =>
+      val (rows, base) = footerInfo(f, schema)
       val merged = tracked.get(f) match {
         case Some(opts) =>
           base ++ collFields.toSeq.zip(opts).flatMap { case (cf, o) =>
@@ -1040,7 +991,7 @@ final class GraftTable private (
           case None => base
         }
       }
-      relativize(f, location) -> ((rows, merged))
+      if (rows == 0L) None else Some(relativize(f, location) -> ((rows, merged)))
     }
   }
 
@@ -1352,24 +1303,6 @@ final class GraftTable private (
     n
   }
 
-  /** Compact the table's data files: rewrite all committed rows as one
-    * fresh batch of stripe-sized files and atomically swap the file
-    * list. Streaming ingest (micro-batch appends) accumulates small
-    * files whose per-file scheduling/footer overhead eventually
-    * dominates a 1000-executor scan — the small-files problem the
-    * append-only reference leaves open (`TODO.md`'s vacuum item).
-    *
-    * Readers are never torn: the new files are fully written before the
-    * metadata rename, and a pre-compaction reader keeps its snapshot —
-    * the REPLACED batch dirs are deliberately left on disk, because a
-    * scan planned over the old file list may still be executing; a
-    * later [[vacuum]] (run when no long scans are live) reclaims them,
-    * the same two-phase discipline object-store table formats use. A
-    * crash between write and commit leaves an orphaned batch dir that
-    * `vacuum` also removes — never wrong results. Zone maps, row count,
-    * and stream-txn watermarks carry through, the zone maps recomputed
-    * from the new footers. Returns the number of data files after
-    * compaction. */
   /** Incremental compaction — the 100 TB maintenance shape. A full
     * [[compact]] rewrites the whole table, which is not viable on a
     * large one; the steady-state problem is the SMALL-FILE TAIL
@@ -1389,19 +1322,8 @@ final class GraftTable private (
       r -> fs.getFileStatus(new HPath(s"$location/$r")).getLen)
     val small = sized.filter(_._2 < smallBytes)
     if (small.size <= 1) return 0 // one small file merges with nothing
-    val smallRels = small.map(_._1)
-    val schemaAtWrite = meta.currentSchema
-    // expected output = LIVE rows: footer rows net of deletion vectors
-    // (the rewrite materializes any vector a small file carries)
-    val expectRows = smallRels.map(r => footerInfo(s"$location/$r")._1 -
-      meta.dvs.get(r).map(_.card).getOrElse(0L)).sum
-    val nOut = math.max(1L,
-      (small.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
-    val batchDir = writeBatchDir(clusterPreserving(readFilesDf(smallRels), nOut))
-    val got = listParquetFiles(batchDir).map(f => footerInfo(f)._1).sum
-    require(got == expectRows,
-      s"small-file compaction row mismatch: rewrote $got of $expectRows rows")
-    commitRewrite(smallRels, batchDir, schemaAtWrite, 0L, "COMPACT_SMALL")
+    rewrite("small-file compaction", small.map(_._1),
+      math.max(1L, (small.map(_._2).sum + targetBytes - 1) / targetBytes).toInt)
     small.size
   }
 
@@ -1488,93 +1410,85 @@ final class GraftTable private (
           val (fs, _) = GraftTable.fsAndPath(location)
           val bytes = groupRels.map(r =>
             fs.getFileStatus(new HPath(s"$location/$r")).getLen).sum
-          val schemaAtWrite = meta.currentSchema
-          val expectRows = groupRels.map(r => footerInfo(s"$location/$r")._1 -
-            meta.dvs.get(r).map(_.card).getOrElse(0L)).sum
-          val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-          val batchDir =
-            writeBatchDir(clusterPreserving(readFilesDf(groupRels), nOut))
-          val got = listParquetFiles(batchDir).map(f => footerInfo(f)._1).sum
-          require(got == expectRows,
-            s"overlap compaction row mismatch: rewrote $got of $expectRows rows")
-          commitRewrite(groupRels, batchDir, schemaAtWrite, 0L, "COMPACT_OVERLAP")
+          rewrite("overlap compaction", groupRels,
+            math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt)
           folded += groupRels.size
         }
       }
     folded
   }
 
-  /** Partitioning for a compaction rewrite that PRESERVES the table's
-    * clustering value: a `sort_by` table range-partitions on its sort
-    * keys so the merged files stay range-DISJOINT (zone maps keep
-    * point-pruning to one file and the scan's proven-order claim can
-    * hold again) — a plain `repartition` would hash rows across every
-    * output file and quietly degrade a clustered table's pruning with
-    * each maintenance cycle. Bucketed and Z-ordered layouts partition
-    * inside the batch writer itself; unclustered tables just merge. */
-  private def clusterPreserving(df: DataFrame, target: Int): DataFrame =
-    if (meta.options.bucketBy.nonEmpty || meta.options.zorderBy.nonEmpty) df
-    else if (meta.options.sortBy.nonEmpty)
-      df.repartitionByRange(target, meta.options.sortBy.map(col): _*)
+  /** Partitioning for a rewrite that PRESERVES (or, for recluster and
+    * rename, establishes) the clustering of `opts`: a `sort_by` table
+    * range-partitions on its sort keys so the merged files stay
+    * range-DISJOINT (zone maps keep point-pruning to one file and the
+    * scan's proven-order claim can hold again) — a plain `repartition`
+    * would hash rows across every output file and quietly degrade a
+    * clustered table's pruning with each maintenance cycle. Bucketed and
+    * Z-ordered layouts partition inside the batch writer itself;
+    * unclustered tables just merge (repartitionByRange with zero
+    * expressions would throw). */
+  private def clusterPreserving(df: DataFrame, target: Int,
+      opts: GraftTableOptions): DataFrame =
+    if (opts.bucketBy.nonEmpty || opts.zorderBy.nonEmpty) df
+    else if (opts.sortBy.nonEmpty)
+      df.repartitionByRange(target, opts.sortBy.map(col): _*)
     else df.repartition(target)
 
+  /** The row-preserving rewrite behind compaction (full, small-file and
+    * overlap), vector materialization, recluster and rename: read `rels`
+    * with their vectors applied (`project` renames columns), partition
+    * with [[clusterPreserving]] into `nOut` files under `layout` — the
+    * committed table's, or the new schema/options a recluster or rename
+    * publishes — write, check that the rows written are the live rows
+    * read, and [[swap]] them in with `fix`. No CHECK gate: the rows
+    * already passed at their own ingest. Row count is unchanged, so a
+    * streaming source sees nothing; zone maps recompute from the new
+    * footers; concurrent appends are carried. */
+  private def rewrite(what: String, rels: Seq[String], nOut: Int,
+      layout: GraftTable.Meta = meta, fix: Option[GraftTable.Meta => GraftTable.Meta] = None,
+      project: DataFrame => DataFrame = identity): Unit = {
+    val live = rels.map(r => fileRowCount(r) - meta.dvs.get(r).fold(0L)(_.card)).sum
+    val dirs = if (rels.isEmpty) Nil else Seq(writeBatchDir(
+      clusterPreserving(project(readFilesDf(rels)), nOut, layout.options), layout))
+    val added = dirs.flatMap(d => addedInfos(listParquetFiles(d), layout.currentSchema))
+    val got = added.map(_._2._1).sum
+    require(got == live, s"$what row mismatch: rewrote $got of $live live rows")
+    swap(GraftTable.Swap(what, meta.currentSchema, replaced = rels, dvsAtScan = meta.dvs,
+      added = added, batches = dirs.size, dirs = dirs, fix = fix))
+  }
+
+  /** One output file per `stripe_row_count` rows — the output count of
+    * the full rewrites. */
+  private def stripeOutputs: Int = math.max(1L,
+    (meta.rowCount + meta.options.stripeRowCount - 1) / meta.options.stripeRowCount).toInt
+
+  /** Compact the table's data files: rewrite all committed rows as one
+    * fresh batch of stripe-sized files and atomically swap the file
+    * list. Streaming ingest (micro-batch appends) accumulates small
+    * files whose per-file scheduling/footer overhead eventually
+    * dominates a 1000-executor scan — the small-files problem the
+    * append-only reference leaves open (`TODO.md`'s vacuum item).
+    *
+    * Readers are never torn: the new files are fully written before the
+    * metadata rename, and a pre-compaction reader keeps its snapshot —
+    * the REPLACED batch dirs are deliberately left on disk, because a
+    * scan planned over the old file list may still be executing; a
+    * later [[vacuum]] (run when no long scans are live) reclaims them,
+    * the same two-phase discipline object-store table formats use. A
+    * crash between write and commit leaves an orphaned batch dir that
+    * `vacuum` also removes — never wrong results. Zone maps, row count,
+    * and stream-txn watermarks carry through, the zone maps recomputed
+    * from the new footers. Evolution markers (dropped-column
+    * tombstones, NULL-default "older files lack this column" entries)
+    * clear only through a full rewrite, so their presence forces one
+    * even on a 0/1-file table. Returns the number of data files after
+    * compaction. */
   def compact(): Int = withTableLock {
     refreshMeta()
-    // evolution markers (dropped-column tombstones, null-default "older
-    // files lack this column" entries) clear only through a FULL
-    // rewrite — so their presence forces one even on a 0/1-file table
-    val markers = meta.droppedCols.nonEmpty ||
-      meta.defaults.values.exists(_ == null)
-    if (meta.files.isEmpty) {
-      if (markers) commitMutation(base => base.copy(
-        defaults = base.defaults.filter { case (_, v) => v != null },
-        droppedCols = Vector.empty))
-      0
-    } else if (meta.files.size == 1 && !markers) 1
-    else {
-      // one output file per stripeRowCount rows — the merge IS the point
-      val target = math.max(1L,
-        (meta.rowCount + meta.options.stripeRowCount - 1) / meta.options.stripeRowCount)
-      val batchDir = writeBatchDir(clusterPreserving(read(), target.toInt))
-      val newFiles = listParquetFiles(batchDir)
-      val infos = footerInfosRel(newFiles)
-      val n = infos.map(_._2._1).sum
-      val before = meta
-      require(n == before.rowCount,
-        s"compaction row count mismatch: rewrote $n of ${before.rowCount} rows")
-      commitMutation { base =>
-        // the rewrite covers exactly `before`'s files; a rebase may only
-        // CARRY FORWARD files appended since (their rows are not in the
-        // rewrite). Anything else — a concurrent truncate, compaction,
-        // or ALTER — invalidates the rewrite: abort, leaving the new
-        // batch dir as a vacuum orphan.
-        require(base.currentSchema == before.currentSchema,
-          s"concurrent schema change during compaction of $location")
-        require(before.files.forall(base.files.contains),
-          s"concurrent truncate/compaction of $location — aborting this compaction")
-        require(before.files.forall(r => base.dvs.get(r) == before.dvs.get(r)),
-          s"concurrent merge-on-read delete during compaction of $location — retry")
-        val beforeSet = before.files.toSet
-        val kept = base.files.filterNot(beforeSet)
-        val keptSet = kept.toSet
-        base.copy(
-          files = infos.map(_._1).toVector ++ kept,
-          nextBatchId = base.nextBatchId + 1,
-          fileStats = infos.collect {
-            case (rel, (_, st)) if st.nonEmpty => rel -> st
-          }.toMap ++ base.fileStats.filter { case (f, _) => keptSet(f) },
-          dvs = base.dvs.view.filterKeys(keptSet).toMap,
-          // full rewrite: every surviving file now physically carries
-          // the current schema (kept files were appended post-start,
-          // schema unchanged by the guard above), so dropped-column
-          // tombstones clear and the NULL-default "older files lack
-          // this column" markers lift (re-enabling footer aggregate
-          // pushdown); real insert-defaults stay
-          defaults = base.defaults.filter { case (_, v) => v != null },
-          droppedCols = Vector.empty)
-      }
-      meta.files.size
-    }
+    if (meta.files.size > 1 || meta.droppedCols.nonEmpty || meta.defaults.values.exists(_ == null))
+      rewrite("compaction", meta.files, stripeOutputs, fix = Some(GraftTable.fullRewrite))
+    meta.files.size
   }
 
   /** Deep CLONE: an independent table at `dest` with this table's
@@ -1653,65 +1567,10 @@ final class GraftTable private (
       require(dt.isInstanceOf[NumericType] || dt == DateType || dt == TimestampType,
         s"zorder_by column '$c' must be numeric, date, or timestamp (got $dt)")
     }
-    val before = meta
-    if (before.files.isEmpty) {
-      commitMutation(base => base.copy(options =
-        base.options.copy(sortBy = sortBy, zorderBy = zorderBy)))
-      0
-    } else {
-      // the batch writer reads clustering from `meta.options` — point it
-      // at the new declaration for the rewrite; restored on abort
-      meta = before.copy(options = newOpts)
-      try {
-        val target = math.max(1L, (before.rowCount + newOpts.stripeRowCount - 1)
-          / newOpts.stripeRowCount).toInt
-        // range-partition on the new keys so FILES are range-disjoint
-        // (append's sortWithinPartitions alone only sorts within
-        // whatever partitioning the input arrived with); bucketed and
-        // zorder layouts partition inside the writer itself
-        val input =
-          if (newOpts.bucketBy.nonEmpty || zorderBy.nonEmpty) read()
-          else if (sortBy.isEmpty)
-            // DE-cluster (both column lists empty): a plain rewrite —
-            // repartitionByRange with zero expressions would throw
-            read().repartition(target)
-          else read().repartitionByRange(target, sortBy.map(col): _*)
-        val batchDir = writeBatchDir(input)
-        val newFiles = listParquetFiles(batchDir)
-        val infos = footerInfosRel(newFiles)
-        val n = infos.map(_._2._1).sum
-        require(n == before.rowCount,
-          s"recluster row count mismatch: rewrote $n of ${before.rowCount} rows")
-        // the commit's first-attempt base is the IN-MEMORY meta — restore
-        // the pre-recluster state so the rebase guard runs against the
-        // on-disk state, not our own staged option change
-        meta = before
-        commitMutation { base =>
-          require(base.currentSchema == before.currentSchema,
-            s"concurrent schema change during recluster of $location")
-          require(before.files.forall(base.files.contains),
-            s"concurrent compaction/truncate during recluster of $location")
-          require(before.files.forall(r => base.dvs.get(r) == before.dvs.get(r)),
-            s"concurrent merge-on-read delete during recluster of $location — retry")
-          val beforeSet = before.files.toSet
-          val kept = base.files.filterNot(beforeSet)
-          val keptSet = kept.toSet
-          base.copy(
-            files = infos.map(_._1).toVector ++ kept,
-            options = base.options.copy(sortBy = sortBy, zorderBy = zorderBy),
-            nextBatchId = base.nextBatchId + 1,
-            fileStats = infos.collect {
-              case (rel, (_, st)) if st.nonEmpty => rel -> st
-            }.toMap ++ base.fileStats.filter { case (f, _) => keptSet(f) },
-            dvs = base.dvs.view.filterKeys(keptSet).toMap,
-            // full rewrite — same tombstone/null-marker clearing as
-            // compact() (see there)
-            defaults = base.defaults.filter { case (_, v) => v != null },
-            droppedCols = Vector.empty)
-        }
-        meta.files.size
-      } catch { case e: Throwable => meta = before; throw e }
-    }
+    rewrite("recluster", meta.files, stripeOutputs, meta.copy(options = newOpts),
+      fix = Some(m => GraftTable.fullRewrite(m).copy(
+        options = m.options.copy(sortBy = sortBy, zorderBy = zorderBy))))
+    meta.files.size
   }
 
   /** RENAME COLUMN. The reference gets rename for free: PostgreSQL
@@ -1727,8 +1586,9 @@ final class GraftTable private (
     * [[recluster]]; the metadata-only rename is cstore's positional
     * luxury, not parquet's. Any ALTER-added synthesized default is
     * materialized by the rewrite, so the renamed column reads
-    * identically from every file. Concurrent commits abort the rename
-    * (a carried file would still hold the OLD name). */
+    * identically from every file. A concurrent commit that adds a file
+    * aborts the rename (the carried file would still hold the OLD
+    * name). */
   def renameColumn(from: String, to: String): Unit = withTableLock {
     refreshMeta()
     require(meta.currentSchema.fieldNames.contains(from), s"no such column $from")
@@ -1757,59 +1617,17 @@ final class GraftTable private (
           "references it — drop the constraint, rename, then re-add it " +
           "under the new name") }
     }
-    if (before.files.isEmpty) {
-      commitMutation(base => base.copy(
-        currentSchema = newSchema, options = newOpts, defaults = newDefaults))
-      return
-    }
-    val renamed = read().withColumnRenamed(from, to)
-    // the batch writer reads schema/options from `meta` — point it at
-    // the post-rename declaration for the rewrite; restored on abort
-    meta = before.copy(currentSchema = newSchema, options = newOpts,
-      defaults = newDefaults)
-    try {
-      val target = math.max(1L, (before.rowCount + newOpts.stripeRowCount - 1)
-        / newOpts.stripeRowCount).toInt
-      // preserve range-disjoint clustering where it exists (same
-      // partitioning discipline as recluster); bucketed and zorder
-      // layouts partition inside the writer
-      val input =
-        if (newOpts.bucketBy.nonEmpty || newOpts.zorderBy.nonEmpty) renamed
-        else if (newOpts.sortBy.nonEmpty)
-          renamed.repartitionByRange(target, newOpts.sortBy.map(col): _*)
-        else renamed.repartition(target)
-      val batchDir = writeBatchDir(input)
-      val infos = footerInfosRel(listParquetFiles(batchDir))
-      val n = infos.map(_._2._1).sum
-      require(n == before.rowCount,
-        s"rename rewrite row count mismatch: rewrote $n of ${before.rowCount} rows")
-      // the commit's first-attempt base is the IN-MEMORY meta — restore
-      // the pre-rename state so the concurrency guard compares against
-      // what is actually on disk, not our own staged mutation
-      meta = before
-      commitMutation { base =>
-        require(base.currentSchema == before.currentSchema &&
-          base.files == before.files && base.dvs == before.dvs,
+    val renamed = before.files.toSet
+    rewrite("RENAME COLUMN", before.files, stripeOutputs,
+      before.copy(currentSchema = newSchema, options = newOpts),
+      fix = Some { m =>
+        require(m.files.forall(renamed),
           s"concurrent commit during RENAME COLUMN of $location — retry " +
             "(a carried file would still hold the old column name)")
-        base.copy(
-          currentSchema = newSchema,
-          options = newOpts,
-          // full rewrite: null-default "older files lack this column"
-          // markers lift, dropped-column tombstones clear (every file
-          // now physically carries exactly the new schema)
-          defaults = newDefaults.filter { case (_, v) => v != null },
-          files = infos.map(_._1).toVector,
-          nextBatchId = base.nextBatchId + 1,
-          fileStats = infos.collect {
-            case (rel, (_, st)) if st.nonEmpty => rel -> st
-          }.toMap,
-          // the rewrite materialized every vector
-          dvs = Map.empty,
-          droppedCols = Vector.empty)
-      }
-      ()
-    } catch { case e: Throwable => meta = before; throw e }
+        GraftTable.fullRewrite(m.copy(currentSchema = newSchema, options = newOpts,
+          defaults = newDefaults))
+      },
+      project = _.withColumnRenamed(from, to))
   }
 
   // ---- row-level DELETE / UPDATE (copy-on-write) ---------------------
@@ -1847,53 +1665,6 @@ final class GraftTable private (
         col(f.name).as(f.name, f.metadata)).toIndexedSeq: _*)
   }
 
-  /** Commit a copy-on-write rewrite: `replaced` files leave the list,
-    * the batch dir's non-empty outputs join it, row count moves by
-    * `rowDelta`. Aborts (leaving the batch dir as a vacuum orphan) on a
-    * concurrent schema change or a concurrent rewrite of the same
-    * files; plain concurrent appends rebase and are carried forward. */
-  private def commitRewrite(replaced: Seq[String], batchDir: String,
-      schemaAtWrite: StructType, rowDelta: Long, what: String): Unit = {
-    val newFiles = listParquetFiles(batchDir)
-    // value-CHANGING rewrites re-validate (updated values must hold);
-    // row-preserving ones (DELETE, compaction, materialization) carry
-    // rows that already passed at their own ingest
-    if (what == "UPDATE" || what == "MERGE")
-      try enforceChecks(newFiles, schemaAtWrite, what)
-      catch { case e: Throwable =>
-        // refused data never commits; reclaim the staged dir eagerly
-        // (same discipline as appendLocked — a crash here still leaves
-        // only vacuum-able residue)
-        val (fs, _) = GraftTable.fsAndPath(location)
-        try fs.delete(new HPath(batchDir), true) catch { case _: Exception => () }
-        throw e
-      }
-    val infos = footerInfosRel(newFiles)
-      .filter(_._2._1 > 0L) // an all-deleted rewrite leaves no file behind
-    val candSet = replaced.toSet
-    // the rewrite read the replaced files under THESE deletion vectors;
-    // a concurrent MOR delete on any of them would make the staged files
-    // resurrect its dead rows — abort instead (retryable)
-    val dvsAtScan = meta.dvs
-    commitMutation { base =>
-      require(base.currentSchema == schemaAtWrite,
-        s"concurrent schema change during $what of $location — retry")
-      require(replaced.forall(base.files.contains),
-        s"concurrent compaction/truncate during $what of $location — retry")
-      require(replaced.forall(r => base.dvs.get(r) == dvsAtScan.get(r)),
-        s"concurrent merge-on-read delete during $what of $location — retry")
-      base.copy(
-        files = base.files.filterNot(candSet) ++ infos.map(_._1),
-        rowCount = base.rowCount + rowDelta,
-        nextBatchId = base.nextBatchId + 1,
-        fileStats = base.fileStats.view.filterKeys(!candSet(_)).toMap ++
-          infos.collect { case (rel, (_, st)) if st.nonEmpty => rel -> st },
-        // a replaced file's vector is materialized by the rewrite
-        dvs = base.dvs.view.filterKeys(!candSet(_)).toMap)
-    }
-    ()
-  }
-
   /** DELETE rows matching the conjunction of `filters`. SQL semantics:
     * a row is deleted only when the predicate is TRUE (NULL keeps the
     * row). Returns rows deleted. For the full-table form use
@@ -1908,18 +1679,17 @@ final class GraftTable private (
     val schemaAtWrite = meta.currentSchema
     val src = readFilesDf(cands)
     val candRows = src.count() // footer-only: no filter below the count
-    val keptDf = src.filter(!coalesce(cond, lit(false)))
-    val batchDir = writeBatchDir(keptDf)
-    val kept = listParquetFiles(batchDir).map(f => footerInfo(f)._1).sum
-    val deleted = candRows - kept
+    val batchDir = writeBatchDir(src.filter(!coalesce(cond, lit(false))))
+    val added = addedInfos(listParquetFiles(batchDir))
+    val deleted = candRows - added.map(_._2._1).sum
     if (deleted == 0L) {
       // nothing matched: keep the original files instead of churning
       // them (the rewrite is byte-identical content in new files)
-      val (fs, _) = GraftTable.fsAndPath(location)
-      try fs.delete(new HPath(batchDir), true) catch { case _: Exception => () }
+      discard(Seq(batchDir))
       return 0L
     }
-    commitRewrite(cands, batchDir, schemaAtWrite, -deleted, "DELETE")
+    swap(GraftTable.Swap("DELETE", schemaAtWrite, replaced = cands, dvsAtScan = meta.dvs,
+      added = added, rowDelta = -deleted, dirs = Seq(batchDir)))
     deleted
   }
 
@@ -1986,30 +1756,14 @@ final class GraftTable private (
           s"${sparse.size} sparse files")
       // -- dense half: classic copy-on-write rewrite, same commit --------
       val denseRels = dense.keys.toVector
-      val denseInfos: Seq[(String, (Long, Map[String, GraftTable.ColFileStats]))] =
-        if (denseRels.isEmpty) Seq.empty
-        else {
-          val keptDf = readFilesDf(denseRels).filter(!coalesce(cond, lit(false)))
-          val batchDir = writeBatchDir(keptDf)
-          footerInfosRel(listParquetFiles(batchDir))
-            .filter(_._2._1 > 0L)
-        }
-      val denseSet = denseRels.toSet
-      commitMutation { base =>
-        require(base.currentSchema == schemaAtWrite,
-          s"concurrent schema change during MOR DELETE of $location — retry")
-        require(cands.forall(base.files.contains),
-          s"concurrent compaction/truncate during MOR DELETE of $location — retry")
-        require(cands.forall(r => base.dvs.get(r) == dvsAtScan.get(r)),
-          s"concurrent merge-on-read delete on $location — retry")
-        base.copy(
-          files = base.files.filterNot(denseSet) ++ denseInfos.map(_._1),
-          rowCount = base.rowCount - totalDeleted,
-          nextBatchId = base.nextBatchId + (if (denseRels.isEmpty) 0 else 1),
-          fileStats = base.fileStats.view.filterKeys(!denseSet(_)).toMap ++
-            denseInfos.collect { case (rel, (_, st)) if st.nonEmpty => rel -> st },
-          dvs = base.dvs.view.filterKeys(!denseSet(_)).toMap ++ sparseEntries)
-      }
+      val denseDirs =
+        if (denseRels.isEmpty) Nil
+        else Seq(writeBatchDir(readFilesDf(denseRels).filter(!coalesce(cond, lit(false)))))
+      swap(GraftTable.Swap("MOR DELETE", schemaAtWrite, replaced = denseRels,
+        scanned = cands, dvsAtScan = dvsAtScan,
+        added = denseDirs.flatMap(d => addedInfos(listParquetFiles(d))),
+        newDvs = sparseEntries.toSeq, rowDelta = -totalDeleted, batches = denseDirs.size,
+        dirs = denseDirs))
       totalDeleted
     }
 
@@ -2111,20 +1865,11 @@ final class GraftTable private (
         }
       }.toIndexedSeq: _*)
       val batchDir = writeBatchDir(rewritten)
-      val newVersionFiles = listParquetFiles(batchDir)
-      val newInfos = footerInfosRel(newVersionFiles)
-        .filter(_._2._1 > 0L)
-      val updated = newInfos.map(_._2._1).sum
+      val added = addedInfos(listParquetFiles(batchDir))
+      val updated = added.map(_._2._1).sum
       if (updated == 0L) {
-        val (fs, _) = GraftTable.fsAndPath(location)
-        try fs.delete(new HPath(batchDir), true) catch { case _: Exception => () }
+        discard(Seq(batchDir))
         return 0L
-      }
-      try enforceChecks(newVersionFiles, schemaAtWrite, "MOR UPDATE")
-      catch { case e: Throwable =>
-        val (fs, _) = GraftTable.fsAndPath(location)
-        try fs.delete(new HPath(batchDir), true) catch { case _: Exception => () }
-        throw e
       }
       // old versions die into sidecars (any candidate file may hold them)
       val matched = matchedRows
@@ -2137,20 +1882,9 @@ final class GraftTable private (
       require(entries.length == hitRels.size,
         s"merge-on-read UPDATE wrote ${entries.length} sidecars for " +
           s"${hitRels.size} files")
-      commitMutation { base =>
-        require(base.currentSchema == schemaAtWrite,
-          s"concurrent schema change during MOR UPDATE of $location — retry")
-        require(cands.forall(base.files.contains),
-          s"concurrent compaction/truncate during MOR UPDATE of $location — retry")
-        require(cands.forall(r => base.dvs.get(r) == dvsAtScan.get(r)),
-          s"concurrent merge-on-read mutation on $location — retry")
-        base.copy(
-          files = base.files ++ newInfos.map(_._1),
-          nextBatchId = base.nextBatchId + 1,
-          fileStats = base.fileStats ++
-            newInfos.collect { case (rel, (_, st)) if st.nonEmpty => rel -> st },
-          dvs = base.dvs ++ entries)
-      }
+      swap(GraftTable.Swap("MOR UPDATE", schemaAtWrite, scanned = cands,
+        dvsAtScan = dvsAtScan, added = added, checked = true, newDvs = entries.toSeq,
+        dirs = Seq(batchDir)))
       updated
     }
 
@@ -2184,7 +1918,9 @@ final class GraftTable private (
         }
       }.toIndexedSeq: _*)
       val batchDir = writeBatchDir(rewritten)
-      commitRewrite(cands, batchDir, schemaAtWrite, 0L, "UPDATE")
+      swap(GraftTable.Swap("UPDATE", schemaAtWrite, replaced = cands, dvsAtScan = meta.dvs,
+        added = addedInfos(listParquetFiles(batchDir)), checked = true,
+        dirs = Seq(batchDir)))
       updated
     }
 
@@ -2402,71 +2138,20 @@ final class GraftTable private (
           // already delivered, and re-emitting them would duplicate the
           // feed. The commit records the insert files as its
           // stream-visible emission (Meta.emitFiles).
-          def dirInfos(dir: String): Seq[(String, (Long, Map[String, GraftTable.ColFileStats]))] =
-            footerInfosRel(listParquetFiles(dir))
-              .filter(_._2._1 > 0L)
           val rewriteDir = writeBatchDir(rewritten)
-          val rewriteInfos = dirInfos(rewriteDir)
+          val rewriteInfos = addedInfos(listParquetFiles(rewriteDir))
           val insertDir = if (inserted > 0L) Some(writeBatchDir(inserts)) else None
-          val insertInfos = insertDir.map(dirInfos).getOrElse(Seq.empty)
-          try enforceChecks(listParquetFiles(rewriteDir) ++
-            insertDir.map(listParquetFiles).getOrElse(Seq.empty),
-            schemaAtWrite, "MERGE")
-          catch { case e: Throwable =>
-            // refused data never commits; reclaim the staged dirs
-            // eagerly — same discipline as appendLocked and the MOR
-            // update path (a crash here still leaves only vacuum-able
-            // residue)
-            val (fs, _) = GraftTable.fsAndPath(location)
-            (rewriteDir +: insertDir.toSeq).foreach { d =>
-              try fs.delete(new HPath(d), true) catch { case _: Exception => () }
-            }
-            throw e
-          }
+          val insertInfos = insertDir.toSeq.flatMap(d => addedInfos(listParquetFiles(d)))
           val n = (rewriteInfos ++ insertInfos).map(_._2._1).sum
           require(n == candRows + inserted - deleted,
             s"MERGE row conservation failure: wrote $n, " +
               s"expected ${candRows + inserted - deleted}")
-          val candSet = cands.toSet
-          val dvsAtScan = meta.dvs
-          val committed = commitMutation { base =>
-            require(base.currentSchema == schemaAtWrite,
-              s"concurrent schema change during MERGE of $location — retry")
-            require(cands.forall(base.files.contains),
-              s"concurrent compaction/truncate during MERGE of $location — retry")
-            require(cands.forall(r => base.dvs.get(r) == dvsAtScan.get(r)),
-              s"concurrent merge-on-read delete during MERGE of $location — retry")
-            txn.foreach { case (qid, bid) =>
-              // zombie-driver replay detected at rebase time: same no-op
-              // contract as appendLocked
-              if (base.streamTxn.get(qid).exists(_ >= bid))
-                throw new GraftTable.CommitSuperseded(
-                  s"stream batch $bid for query $qid was committed concurrently")
-            }
-            base.copy(
-              files = base.files.filterNot(candSet) ++
-                rewriteInfos.map(_._1) ++ insertInfos.map(_._1),
-              rowCount = base.rowCount + inserted - deleted,
-              nextBatchId = base.nextBatchId + 2,
-              fileStats = base.fileStats.view.filterKeys(!candSet(_)).toMap ++
-                (rewriteInfos ++ insertInfos).collect {
-                  case (rel, (_, st)) if st.nonEmpty => rel -> st
-                },
-              dvs = base.dvs.view.filterKeys(!candSet(_)).toMap,
-              emitFiles = insertInfos.map(_._1).toVector,
-              streamTxn = txn.fold(base.streamTxn) { case (qid, bid) =>
-                base.streamTxn + (qid -> bid)
-              })
-          }
-          if (!committed) {
-            // a zombie twin committed this batch first: the staged dirs
-            // were never referenced — reclaim them now, report the no-op
-            try { val (fs, _) = GraftTable.fsAndPath(location)
-              (Seq(rewriteDir) ++ insertDir)
-                .foreach(d => fs.delete(new HPath(d), true))
-            } catch { case _: Exception => () }
-            (0L, 0L, 0L)
-          } else (updated, inserted, deleted)
+          // not committed: a zombie twin committed this batch first
+          val committed = swap(GraftTable.Swap("MERGE", schemaAtWrite, replaced = cands,
+            dvsAtScan = meta.dvs, added = rewriteInfos ++ insertInfos, checked = true,
+            emitted = insertInfos.map(_._1), txn = txn, rowDelta = inserted - deleted,
+            batches = 2, dirs = rewriteDir +: insertDir.toSeq))
+          if (committed) (updated, inserted, deleted) else (0L, 0L, 0L)
         }
       }
     } finally { s0.unpersist(); d0.foreach(_.unpersist()); () }
@@ -2677,49 +2362,28 @@ final class GraftTable private (
     // so a directory listing here would race it. The listing fallback
     // exists for single-writer callers (tests) only.
     val staged = stagedFiles.getOrElse(listParquetFiles(stagingDir))
-    // DELETE carries rows that already passed; UPDATE/MERGE staged files
-    // hold new values and must hold the CHECK constraints
-    if (what != "DELETE") enforceChecks(staged, schemaAtWrite, what)
-    val infos = footerInfosRel(staged)
-      .filter(_._2._1 > 0L) // a fully-deleted group leaves no file behind
-    if (replaced.isEmpty && infos.isEmpty) {
-      // the operation touched no group and wrote no rows — leave no trace
-      val (fs, _) = GraftTable.fsAndPath(location)
-      try fs.delete(new HPath(stagingDir), true) catch { case _: Exception => () }
-      return
-    }
-    val newRows = infos.map(_._2._1).sum
+    val added = addedInfos(staged) // a fully-deleted group leaves no file behind
     // replaced LIVE rows: footer rows net of each group's deletion
     // vector (the COW scan filtered those positions, so the staged
     // output never contained them)
-    val replacedRows = replaced.map(r => footerInfo(s"$location/$r")._1 -
+    val replacedRows = replaced.map(r => fileRowCount(r) -
       dvsAt.get(r).map(_.card).getOrElse(0L)).sum
-    val delta = newRows - replacedRows
-    val candSet = replaced.toSet
-    commitMutation { base =>
-      require(base.currentSchema == schemaAtWrite,
-        s"concurrent schema change during $what of $location — retry")
-      require(replaced.forall(base.files.contains),
-        s"concurrent compaction/truncate during $what of $location — retry")
-      require(replaced.forall(r => base.dvs.get(r) == dvsAt.get(r)),
-        s"concurrent merge-on-read delete during $what of $location — retry")
-      base.copy(
-        files = base.files.filterNot(candSet) ++ infos.map(_._1),
-        rowCount = base.rowCount + delta,
-        nextBatchId = base.nextBatchId + 1,
-        fileStats = base.fileStats.view.filterKeys(!candSet(_)).toMap ++
-          infos.collect { case (rel, (_, st)) if st.nonEmpty => rel -> st },
-        dvs = base.dvs.view.filterKeys(!candSet(_)).toMap,
-        // EVERY SQL MERGE that rewrote groups is a change commit: its
-        // staged files mix carried rows with any inserted ones, and the
-        // row-count delta cannot reveal whether inserts exist (a
-        // delete-heavy merge with inserts still shrinks the count) —
-        // so the flag must not be gated on delta. DELETE/UPDATE never
-        // add rows; their commits stay stream-invisible by the
-        // row-growth rule alone.
-        changeCommit = what == "MERGE" && replaced.nonEmpty && infos.nonEmpty)
-    }
-    ()
+    // an operation that touched no group and wrote no rows leaves no trace
+    swap(GraftTable.Swap(what, schemaAtWrite, replaced = replaced, dvsAtScan = dvsAt,
+      added = added,
+      // DELETE carries rows that already passed; UPDATE/MERGE staged
+      // files hold new values and must hold the CHECK constraints
+      checked = what != "DELETE",
+      rowDelta = added.map(_._2._1).sum - replacedRows,
+      // EVERY SQL MERGE that rewrote groups is a change commit: its
+      // staged files mix carried rows with any inserted ones, and the
+      // row-count delta cannot reveal whether inserts exist (a
+      // delete-heavy merge with inserts still shrinks the count) — so
+      // the flag must not be gated on delta. DELETE/UPDATE never add
+      // rows; their commits stay stream-invisible by the row-growth
+      // rule alone.
+      changeCommit = what == "MERGE" && replaced.nonEmpty && added.nonEmpty,
+      dirs = Seq(stagingDir)))
   }
 
   /** Targeted deletion-vector maintenance: rewrite ONLY the files whose
@@ -2740,15 +2404,7 @@ final class GraftTable private (
       total > 0 && e.card.toDouble / total.toDouble >= minDeadRatio
     }.keys.toVector
     if (targets.isEmpty) return 0
-    val schemaAtWrite = meta.currentSchema
-    val liveDf = readFilesDf(targets) // vectors applied
-    val expect = targets.map(r => footerInfo(s"$location/$r")._1 -
-      meta.dvs.get(r).map(_.card).getOrElse(0L)).sum
-    val batchDir = writeBatchDir(liveDf)
-    val got = listParquetFiles(batchDir).map(f => footerInfo(f)._1).sum
-    require(got == expect,
-      s"vector materialization row mismatch: rewrote $got of $expect live rows")
-    commitRewrite(targets, batchDir, schemaAtWrite, 0L, "MATERIALIZE_VECTORS")
+    rewrite("vector materialization", targets, targets.size)
     targets.size
   }
 
@@ -2770,38 +2426,16 @@ final class GraftTable private (
       insertFiles: Seq[String], reinsertFiles: Seq[String],
       deletedRows: Long): Unit = withTableLock {
     refreshMeta()
-    def infos(files: Seq[String]) = footerInfosRel(files)
-      .filter(_._2._1 > 0L)
-    val insertInfos = infos(insertFiles)
-    val reinsertInfos = infos(reinsertFiles)
-    if (newDvs.isEmpty && insertInfos.isEmpty && reinsertInfos.isEmpty) return
+    val insertInfos = addedInfos(insertFiles)
+    val reinsertInfos = addedInfos(reinsertFiles)
+    val rowDelta = (insertInfos ++ reinsertInfos).map(_._2._1).sum - deletedRows
     // both genuinely-new rows and re-stated row versions carry values
     // the CHECK constraints must hold on
-    enforceChecks(insertFiles ++ reinsertFiles, schemaAtWrite, what)
-    val insertRows = insertInfos.map(_._2._1).sum
-    val rowDelta = insertRows + reinsertInfos.map(_._2._1).sum - deletedRows
-    val touched = newDvs.map(_._1)
-    commitMutation { base =>
-      require(base.currentSchema == schemaAtWrite,
-        s"concurrent schema change during $what of $location — retry")
-      require(touched.forall(base.files.contains),
-        s"concurrent compaction/truncate during $what of $location — retry")
-      require(touched.forall(r => base.dvs.get(r) == dvsAtScan.get(r)),
-        s"concurrent merge-on-read mutation during $what of $location — retry")
-      base.copy(
-        files = base.files ++ insertInfos.map(_._1) ++ reinsertInfos.map(_._1),
-        rowCount = base.rowCount + rowDelta,
-        nextBatchId = base.nextBatchId + 1,
-        fileStats = base.fileStats ++
-          (insertInfos ++ reinsertInfos).collect {
-            case (rel, (_, st)) if st.nonEmpty => rel -> st
-          },
-        dvs = base.dvs ++ newDvs.map { case (rel, p, c) =>
-          rel -> GraftTable.DvEntry(p, c) },
-        emitFiles = insertInfos.map(_._1).toVector,
-        changeCommit = insertInfos.nonEmpty && rowDelta <= 0L)
-    }
-    ()
+    swap(GraftTable.Swap(what, schemaAtWrite, dvsAtScan = dvsAtScan,
+      added = insertInfos ++ reinsertInfos, checked = true,
+      newDvs = newDvs.map { case (rel, p, c) => rel -> GraftTable.DvEntry(p, c) },
+      emitted = insertInfos.map(_._1), changeCommit = insertInfos.nonEmpty && rowDelta <= 0L,
+      rowDelta = rowDelta))
   }
 
   /** Reclaim orphaned batch directories: data subdirectories holding no
@@ -3531,6 +3165,85 @@ final class GraftTable private (
       }
     }
 
+  /** Publish a writer's staged files — THE commit of every operation
+    * that swaps files (append, compaction, recluster, rename, COW and
+    * merge-on-read DML, MERGE, the SQL row-level commits): the
+    * reference's one commit point, the footer written by atomic rename
+    * after the stripes (`cstore_writer.c`), here the CAS claim of
+    * [[commitMutation]].
+    *
+    * Staged files holding new values must first pass the CHECK
+    * constraints. Then, against the base each claim attempt rebases on:
+    *  - the schema must be the one the files were written under;
+    *  - every file the writer read (`replaced`, `scanned`, and those
+    *    given new vectors) must still be live, under the deletion
+    *    vector it was read with — a concurrent compaction or truncate
+    *    removed it, a concurrent merge-on-read mutation would be undone
+    *    or resurrected by the staged rewrite;
+    *  - a streaming batch a twin committed first supersedes this one.
+    * Plain concurrent appends compose: the commit is
+    * `files.filterNot(replaced) ++ added`, so carried files keep their
+    * place and the manifest replays it as one delta segment. A refused
+    * or superseded swap commits nothing and deletes its staged dirs,
+    * as does a swap with nothing to publish. Returns true when it
+    * committed. */
+  private def swap(s: GraftTable.Swap): Boolean = {
+    if (s.replaced.isEmpty && s.added.isEmpty && s.newDvs.isEmpty &&
+        s.txn.isEmpty && s.fix.isEmpty) {
+      discard(s.dirs)
+      return false
+    }
+    val replaced = s.replaced.toSet
+    val read = s.replaced ++ s.scanned ++ s.newDvs.map(_._1)
+    // set while an exception can only mean nothing was claimed: the CHECK
+    // gate, or the rebase refusing. A failure of the claim write itself
+    // may follow a landed claim, so the staged files then stay (vacuum
+    // reclaims them if the claim did not land).
+    var unclaimed = true
+    val committed =
+      try {
+        if (s.checked)
+          enforceChecks(s.added.map(a => s"$location/${a._1}"), s.schemaAtWrite, s.what)
+        unclaimed = false
+        commitMutation { base =>
+          try {
+            require(base.currentSchema == s.schemaAtWrite,
+              s"concurrent schema change during ${s.what} of $location — retry")
+            require(read.forall(base.files.contains),
+              s"concurrent compaction/truncate during ${s.what} of $location — retry")
+            require(read.forall(r => base.dvs.get(r) == s.dvsAtScan.get(r)),
+              s"concurrent merge-on-read mutation during ${s.what} of $location — retry")
+            s.txn.foreach { case (qid, bid) =>
+              if (base.streamTxn.get(qid).exists(_ >= bid))
+                throw new GraftTable.CommitSuperseded(
+                  s"stream batch $bid for query $qid was committed concurrently")
+            }
+            val b = s.fix.fold(base)(_(base))
+            b.copy(
+              files = b.files.filterNot(replaced) ++ s.added.map(_._1),
+              rowCount = b.rowCount + s.rowDelta,
+              nextBatchId = b.nextBatchId + s.batches,
+              fileStats = b.fileStats -- s.replaced ++
+                s.added.collect { case (rel, (_, st)) if st.nonEmpty => rel -> st },
+              // a replaced file's vector is materialized by the rewrite
+              dvs = b.dvs -- s.replaced ++ s.newDvs,
+              emitFiles = s.emitted.toVector,
+              changeCommit = s.changeCommit,
+              streamTxn = b.streamTxn ++ s.txn)
+          } catch { case e: Throwable => unclaimed = true; throw e }
+        }
+      } catch { case e: Throwable if unclaimed => discard(s.dirs); throw e }
+    if (!committed) discard(s.dirs)
+    committed
+  }
+
+  /** Best-effort delete of staged batch dirs no commit references (a
+    * crash before it still leaves only vacuum-able residue). */
+  private def discard(dirs: Seq[String]): Unit = if (dirs.nonEmpty) {
+    val (fs, _) = GraftTable.fsAndPath(location)
+    dirs.foreach(d => try fs.delete(new HPath(d), true) catch { case _: Exception => () })
+  }
+
   /** Publish a metadata mutation via compare-and-swap on the version
     * log — the object-store-safe commit protocol.
     *
@@ -3629,6 +3342,52 @@ object GraftTable {
     * commitMutation aborts cleanly (returns false) instead of failing. */
   private[storage] final class CommitSuperseded(msg: String)
     extends RuntimeException(msg)
+
+  /** A full rewrite leaves every file physically carrying the current
+    * schema (carried files were appended under it — the swap's schema
+    * guard holds), so dropped-column tombstones clear and the
+    * NULL-default "older files lack this column" markers lift,
+    * re-enabling footer aggregate pushdown; real insert-defaults stay. */
+  private[storage] val fullRewrite: Meta => Meta = m =>
+    m.copy(defaults = m.defaults.filter { case (_, v) => v != null },
+      droppedCols = Vector.empty)
+
+  /** A committed or staged file's footer row count and zone maps, keyed
+    * by its location-relative path. */
+  private[storage] type FileInfo = (String, (Long, Map[String, ColFileStats]))
+
+  /** What a writer publishes through `GraftTable.swap`:
+    *  - `what` names the operation in refusals; `schemaAtWrite` is the
+    *    schema its files were read and written under;
+    *  - `replaced` leave the file list; they, `scanned` (read but
+    *    kept) and the files given `newDvs` were read under `dvsAtScan`;
+    *  - `added` join the list (zero-row files already dropped);
+    *    `checked` when they carry new values that must hold the CHECK
+    *    constraints (row-preserving rewrites leave it off);
+    *  - `emitted` is the stream-visible subset ([[Meta.emitFiles]]),
+    *    `changeCommit` marks a change commit, `txn` the streaming batch
+    *    it records, `rowDelta` the row-count change and `batches` the
+    *    batch ids it used;
+    *  - `dirs` are its staged dirs, deleted if nothing commits;
+    *  - `fix` adjusts the rebased metadata before the swap: a full
+    *    rewrite's schema, options and evolution markers, an evolving
+    *    append's schema; it may refuse. */
+  private[storage] final case class Swap(
+      what: String,
+      schemaAtWrite: StructType,
+      replaced: Seq[String] = Nil,
+      scanned: Seq[String] = Nil,
+      dvsAtScan: Map[String, DvEntry] = Map.empty,
+      added: Seq[FileInfo] = Nil,
+      checked: Boolean = false,
+      newDvs: Seq[(String, DvEntry)] = Nil,
+      emitted: Seq[String] = Nil,
+      changeCommit: Boolean = false,
+      txn: Option[(String, Long)] = None,
+      rowDelta: Long = 0L,
+      batches: Int = 1,
+      dirs: Seq[String] = Nil,
+      fix: Option[Meta => Meta] = None)
 
   /** Per-file per-column zone map: min/max (rendered as strings, parsed
     * by column type at prune time), null count, and row count — the
@@ -4528,6 +4287,29 @@ object GraftTable {
 
   private[storage] def codecName(c: String): String =
     if (c == "none") "uncompressed" else c
+
+  private[storage] val OutputTimestampType = "spark.sql.parquet.outputTimestampType"
+
+  /** The parquet file shape of every graft writer — the batch writer
+    * and the SQL copy-on-write and merge-on-read row-level writers:
+    * codec, row-group size, page row limit, the per-column bloom-filter
+    * switch (readers, Spark's included, consult the filter during
+    * row-group elimination, so a point lookup on a high-cardinality
+    * column skips row groups whose min/max range is too wide for the
+    * zone maps to refute) with adaptive sizing (parquet-mr otherwise
+    * gives every filter `parquet.bloom.filter.max.bytes`, 1 MiB, even
+    * in a 1-row file), and INT64 TIMESTAMP_MICROS timestamps when the
+    * schema has any. */
+  private[storage] def parquetWriteOptions(opts: GraftTableOptions,
+      schema: StructType): Map[String, String] =
+    Map(
+      "compression" -> codecName(opts.compression),
+      "parquet.block.size" -> (opts.stripeRowCount * 64).toString,
+      "parquet.page.row.count.limit" -> opts.blockRowCount.toString,
+      "parquet.bloom.filter.adaptive.enabled" -> "true") ++
+      opts.bloomFilterColumns.map(c => s"parquet.bloom.filter.enabled#$c" -> "true") ++
+      (if (schema.fields.exists(_.dataType == TimestampType))
+        Seq(OutputTimestampType -> "TIMESTAMP_MICROS") else Nil)
 
   private def metaPath(location: String): HPath =
     new HPath(location, "_graft_meta.json")

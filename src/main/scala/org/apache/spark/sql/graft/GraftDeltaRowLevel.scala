@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaW
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
@@ -121,15 +121,12 @@ object GraftDeltaRowLevel {
       val spark = SparkSession.active
       val job = Job.getInstance(spark.sessionState.newHadoopConf())
       val writeSchema = table.readSchema()
+      val writeOptions = table.parquetWriteOptions(writeSchema)
       val factory = new ParquetFileFormat().prepareWrite(spark, job,
-        Map("compression" -> table.parquetCodec), writeSchema)
+        writeOptions, writeSchema)
       val conf = job.getConfiguration
-      conf.setLong("parquet.block.size", table.options.stripeRowCount * 64)
-      conf.set("parquet.page.row.count.limit", table.options.blockRowCount.toString)
-      table.options.bloomFilterColumns.foreach(c =>
-        conf.set(s"parquet.bloom.filter.enabled#$c", "true"))
-      if (writeSchema.fields.exists(_.dataType == TimestampType))
-        conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      // after prepareWrite, which pins the session's timestamp type
+      writeOptions.foreach { case (k, v) => conf.set(k, v) }
       val p = new Path(stagingDir)
       p.getFileSystem(conf).mkdirs(p)
       val route = table.options.bucketBy.headOption.map { c =>

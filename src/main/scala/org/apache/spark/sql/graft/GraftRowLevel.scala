@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, OutputWriterFa
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder, ParquetTable}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
@@ -403,17 +403,14 @@ object GraftRowLevel {
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
       val spark = SparkSession.active
       val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val writeOptions = table.parquetWriteOptions(writeSchema)
       val factory = new ParquetFileFormat().prepareWrite(spark, job,
-        Map("compression" -> table.parquetCodec), writeSchema)
+        writeOptions, writeSchema)
       val conf = job.getConfiguration
-      conf.setLong("parquet.block.size", table.options.stripeRowCount * 64)
-      conf.set("parquet.page.row.count.limit", table.options.blockRowCount.toString)
-      table.options.bloomFilterColumns.foreach(c =>
-        conf.set(s"parquet.bloom.filter.enabled#$c", "true"))
-      // the driver-side batch writer pins micros for reference parity;
+      // set after prepareWrite, which pins the session's timestamp type:
+      // the table's batch writer writes micros for reference parity, and
       // the rewrite must not silently re-encode
-      if (writeSchema.fields.exists(_.dataType == TimestampType))
-        conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      writeOptions.foreach { case (k, v) => conf.set(k, v) }
       val p = new Path(stagingDir)
       p.getFileSystem(conf).mkdirs(p)
       val route = table.options.bucketBy.headOption.map { c =>

@@ -124,6 +124,14 @@ class ClusteringSpec extends SparkSpec {
     // point lookup correctness through the filter
     val df = spark.read.format("graft").load(loc)
     assert(df.filter(col("tag") === "tag-0").count() >= 1)
+    // the filter is sized to the data: a 1-row file stays small (an
+    // unsized parquet-mr filter is 1 MiB whatever the row count)
+    t.append(Seq((-1L, "tag-one")).toDF("id", "tag").coalesce(1))
+    val one = t.committedFiles.last
+    val onePath = new org.apache.hadoop.fs.Path(one)
+    val len = onePath.getFileSystem(spark.sessionState.newHadoopConf())
+      .getFileStatus(onePath).getLen
+    assert(len < (128L << 10), s"1-row file with a bloom column is $len bytes")
     GraftTable.drop(loc)
   }
 

@@ -16,8 +16,9 @@ import graft.SparkSpec
   * several writers, each posing as a separate process on a lock-less
   * `mock:` filesystem (no JVM monitor, no OS lock — commit safety must
   * come entirely from the CAS version claim + rebase), interleave
-  * append / merge-on-read delete / merge-on-read update / small-file
-  * compaction over the same table. Writers own DISJOINT key ranges, so
+  * append, merge-on-read and copy-on-write delete and update, MERGE,
+  * and the row-preserving rewrites (small-file and full compaction,
+  * vector materialization) over the same table. Writers own DISJOINT key ranges, so
   * every interleaving of their committed operations linearizes to the
   * same per-writer final state: rows lost by a clobbered rebase, rows
   * resurrected by a vector dropped in a rebase, or a double-applied
@@ -74,7 +75,8 @@ class ConcurrentMutationPropertySpec extends SparkSpec {
             def sample(n: Int): Seq[Int] =
               rnd.shuffle(model.keys.toVector.sorted).take(n)
             for (_ <- 1 to opsEach) {
-              rnd.nextInt(5) match {
+              def owned(ks: Seq[Int]) = Seq(In("id", ks.map(Integer.valueOf).toArray[Any]))
+              rnd.nextInt(10) match {
                 case 0 | 1 => // append a fresh owned batch
                   val rows = (0 until 4 + rnd.nextInt(6)).map { _ =>
                     nextKey += 1; (nextKey, rnd.nextLong())
@@ -84,8 +86,7 @@ class ConcurrentMutationPropertySpec extends SparkSpec {
                 case 2 => // merge-on-read delete of owned keys
                   val ks = sample(1 + rnd.nextInt(3))
                   if (ks.nonEmpty) {
-                    val n = retrying("deleteMor")(
-                      t.deleteMor(Seq(In("id", ks.map(Integer.valueOf).toArray[Any]))))
+                    val n = retrying("deleteMor")(t.deleteMor(owned(ks)))
                     assert(n === ks.size.toLong,
                       s"seed=$seed w=$w MOR delete touched foreign rows")
                     model --= ks
@@ -94,8 +95,7 @@ class ConcurrentMutationPropertySpec extends SparkSpec {
                   val ks = sample(1 + rnd.nextInt(3))
                   if (ks.nonEmpty) {
                     val n = retrying("updateMor")(
-                      t.updateMor(Map("v" -> (col("v") + lit(1000L))),
-                        Seq(In("id", ks.map(Integer.valueOf).toArray[Any]))))
+                      t.updateMor(Map("v" -> (col("v") + lit(1000L))), owned(ks)))
                     assert(n === ks.size.toLong,
                       s"seed=$seed w=$w MOR update touched foreign rows")
                     model = model ++ ks.map(k => k -> (model(k) + 1000L))
@@ -103,6 +103,38 @@ class ConcurrentMutationPropertySpec extends SparkSpec {
                 case 4 => // row-preserving maintenance racing the mutations
                   try t.compactSmall()
                   catch { case _: Exception => () } // abort allowed, trace not
+                case 5 => // copy-on-write delete of owned keys
+                  val ks = sample(1 + rnd.nextInt(3))
+                  if (ks.nonEmpty) {
+                    val n = retrying("delete")(t.delete(owned(ks)))
+                    assert(n === ks.size.toLong,
+                      s"seed=$seed w=$w COW delete touched foreign rows")
+                    model --= ks
+                  }
+                case 6 => // copy-on-write update (+1000) of owned keys
+                  val ks = sample(1 + rnd.nextInt(3))
+                  if (ks.nonEmpty) {
+                    val n = retrying("update")(
+                      t.update(Map("v" -> (col("v") + lit(1000L))), owned(ks)))
+                    assert(n === ks.size.toLong,
+                      s"seed=$seed w=$w COW update touched foreign rows")
+                    model = model ++ ks.map(k => k -> (model(k) + 1000L))
+                  }
+                case 7 => // MERGE: upsert owned keys, insert fresh ones
+                  val hit = sample(rnd.nextInt(3))
+                  val fresh = (0 until 1 + rnd.nextInt(2)).map { _ => nextKey += 1; nextKey }
+                  val rows = (hit ++ fresh).map(k => (k, rnd.nextLong()))
+                  val (u, i) = retrying("merge")(
+                    t.merge(rows.toDF("id", "v").coalesce(1), Seq("id")))
+                  assert((u, i) === ((hit.size.toLong, fresh.size.toLong)),
+                    s"seed=$seed w=$w MERGE matched foreign rows")
+                  model ++= rows
+                case 8 =>
+                  try t.materializeVectors()
+                  catch { case _: Exception => () }
+                case 9 =>
+                  try t.compact()
+                  catch { case _: Exception => () }
               }
             }
             (w, model)

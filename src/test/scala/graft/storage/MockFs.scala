@@ -17,13 +17,15 @@ import org.apache.hadoop.util.Progressable
   * exclusive-create contract of HDFS and conditional-put object stores
   * — RawLocalFileSystem's exists-then-create would let two racing
   * claims both succeed, which would make the CAS commit specs flaky
-  * instead of exercising the collision path. */
+  * instead of exercising the collision path. [[MockFs.beforeNextClaim]]
+  * injects a commit just before a writer's claim. */
 class MockFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("mock:///")
 
   // CREATE_NEW = O_EXCL: throws java.nio.file.FileAlreadyExistsException
   // atomically when the path exists
   private def createExclusive(f: Path, bufferSize: Int): FSDataOutputStream = {
+    MockFs.fireClaimHook(f)
     val p = Paths.get(f.toUri.getPath)
     if (p.getParent != null) Files.createDirectories(p.getParent)
     val out = Files.newOutputStream(p,
@@ -47,4 +49,23 @@ class MockFs extends RawLocalFileSystem {
     if (overwrite) super.create(f, overwrite, bufferSize, replication,
       blockSize, progress)
     else createExclusive(f, bufferSize)
+}
+
+object MockFs {
+  private val claimHook = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+
+  /** Run `f` once, just before the next exclusive create under
+    * `_graft_history/` — that is, just before some writer's version
+    * claim, so `f` can commit first and force the writer to rebase.
+    * The writer lock on `mock:` is a reentrant JVM monitor, so `f` may
+    * commit through a second handle of the same table on the same
+    * thread. */
+  def beforeNextClaim(f: => Unit): Unit = claimHook.set(() => f)
+
+  /** Disarm the hook; true when it had already fired. */
+  def disarmClaimHook(): Boolean = claimHook.getAndSet(null) == null
+
+  private def fireClaimHook(f: Path): Unit =
+    if (f.toUri.getPath.contains("/_graft_history/"))
+      Option(claimHook.getAndSet(null)).foreach(_())
 }
