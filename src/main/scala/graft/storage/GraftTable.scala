@@ -696,11 +696,21 @@ final class GraftTable private (
       }
     }
     val otsKey = GraftTable.OutputTimestampType
-    if (writeOptions.contains(otsKey)) GraftTable.writeConfLock.synchronized {
-      val prevOts = spark.conf.get(otsKey)
-      spark.conf.set(otsKey, writeOptions(otsKey))
-      try run() finally spark.conf.set(otsKey, prevOts)
-    } else run()
+    val flipping = GraftTable.flippingSessions
+    writeOptions.get(otsKey) match {
+      // the session already writes that type (every Tables.session does):
+      // no flip and no process-global lock — unless the value read is
+      // another writer's flip of this session, which it is about to undo
+      // (the conf is read before the flip set, which a flip joins first)
+      case Some(ots) if spark.conf.get(otsKey) == ots && !flipping.contains(spark) => run()
+      case Some(ots) => GraftTable.writeConfLock.synchronized {
+        val prevOts = spark.conf.get(otsKey)
+        flipping.add(spark)
+        spark.conf.set(otsKey, ots)
+        try run() finally { spark.conf.set(otsKey, prevOts); flipping.remove(spark) }
+      }
+      case None => run()
+    }
     batchDir
   }
 
@@ -3746,8 +3756,13 @@ object GraftTable {
 
   /** Serializes the session-wide `outputTimestampType` flip across ALL
     * graft writers in this JVM (the per-table lock can't — see
-    * `writeBatchDir`). */
+    * `writeBatchDir`). A session that already writes the wanted type
+    * (every [[graft.Tables.session]]) never takes it. */
   private[storage] val writeConfLock = new Object
+
+  /** The sessions whose `outputTimestampType` a writer has flipped under
+    * [[writeConfLock]] and not yet restored. */
+  private val flippingSessions = java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
 
   private[storage] def withWriterLock[T](location: String)(f: => T): T = {
     if (simulateSeparateProcess.get()) return f

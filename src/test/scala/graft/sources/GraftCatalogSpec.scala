@@ -938,4 +938,92 @@ class GraftCatalogSpec extends SparkSpec {
           GraftTable.drop(s"$warehouse/db1/call_idx/$t"))
     }
   }
+
+  /** Two tables of the same rows in the same commits, in `gcat.db1`: one
+    * for the CALL, one for its Scala twin. */
+  private def twins(name: String, props: String)(commits: String => Unit): (String, String) = {
+    val names = (s"${name}_call", s"${name}_twin")
+    for (n <- Seq(names._1, names._2)) {
+      spark.sql(s"CREATE TABLE gcat.db1.$n (id INT, b STRING) USING graft $props")
+      commits(s"gcat.db1.$n")
+    }
+    names
+  }
+
+  private def rowsOf(n: String) =
+    spark.table(s"gcat.db1.$n").orderBy("id").collect().map(_.toSeq).toSeq
+
+  test("CALL verify_deep equals verify(deep = true)") {
+    spark.sql("CREATE TABLE gcat.db1.vd_t (id INT, b STRING) USING graft")
+    for (i <- 0 until 3)
+      spark.sql(s"INSERT INTO gcat.db1.vd_t SELECT id, concat('v', id) FROM range(${i * 50}, ${i * 50 + 50})")
+    val got = spark.sql("CALL gcat.system.verify_deep('db1.vd_t')").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    val t = GraftTable.open(spark, s"$warehouse/db1/vd_t")
+    val issues = t.verify(deep = true)
+    assert(got === Seq(("files_checked", t.committedFiles.size.toString),
+      ("deletion_vectors_checked", t.dvEntries.size.toString),
+      ("issues_found", issues.size.toString)) ++ issues.map(("issue", _)))
+    assert(issues.isEmpty && t.committedFiles.size >= 3, "three healthy commits")
+  }
+
+  test("CALL materialize_vectors equals materializeVectors()") {
+    val (a, b) = twins("mv", "OPTIONS (delete_mode 'merge-on-read')") { t =>
+      spark.sql(s"INSERT INTO $t SELECT id, concat('v', id) FROM range(100)")
+      spark.sql(s"INSERT INTO $t SELECT id, concat('v', id) FROM range(100, 200)")
+      // 30 % of the first file dead, 1 % of the second
+      spark.sql(s"DELETE FROM $t WHERE id < 30 OR id = 150")
+    }
+    val got = spark.sql(s"CALL gcat.system.materialize_vectors('db1.$a')").collect()
+    val twin = GraftTable.open(spark, s"$warehouse/db1/$b").materializeVectors()
+    assert(got.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq ===
+      Seq((s"db1.$a", "files_materialized", twin.toLong)))
+    assert(twin === 1, "only the file past the 10 % dead threshold is rewritten")
+    assert(rowsOf(a) === rowsOf(b))
+    val (ta, tb) = (GraftTable.open(spark, s"$warehouse/db1/$a"),
+      GraftTable.open(spark, s"$warehouse/db1/$b"))
+    assert(ta.dvEntries.size === tb.dvEntries.size)
+    assert(ta.committedFiles.size === tb.committedFiles.size)
+  }
+
+  test("CALL expire_history_older_than equals expireHistoryOlderThan") {
+    val (a, b) = twins("eho", "") { t =>
+      for (i <- 0 until 4) spark.sql(s"INSERT INTO $t VALUES ($i, 'v$i')")
+    }
+    def call(hours: Int) = spark.sql(
+      s"CALL gcat.system.expire_history_older_than('db1.$a', $hours)").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    def history(n: String) = GraftTable.open(spark, s"$warehouse/db1/$n").history()
+    for (hours <- Seq(1, 0)) {
+      val got = call(hours)
+      val twin = GraftTable.open(spark, s"$warehouse/db1/$b")
+        .expireHistoryOlderThan(hours * 3600000L)
+      assert(got === Seq((s"db1.$a", "snapshots_expired", twin.toLong)), s"$hours h")
+      assert(history(a).map(_._1) === history(b).map(_._1), s"$hours h")
+    }
+    assert(history(a).size === 1, "a zero-hour window keeps only the newest snapshot")
+  }
+
+  test("CALL audio_index_append equals fingerprintAppendCore with audioFingerprints") {
+    import org.apache.spark.sql.functions.col
+    // the WAV clips the pipeline-operator test commits
+    assert(GraftTable.exists(s"$warehouse/db1/call_clips"), "db1.call_clips is committed")
+    for (n <- Seq("aia_fps_call", "aia_fps_twin"))
+      spark.sql(s"CALL gcat.system.audio_index('db1.call_clips', 'db1.$n')")
+    val intake = spark.table("gcat.db1.call_clips")
+      .select((col("doc_id") + 100L).as("doc_id"), col("wav"))
+    GraftTable.create(spark, s"$warehouse/db1/aia_new", intake.schema).append(intake)
+    val got = spark.sql(
+      "CALL gcat.system.audio_index_append('db1.aia_new', 'db1.aia_fps_call')").collect()
+    val twin = graft.operators.Multimodal.fingerprintAppendCore(
+      GraftTable.open(spark, s"$warehouse/db1/aia_new").read(),
+      GraftTable.open(spark, s"$warehouse/db1/aia_fps_twin"),
+      graft.operators.Multimodal.audioFingerprints)
+    assert(got.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq ===
+      Seq(("db1.aia_new", "fingerprints_appended", twin)))
+    assert(twin === 4L)
+    def fps(n: String) =
+      spark.table(s"gcat.db1.$n").orderBy("doc_id").collect().map(_.toSeq).toSeq
+    assert(fps("aia_fps_call") === fps("aia_fps_twin"))
+  }
 }
